@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -533,7 +534,7 @@ def main() -> None:
         # additive field (r14 verdict ask #3): the median separates
         # host-noise swings from plan changes when best-of-N is
         # contaminated — the JSON contract otherwise unchanged
-        median[name] = round(sorted(took)[len(took) // 2], 4)
+        median[name] = round(statistics.median(took), 4)
     total = round(sum(timings.values()), 4)
     print(json.dumps({
         "metric": "headline_query_total",

@@ -9,6 +9,11 @@ DataFrames — each iteration is one join+aggregate stage, and
 checkpoint/persist truncates the lineage so the plan doesn't grow
 unboundedly (the scale concern for iteration on Spark).
 
+Frontier-delta loops (connected components, SSSP) are calls into ONE
+driver, ``pregel`` (Gelly's VertexCentricIteration). ``_loop_edges``
+is the single owner of a loop's edge cache: width from input stats,
+persisted and released by the helper, never the caller's frame.
+
 Determinism: rank sums accumulate in DECIMAL and round to 9 digits
 per iteration so results replay exactly in the SQL oracle.
 """
@@ -16,6 +21,7 @@ per iteration so results replay exactly in the SQL oracle.
 from __future__ import annotations
 
 import warnings
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,6 +62,30 @@ def _superstep(df: DataFrame) -> DataFrame:
     the final action, each level persisting as it computes.
     """
     return df.localCheckpoint(eager=False)
+
+
+@contextmanager
+def _loop_edges(edges: DataFrame):
+    """The loop's edge table, partitioned on ``src`` and cached for
+    the ``with`` block. Width is ~128 MB of input per partition from
+    the optimizer's free size estimate, not the session shuffle width
+    (32-task stages over 1.3k rows cost ~1.2s/round at sf0.1). Unknown
+    stats (the Long.MaxValue sentinel of RDD-backed input) fall back
+    to by-column repartition, which AQE can coalesce, instead of a
+    200k-task loop. Only the frame made here is persisted
+    and it is released in ``finally``; the caller's frame is never
+    persisted or unpersisted, so a caller's cache survives the loop.
+    """
+    est = est_bytes(edges)
+    if est < _UNKNOWN_STATS:
+        n_part = max(1, min(2 * est // (128 << 20) + 1, 200_000))
+        owned = edges.repartition(n_part, "src").persist()
+    else:
+        owned = edges.repartition("src").persist()
+    try:
+        yield owned
+    finally:
+        owned.unpersist()
 
 
 def cooccurrence_pairs(df: DataFrame, group_col: str,
@@ -99,153 +129,6 @@ def pair_expand(array_col: str):
         f"flatten(transform({array_col}, (x, i) -> "
         f"transform(slice({array_col}, i + 2, size({array_col})), "
         f"y -> struct(x AS a, y AS b))))")
-
-
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Min-label propagation: component id = min node id reachable.
-
-    edges: (src bigint, dst bigint), treated as undirected. Returns
-    (node, component). Converges in O(diameter) iterations; each
-    iteration = one shuffle on node id. At scale, persist each label
-    frame and use the large-star/small-star variant to cut rounds.
-    """
-    undirected = (edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("src").persist())
-    nodes = undirected.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node"))
-
-    for _ in range(max_iter):
-        neighbor_min = (undirected
-                        .join(labels, undirected.src == labels.node)
-                        .groupBy(F.col("dst").alias("node2"))
-                        .agg(F.min("component").alias("nbr_min")))
-        # _superstep BEFORE the convergence count: one action both
-        # materializes the round and truncates lineage; the changed
-        # flag lives in the same frame, so the count is a filter over
-        # the materialized RDD, not an old-vs-new re-join
-        stepped = _superstep(
-            labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-            .select("node",
-                    F.least("component",
-                            F.coalesce("nbr_min", "component"))
-                    .alias("component"),
-                    (F.coalesce("nbr_min", "component")
-                     < F.col("component")).alias("__changed")))
-        labels = stepped.select("node", "component")
-        if stepped.where("__changed").count() == 0:
-            break
-    else:
-        _warn_not_converged("connected_components", max_iter)
-    undirected.unpersist()
-    return labels
-
-
-def connected_components_delta(edges: DataFrame,
-                               max_iter: int = 50) -> DataFrame:
-    """Connected components with a frontier workset — the DataSet
-    delta-iteration contract (DataSet.iterateDelta, DataSet.java:1179;
-    Gelly ConnectedComponents runs exactly this: solution set +
-    shrinking workset).
-
-    Unlike the bulk variant, each round propagates labels only FROM
-    nodes whose label changed last round: the per-round join touches
-    |frontier| rows, not |V|, so total work is O(Σ|frontier_i|) —
-    the property that makes high-diameter graphs tractable at 100 TB
-    (bulk label propagation re-joins the full vertex set every
-    round). _superstep per round keeps the plan depth constant (each
-    round scans the previous round's materialized RDD, not its
-    lineage).
-    """
-    # Loop parallelism derives from the INPUT's size — not from
-    # spark.sql.shuffle.partitions: repartition("src") with no count
-    # pins the session shuffle width (32 locally) onto the cached
-    # edge table and, because the distinct below is already
-    # partitioned by src, every round inherits that width for its
-    # joins and checkpoint materializations. At sf0.1 that was
-    # 32-task stages over 1.3k rows (pure scheduler overhead,
-    # ~1.2s/round). The optimizer's size estimate is free (no job;
-    # .rdd.getNumPartitions() would materialize AQE stages) and
-    # scales with the data: ~128 MB of edges per loop partition, so
-    # a 100 TB edge list still runs thousands wide.
-    est = est_bytes(edges)
-    und = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if est < _UNKNOWN_STATS:
-        n_part = max(1, min(2 * est // (128 << 20) + 1, 200_000))
-        und = und.repartition(n_part, "src")
-    else:
-        # stats unknown (RDD-backed / checkpointed input reports the
-        # defaultSizeInBytes sentinel, Long.MaxValue): an explicit
-        # numPartitions repartition is AQE-exempt, so deriving a width
-        # from the sentinel would pin a 200k-task loop onto a tiny
-        # graph. Fall back to by-column repartition (AQE-coalescible).
-        und = und.repartition("src")
-    undirected = und.persist()
-    labels = _superstep(
-        undirected.select(F.col("src").alias("node")).distinct()
-        .withColumn("component", F.col("node")))
-    frontier = labels  # round 0: every node just "changed"
-
-    for _ in range(max_iter):
-        msgs = (undirected
-                .join(frontier, undirected.src == frontier.node)
-                .groupBy(F.col("dst").alias("node2"))
-                .agg(F.min("component").alias("cand")))
-        # ONE superstep per round: new label + changed flag in the same
-        # materialized frame; frontier and labels are then cheap
-        # projections of the checkpointed RDD (constant plan depth,
-        # half the per-round actions of a separate updates pass)
-        stepped = _superstep(
-            labels.join(msgs, labels.node == F.col("node2"), "left")
-            .select("node",
-                    F.least("component",
-                            F.coalesce("cand", "component"))
-                    .alias("component"),
-                    (F.coalesce("cand", "component") < F.col("component"))
-                    .alias("__changed")))
-        frontier = stepped.where("__changed").select("node", "component")
-        labels = stepped.select("node", "component")
-        if stepped.where("__changed").count() == 0:
-            break
-    else:
-        _warn_not_converged("connected_components_delta", max_iter)
-    undirected.unpersist()
-    return labels
-
-
-def sssp(edges: DataFrame, source: int, max_iter: int = 10) -> DataFrame:
-    """Single-source shortest paths, Bellman-Ford as a driver loop —
-    Gelly SingleSourceShortestPaths (flink-libraries/flink-gelly/.../
-    library/SingleSourceShortestPaths.java), Flink's scatter-gather
-    iteration re-expressed as relax-join + min-aggregate rounds.
-
-    edges: (src bigint, dst bigint, weight double), directed. Returns
-    (node, distance) for reachable nodes. Each round = one shuffle
-    (join on frontier) + one min-agg; rounds ≤ graph depth. _superstep
-    truncates lineage growth across rounds — the scale concern for
-    driver-side iteration.
-    """
-    dist = (edges.sparkSession
-            .createDataFrame([(source, 0.0)], "node bigint, distance double"))
-    for _ in range(max_iter):
-        relaxed = (edges.join(dist, edges.src == dist.node)
-                   .select(F.col("dst").alias("node"),
-                           (F.col("distance") + F.col("weight"))
-                           .alias("distance")))
-        new_dist = _superstep(
-            dist.unionAll(relaxed)
-            .groupBy("node")
-            .agg(F.min("distance").alias("distance")))
-        changed = (new_dist.join(dist.withColumnRenamed("distance", "old"),
-                                 "node", "left")
-                   .where(F.col("old").isNull()
-                          | (F.col("distance") != F.col("old")))
-                   .count())
-        dist = new_dist
-        if changed == 0:
-            break
-    return dist
 
 
 def pagerank(edges: DataFrame, iterations: int = 3,
@@ -416,8 +299,8 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     1-row L2 norms broadcast back — the same superstep shape as
     pagerank; no .collect(), lineage truncated per round.
 
-    Loop parallelism derives from the INPUT's size (the same
-    stats-derived width as connected_components_delta, guide §2.2):
+    Loop parallelism derives from the INPUT's size (_loop_edges, the
+    stats-derived width every frontier loop shares, guide §2.2):
     without it every one of the six phase joins/aggregates inherited
     the session shuffle width — 32-task stages over a 1.3k-edge graph,
     pure scheduler overhead (measured 3.9 -> 2.4s best-of-7 at sf0.1
@@ -426,46 +309,44 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     subtree, six scans of the fact tables per call. At 100 TB the
     stats-derived width keeps the loop thousands of partitions wide
     and the persist holds one |E|-row table that six consumers reuse.
+    Both caches are released on exit, on error too; the caller's
+    ``edges`` frame is never unpersisted.
     """
-    est = est_bytes(edges)
-    if est < _UNKNOWN_STATS:
-        n_part = max(1, min(2 * est // (128 << 20) + 1, 200_000))
-        edges = edges.repartition(n_part, "src")
-    edges = edges.persist()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node"))).distinct()
-             .persist())
-    hub = nodes.withColumn("hub", F.lit(1.0))
-    auth = nodes.withColumn("auth", F.lit(1.0))
+    with _loop_edges(edges) as edges:
+        nodes = (edges.select(F.col("src").alias("node"))
+                 .union(edges.select(F.col("dst").alias("node")))
+                 .distinct().persist())
+        try:
+            hub = nodes.withColumn("hub", F.lit(1.0))
+            auth = nodes.withColumn("auth", F.lit(1.0))
 
-    def _phase(scores: DataFrame, score_col: str, edge_from: str,
-               edge_to: str, out_col: str) -> DataFrame:
-        raw = (edges.join(scores, edges[edge_from] == scores.node)
-               .groupBy(F.col(edge_to).alias("n2"))
-               .agg(F.round(F.sum(F.col(score_col).cast(DEC)), 12)
-                    .cast("double").alias("raw")))
-        filled = (nodes.join(raw, nodes.node == F.col("n2"), "left")
-                  .select("node", F.coalesce("raw", F.lit(0.0))
-                          .alias("raw")))
-        nrm = filled.agg(
-            F.round(F.sqrt(F.round(F.sum((F.col("raw") * F.col("raw"))
-                                         .cast(DEC)), 12)
-                           .cast("double")), 12).alias("nrm"))
-        return _superstep(
-            filled.crossJoin(F.broadcast(nrm))
-            .select("node", F.round(F.col("raw") / F.col("nrm"), 9)
-                    .alias(out_col)))
+            def _phase(scores: DataFrame, score_col: str, edge_from: str,
+                       edge_to: str, out_col: str) -> DataFrame:
+                raw = (edges.join(scores, edges[edge_from] == scores.node)
+                       .groupBy(F.col(edge_to).alias("n2"))
+                       .agg(F.round(F.sum(F.col(score_col).cast(DEC)), 12)
+                            .cast("double").alias("raw")))
+                filled = (nodes.join(raw, nodes.node == F.col("n2"), "left")
+                          .select("node", F.coalesce("raw", F.lit(0.0))
+                                  .alias("raw")))
+                nrm = filled.agg(
+                    F.round(F.sqrt(F.round(F.sum(
+                        (F.col("raw") * F.col("raw")).cast(DEC)), 12)
+                        .cast("double")), 12).alias("nrm"))
+                return _superstep(
+                    filled.crossJoin(F.broadcast(nrm))
+                    .select("node", F.round(F.col("raw") / F.col("nrm"), 9)
+                            .alias(out_col)))
 
-    for _ in range(iterations):
-        auth = _phase(hub, "hub", "src", "dst", "auth")
-        hub = _phase(auth, "auth", "dst", "src", "hub")
-    out = (hub.join(auth.select(F.col("node").alias("n3"), "auth"),
-                    hub.node == F.col("n3"))
-           .select("node", "hub", F.col("auth").alias("authority"))
-           .localCheckpoint(eager=True))
-    nodes.unpersist()
-    edges.unpersist()
-    return out
+            for _ in range(iterations):
+                auth = _phase(hub, "hub", "src", "dst", "auth")
+                hub = _phase(auth, "auth", "dst", "src", "hub")
+            return (hub.join(auth.select(F.col("node").alias("n3"), "auth"),
+                             hub.node == F.col("n3"))
+                    .select("node", "hub", F.col("auth").alias("authority"))
+                    .localCheckpoint(eager=True))
+        finally:
+            nodes.unpersist()
 
 
 def summarize(edges: DataFrame, groups: DataFrame) -> dict:
@@ -552,17 +433,39 @@ def pregel(edges: DataFrame, initial: DataFrame, send_msg,
     return state
 
 
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+    """Min-label connected components — Gelly ConnectedComponents as
+    one ``pregel`` call: each vertex starts with its own id, scatters
+    it along the undirected edges and keeps the minimum it hears; only
+    changed vertices scatter next round (the iterateDelta workset).
+
+    edges: (src bigint, dst bigint), treated as undirected. Returns
+    (node, component = min node id reachable). Initial labels come
+    from the cached edge frame, so the distinct reads the cache.
+    """
+    und = edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    with _loop_edges(und) as e:
+        initial = (e.select(F.col("src").alias("node")).distinct()
+                   .withColumn("value", F.col("node")))
+        out = pregel(e, initial, send_msg=F.col("value"), merge_msg=F.min,
+                     update=F.least, max_iter=max_iter,
+                     algo="connected_components")
+    return out.select("node", F.col("value").alias("component"))
+
+
 def k_core_pairs(pairs: DataFrame, k: int, max_iter: int = 30,
                  peels_per_job: int = 4) -> DataFrame:
-    """k_core over the HALF-representation: ``pairs`` holds each
-    undirected edge ONCE as (a, b), already distinct. Semantically
-    identical to k_core(pairs ∪ reversed(pairs)) but materializes
-    |E| rows instead of 2|E|: the edge-list checkpoint write was the
-    dominant 10x-scaling cost of the full-orientation variant (the
-    24M-row write alone cost more than the whole peel at 10x sf0.1),
-    and every consumer of both orientations can read the half cache
-    twice instead. Same Gelly contract and same unrolled-SQL oracle
-    as k_core (DataSet.iterateDelta, DataSet.java:1179).
+    """k-core for a fixed k: peel vertices of in-subgraph degree < k
+    to a fixpoint — Gelly's vertex-removal pattern (filterOnVertices
+    under DataSet.iterateDelta, DataSet.java:1179). Degrees aggregate
+    once; each round decrements survivors by the edges incident to
+    the peeled delta, so the final counters ARE the in-core degrees.
+    Returns (node, core_degree) for the k-core's vertices.
+
+    ``pairs`` is the HALF-representation: each undirected edge ONCE
+    as (a, b), already distinct — |E| checkpointed rows instead of
+    2|E| (that write dominated the full-orientation form's 10x cost).
 
     Per-round work, minimized two ways vs the r12 shape:
 
@@ -640,69 +543,3 @@ def k_core_pairs(pairs: DataFrame, k: int, max_iter: int = 30,
         _warn_not_converged("k_core", max_iter)
     return deg.select("node",
                       F.col("d").cast("bigint").alias("core_degree"))
-
-
-def k_core(und: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
-    """k-core decomposition for a fixed k: iteratively peel vertices
-    of in-subgraph degree < k until a fixpoint — Gelly's iterative
-    vertex-removal pattern (the KCore example built on repeated
-    filterOnVertices; same DataSet.iterate contract as the library
-    algorithms, reference flink-gelly Graph.filterOnVertices +
-    DataSet.java:1105 iterate).
-
-    Input: UNDIRECTED edge list (src, dst) with both orientations
-    present. Output: (node, core_degree) — the vertices of the k-core
-    and their degree WITHIN the core.
-
-    Scale (delta-degree discipline, the reference's delta-iteration
-    contract — DataSet.iterateDelta, DataSet.java:1179): degrees are
-    aggregated from the full edge list ONCE; every subsequent round
-    touches only edges incident to the REMOVED delta — join the edge
-    list against the just-peeled vertex set (broadcast when small,
-    which it is after round 1) and DECREMENT the survivors' counters,
-    instead of re-joining the full edge list twice and re-counting
-    from scratch (the pre-r11 shape, whose per-round cost was
-    rounds x |E| and benchmarked 4.7x at 10x data). Per-round work is
-    now O(|edges incident to delta|) plus a map-side broadcast probe
-    of the materialized edge list; the degree table (|V_alive| rows)
-    is the only per-round shuffle. _superstep truncates lineage per
-    round. Convergence: the alive set only shrinks, so termination is
-    guaranteed; rounds are bounded by the peeling depth, and extra
-    rounds past the fixpoint are no-ops (idempotent — which is what
-    lets the SQL oracle UNROLL a fixed round count). The final
-    counters ARE the in-core degrees (full degree minus peeled
-    neighbors), so no recompute pass is needed.
-    """
-    und = _superstep(und)  # materialize the edge list once: every
-    # round probes it, and rebuilding it would re-run whatever
-    # self-join produced it
-    deg = (und.groupBy(F.col("src").alias("node"))
-           .agg(F.count("*").alias("d")))
-    deg = _superstep(deg)
-    # broadcast the peeled delta only while it is provably small; a
-    # first round that peels half the graph must shuffle-join instead
-    broadcast_rows = 5_000_000
-    for _ in range(max_iter):
-        # deg is localCheckpointed, so this filter is a cheap
-        # re-derivation — no extra materialization job for the delta
-        removed = deg.where(F.col("d") < k).select("node")
-        # one job per round: the emptiness test IS the size we need
-        n_removed = removed.count()
-        if n_removed == 0:
-            break
-        rem_dst = removed.withColumnRenamed("node", "dst")
-        if n_removed <= broadcast_rows:
-            rem_dst = F.broadcast(rem_dst)
-        dec = (und.join(rem_dst, "dst")
-               .groupBy(F.col("src").alias("node"))
-               .agg(F.count("*").alias("__dec")))
-        deg = (deg.where(F.col("d") >= k)
-               .join(dec, "node", "left")
-               .select("node",
-                       (F.col("d") - F.coalesce(F.col("__dec"),
-                                                F.lit(0))).alias("d")))
-        deg = _superstep(deg)
-    else:
-        if deg.where(F.col("d") < k).limit(1).count() > 0:
-            _warn_not_converged("k_core", max_iter)
-    return deg.select("node", F.col("d").cast("bigint").alias("core_degree"))

@@ -352,6 +352,10 @@ def simhash_hamming_pairs(sigs: DataFrame, id_col: str,
     and no exchange (measured 28.2 -> 7.2s noop-sink at sf0.1, rows
     verified identical both ways with exceptAll).
 
+    Precondition: ``id_col`` is unique in ``sigs`` (one signature row
+    per id). The first-band filter removes repeat BANDS, not repeat
+    rows: duplicate (id, sig) input rows yield duplicate result pairs.
+
     Returns (a_id, b_id, hamming) with a_id < b_id.
     """
     n_bands = threshold + 1

@@ -64,14 +64,14 @@ def _edges(spark, sf_dir):
         "Gelly ConnectedComponents / DataSet.iterateDelta "
         "(DataSet.java:1179): solution set + shrinking workset, each "
         "round joins only the changed nodes. The five region clusters "
-        "emerge as components. Oracle: recursive-CTE transitive closure "
-        "of the same fixpoint. Bulk variant stays as "
-        "operators/graph.connected_components (equivalence pinned in "
-        "tests/test_graph.py).",
+        "emerge as components. operators/graph.connected_components is "
+        "one call into the generic operators/graph.pregel loop "
+        "(known-answer pin: tests/test_semantics.py). Oracle: "
+        "recursive-CTE transitive closure of the same fixpoint.",
 )
 def graph_connected_components(spark, sf_dir):
-    from ..operators.graph import connected_components_delta
-    return connected_components_delta(_edges(spark, sf_dir))
+    from ..operators.graph import connected_components
+    return connected_components(_edges(spark, sf_dir))
 
 
 def _pagerank_oracle() -> str:
@@ -162,6 +162,19 @@ def _sssp_edges(spark, sf_dir):
     return e1.unionAll(e2).unionAll(e3).unionAll(e4)
 
 
+def _pregel_sssp(spark, sf_dir):
+    """SSSP from region node 1000 as one pregel call: scatter =
+    distance + weight, combine = MIN, update = LEAST."""
+    from ..operators.graph import pregel
+    initial = spark.createDataFrame([(1000, 0.0)],
+                                    "node bigint, value double")
+    out = pregel(
+        _sssp_edges(spark, sf_dir), initial,
+        send_msg=F.col("value") + F.col("weight"),
+        merge_msg=F.min, update=F.least, max_iter=10, algo="sssp")
+    return out.select("node", F.col("value").alias("distance"))
+
+
 @register(
     "graph_sssp",
     f"""
@@ -176,13 +189,14 @@ def _sssp_edges(spark, sf_dir):
     doc="Single-source shortest paths from region node 1000 over the "
         "weighted reversed star DAG (+ shortcut edges so supplier "
         "distances pick the cheaper of nation-path vs shortcut) — Gelly "
-        "SingleSourceShortestPaths via Bellman-Ford relax rounds "
-        "(operators/graph.sssp). Oracle: recursive-CTE path enumeration "
+        "SingleSourceShortestPaths via frontier-delta relax rounds on "
+        "the generic operators/graph.pregel loop (scatter = distance + "
+        "weight, combine = MIN, update = LEAST; the same call as "
+        "graph_pregel_sssp). Oracle: recursive-CTE path enumeration "
         "+ MIN (safe: DAG, depth ≤ 2).",
 )
 def graph_sssp(spark, sf_dir):
-    from ..operators.graph import sssp
-    return sssp(_sssp_edges(spark, sf_dir), source=1000)
+    return _pregel_sssp(spark, sf_dir)
 
 
 @register(
@@ -388,8 +402,9 @@ def _copurchase_pairs(spark, sf_dir, persist=True):
     persist=True caches the pair table for consumers that read it
     several times in one plan (clustering coefficient: both edge
     orientations + the triangle probe) — one fact scan, not one per
-    use. k_core passes False: it checkpoints its own edge list
-    immediately, so a persist would only add a redundant copy."""
+    use. graph_k_core passes False: k_core_pairs checkpoints its own
+    edge list immediately, so a persist would only add a redundant
+    copy."""
     from ..operators.graph import cooccurrence_pairs
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pairs = (cooccurrence_pairs(li, "l_orderkey", "l_partkey")
@@ -590,17 +605,7 @@ def graph_summarization(spark, sf_dir):
         "must reproduce the library algorithm exactly.",
 )
 def graph_pregel_sssp(spark, sf_dir):
-    from ..operators.graph import pregel
-    edges = _sssp_edges(spark, sf_dir)
-    initial = spark.createDataFrame([(1000, 0.0)],
-                                    "node bigint, value double")
-    out = pregel(
-        edges, initial,
-        send_msg=F.col("value") + F.col("weight"),
-        merge_msg=lambda c: F.min(c),
-        update=lambda old, msg: F.least(old, msg),
-        max_iter=10, algo="pregel_sssp")
-    return out.select("node", F.col("value").alias("distance"))
+    return _pregel_sssp(spark, sf_dir)
 
 
 @register(
@@ -667,8 +672,8 @@ def _k_core_oracle(k: int, rounds: int) -> str:
         "at sf0.01 (the cascade: removing weakly-connected parts "
         "drops neighbors below k in turn) — the dense-cohort "
         "extraction used for community seeds and graph sparsification. "
-        "operators/graph.k_core iterates join+aggregate rounds with "
-        "lineage truncation; peeling only shrinks, so extra rounds "
+        "operators/graph.k_core_pairs peels over the half-edge cache "
+        "with lineage truncation; peeling only shrinks, so extra rounds "
         "are no-ops, which is exactly what lets the oracle UNROLL 8 "
         "identical SQL rounds past the fixpoint (the established "
         "iterative-oracle discipline of the Pregel/PageRank queries). "

@@ -354,7 +354,8 @@ def dedup_minhash_lsh(spark, sf_dir):
         "TRANSITIVE clusters via connected components → canonical = "
         "min doc id per cluster (A~B and B~C cluster together even when "
         "A,C never paired). Composes pipeline/dedup.py with "
-        "operators/graph.connected_components; oracle replays the "
+        "operators/graph.connected_components (frontier-delta label "
+        "propagation on the generic pregel loop); oracle replays the "
         "pipeline plus a recursive-CTE closure.",
 )
 def dedup_cluster_canonical(spark, sf_dir):

@@ -21,9 +21,13 @@ Scale: each micro-batch is a normal distributed batch over the
 feedback files (executors do all row work; the driver only observes
 query progress), and the loop depth equals the reference's
 superstep count, not the data size. The loop directory is a real
-shuffle-free channel — at 100 TB swap the local path for an object
-store and the mechanism is unchanged. Body transformations are
-ordinary streaming DataFrame ops, so Catalyst plans every round.
+shuffle-free channel, but the exit/feedback split moves files with
+driver-local ``os.rename``: the loop, output and staging directories
+must be on a filesystem the driver mounts and executors write to (a
+local or shared POSIX path). An object store would need the split
+rewritten as Hadoop FileSystem renames (or copies, where rename is
+not atomic). Body transformations are ordinary streaming DataFrame
+ops, so Catalyst plans every round.
 
 Flink's canonical iterate example (the minus-one loop from the
 DataStream docs) is pinned in tests/test_streaming.py.
@@ -73,7 +77,16 @@ def iterate_stream(
     writes emit no directory for an empty branch, so "no __exit=false
     dir" IS the termination signal — no counting job, and no empty
     feedback file that would wake the source for a ghost round.
+
+    The routing column is named ``__exit``; an input schema that
+    already has a column of that name raises ``ValueError`` (it would
+    be overwritten, stripped by the partitioned write and read back
+    as NULL).
     """
+    if "__exit" in seed_df.columns:
+        raise ValueError(
+            "iterate_stream: input schema has a column named '__exit', "
+            "which the loop uses to route exit/feedback rows; rename it")
     root = work_dir or tempfile.mkdtemp(prefix="spark_iterate_")
     loop_dir = os.path.join(root, "loop")
     out_dir = os.path.join(root, "out")

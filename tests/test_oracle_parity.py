@@ -105,7 +105,7 @@ def test_oracle_dtypes_never_int_vs_float(spark, sf_dir, con):
 
 def test_k_core_oracle_converged_within_unrolled_rounds(con):
     """r9-ADVICE pin: the graph_k_core oracle unrolls a FIXED 8 peel
-    rounds while operators/graph.k_core iterates to fixpoint
+    rounds while operators/graph.k_core_pairs iterates to fixpoint
     (max_iter=30). If the verification data's peeling depth ever
     exceeded 8, the oracle would return an unconverged SUPERSET and
     red-flag a correct result. Pin convergence with margin at the

@@ -252,21 +252,64 @@ def test_triangle_count_known_graph(spark):
     assert triangle_count(edges).collect()[0].n_triangles == 4
 
 
-def test_connected_components_delta_equals_bulk(spark):
-    """Frontier-delta CC (iterateDelta contract) must agree with bulk
-    label propagation on a chain (worst-case diameter — the frontier
-    shrinks to the label wavefront) plus isolated pairs."""
+def test_connected_components_known_answer(spark):
+    """Frontier-delta CC (iterateDelta contract, one pregel call) on a
+    chain (worst-case diameter — the frontier shrinks to the label
+    wavefront) plus isolated pairs: every node gets the min id of its
+    component. Run on a VALUES input, whose stats are known (the
+    explicit-width loop edges), and on an RDD-backed one, whose stats
+    are unknown (the by-column fallback): same known answer."""
+    from flink_1_11_2_with_comments_spark._sizing import (
+        _UNKNOWN_STATS, est_bytes)
     from flink_1_11_2_with_comments_spark.operators.graph import (
-        connected_components, connected_components_delta)
+        connected_components)
     chain = [(i, i + 1) for i in range(10, 18)]
     pairs = [(100, 101), (200, 201), (202, 200)]
-    edges = spark.createDataFrame(chain + pairs, "src bigint, dst bigint")
-    bulk = {(r.node, r.component)
-            for r in connected_components(edges).collect()}
-    delta = {(r.node, r.component)
-             for r in connected_components_delta(edges).collect()}
-    assert delta == bulk
-    assert {c for _, c in delta} == {10, 100, 200}
+    known = spark.sql(
+        "SELECT CAST(src AS BIGINT) AS src, CAST(dst AS BIGINT) AS dst "
+        "FROM VALUES " + ", ".join(f"({a}, {b})" for a, b in chain + pairs)
+        + " AS t(src, dst)")
+    unknown = spark.createDataFrame(chain + pairs, "src bigint, dst bigint")
+    want = ({(n, 10) for n in range(10, 19)}
+            | {(100, 100), (101, 100), (200, 200), (201, 200), (202, 200)})
+    assert est_bytes(known) < _UNKNOWN_STATS
+    assert est_bytes(unknown) >= _UNKNOWN_STATS
+    for df in (known, unknown):
+        got = {(r.node, r.component)
+               for r in connected_components(df).collect()}
+        assert got == want
+
+
+def test_graph_loops_release_own_edge_cache_keep_callers(spark):
+    """Cache ownership of the frontier loops: hits and
+    connected_components persist their own repartitioned edge frame
+    and release it on return, but never touch a cache the CALLER
+    holds. The input is an RDD-backed checkpoint the caller persisted
+    but has not materialized, so its stats are unknown — the case
+    where a loop that persisted its input in place used to unpersist
+    the caller's frame on its way out."""
+    from flink_1_11_2_with_comments_spark._sizing import (
+        _UNKNOWN_STATS, est_bytes)
+    from flink_1_11_2_with_comments_spark.operators.graph import (
+        connected_components, hits)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 5)],
+        "src bigint, dst bigint").localCheckpoint()
+    edges.persist()
+    assert est_bytes(edges) >= _UNKNOWN_STATS
+    entries = cache.numCachedEntries()
+    try:
+        for name, run in (("hits", lambda: hits(edges, iterations=2)),
+                          ("connected_components",
+                           lambda: connected_components(edges))):
+            out = run()
+            assert out.count() == 5, name
+            assert edges.storageLevel.useMemory, name
+            assert cache.numCachedEntries() == entries, name
+    finally:
+        edges.unpersist()
+    assert cache.numCachedEntries() == entries - 1
 
 
 def test_pagerank_plan_depth_constant(spark):
@@ -382,16 +425,17 @@ def test_pregel_null_inbox_keeps_old_value(spark):
 
 
 def test_k_core_known_graph(spark):
-    """k-core on a known graph: K4 plus a pendant vertex — the 3-core
-    is exactly the K4 (the pendant and its anchor's extra edge peel
-    away), every member's within-core degree is 3. Also exercises the
-    carried-count convergence loop (one count job per round)."""
-    from flink_1_11_2_with_comments_spark.operators.graph import k_core
+    """k-core on a known graph: K4 plus a pendant vertex, each edge
+    once (k_core_pairs' half representation) — the 3-core is exactly
+    the K4 (the pendant and its anchor's extra edge peel away), every
+    member's within-core degree is 3. Also exercises the carried-count
+    convergence loop."""
+    from flink_1_11_2_with_comments_spark.operators.graph import (
+        k_core_pairs)
     k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
-    edges = k4 + [(3, 9)]
-    und = edges + [(b, a) for a, b in edges]
-    df = spark.createDataFrame(und, "src bigint, dst bigint")
-    got = {(r.node, r.core_degree) for r in k_core(df, k=3).collect()}
+    df = spark.createDataFrame(k4 + [(3, 9)], "a bigint, b bigint")
+    got = {(r.node, r.core_degree)
+           for r in k_core_pairs(df, k=3).collect()}
     assert got == {(0, 3), (1, 3), (2, 3), (3, 3)}
 
 
@@ -402,10 +446,9 @@ def test_k_core_pairs_cascade_across_batches(spark):
     2-core. The cascade runs more rounds than peels_per_job, so the
     batched speculative peeling crosses at least one batch boundary
     (the folded-count path); trailing speculative no-op rounds must
-    not change the result. Verified against the unbatched
-    full-orientation k_core on the same graph."""
+    not change the result."""
     from flink_1_11_2_with_comments_spark.operators.graph import (
-        k_core, k_core_pairs)
+        k_core_pairs)
     chain = [(i, i + 1) for i in range(1, 8)]          # path 1..8
     cycle = [(20, 21), (21, 22), (22, 23), (20, 23)]   # C4 survives
     pairs = spark.createDataFrame(chain + cycle, "a bigint, b bigint")
@@ -414,12 +457,6 @@ def test_k_core_pairs_cascade_across_batches(spark):
                for r in k_core_pairs(pairs, k=2,
                                      peels_per_job=ppj).collect()}
         assert got == {(20, 2), (21, 2), (22, 2), (23, 2)}, ppj
-    und = spark.createDataFrame(
-        chain + cycle + [(b, a) for a, b in chain + cycle],
-        "src bigint, dst bigint")
-    ref = {(r.node, r.core_degree)
-           for r in k_core(und, k=2).collect()}
-    assert ref == {(20, 2), (21, 2), (22, 2), (23, 2)}
 
 
 def test_cooccurrence_pairs_equals_self_join(spark):

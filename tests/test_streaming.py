@@ -335,6 +335,18 @@ def test_iterate_stream_nonconverging_raises(spark):
         raise AssertionError("expected the max_rounds guard to fire")
 
 
+def test_iterate_stream_rejects_reserved_exit_column(spark):
+    """The loop routes rows on an internal ``__exit`` column; a user
+    column of that name would be silently overwritten and read back
+    as NULL, so it must fail loudly before any file is written."""
+    from flink_1_11_2_with_comments_spark.streaming.iterate import (
+        iterate_stream)
+    seeds = spark.createDataFrame([(1, True)], "id bigint, __exit boolean")
+    with pytest.raises(ValueError, match="__exit"):
+        iterate_stream(spark, seeds, body=lambda s: s,
+                       exit_cond=F.col("id") > 0)
+
+
 def test_iterate_stream_routes_null_exit_cond_rows(spark):
     """A row whose exit condition evaluates to NULL must not vanish
     from BOTH branches (IterativeStream routes every element exactly
