@@ -13,6 +13,8 @@ time — ``watermarked()`` bridges the two styles.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TPCH_TABLES = (
@@ -113,15 +115,74 @@ def naive_timestamps(df: DataFrame) -> DataFrame:
     return df.select(*cols) if changed else df
 
 
+# Session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# realpath -> (file signature, _SCHEMA_CONFS values, inferred StructType)
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _file_signature(path: str) -> tuple:
+    """``(st_mtime_ns, st_size)`` of a file, or of every file under a
+    directory, so a rewrite at the same path changes it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    sig = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            st = os.stat(os.path.join(root, f))
+            sig.append((os.path.relpath(os.path.join(root, f), path),
+                        st.st_mtime_ns, st.st_size))
+    return tuple(sig)
+
+
+def _parquet_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` infers, resolved once per
+    file and conf (Catalog.java:51 resolves it at registration).
+
+    Inference launches a Spark job; a hit launches none. Paths that are
+    not local files (object stores, globs) are inferred on every call.
+    """
+    real = os.path.realpath(path)
+    if not os.path.exists(real):
+        return spark.read.parquet(path).schema
+    sig = _file_signature(real)
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[:2] == (sig, confs):
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[real] = (sig, confs, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table (BatchExecTableSourceScan.scala:45 analogue).
 
-    A plain ``spark.read.parquet`` scan: column pruning, predicate
-    pushdown and partition pruning all come from the DataSource V2
-    path — the reference needed explicit Supports*PushDown contracts
+    A plain parquet scan: column pruning, predicate pushdown and
+    partition pruning all come from the DataSource V2 path — the
+    reference needed explicit Supports*PushDown contracts
     (flink-table-common/.../abilities/) for the same thing.
+
+    The schema is resolved once per file and conf, as the reference
+    resolves it at registration (Catalog.java:51), and passed to the
+    reader, so a repeated load runs no schema-inference job. The cache
+    key is the file's real path; an entry is reused only while the
+    file's ``(st_mtime_ns, st_size)`` (every file's, for a directory)
+    and the session's parquet-inference confs (``_SCHEMA_CONFS``) are
+    unchanged. Each call still returns a new DataFrame.
     """
-    return _convert_nano_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"), name)
+    path = f"{sf_dir}/{name}.parquet"
+    return _convert_nano_ts(
+        spark.read.schema(_parquet_schema(spark, path)).parquet(path), name)
 
 
 def register_views(spark: SparkSession, sf_dir: str,
@@ -246,8 +307,8 @@ class TableEnvironment:
     def scan_stream(self, name: str) -> DataFrame:
         """Unbounded scan of a catalog table with its DDL watermark
         (StreamExecTableSourceScan + WATERMARK clause)."""
-        raw_schema = self.spark.read.parquet(
-            f"{self.sf_dir}/{name}.parquet").schema
+        raw_schema = _parquet_schema(
+            self.spark, f"{self.sf_dir}/{name}.parquet")
         # file-stream sources take a directory; glob-filter to the table
         df = (self.spark.readStream.schema(raw_schema)
               .option("pathGlobFilter", f"{name}.parquet")

@@ -40,7 +40,43 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # (`python -m tests.query_manifest`, which refuses to re-hash
 # un-windowed queries).
 _PRIORITY: tuple[str, ...] = (
-    # ROUND-15 WINDOW (the driver checks the first 50 entries).
+    # ROUND-16 WINDOW (the correctness gate checks the first 50
+    # entries).
+    # The per-file parquet schema cache in catalog.load_table (no
+    # schema-inference job on a repeated read) re-hashed 344 of the
+    # 353 queries: every face that reads a table. The 50-entry window
+    # (pinned by test_oracle_parity.test_rotation_window_shape) cannot
+    # cover a change to the read path of the whole registry, so the
+    # other 294 are not listed here; tier-1 test_oracle_parity
+    # re-checks every oracle query exactly.
+    # (r0) the nine benchmark queries, then the TableEnvironment
+    # faces, whose hashes missed everything their constructor and
+    # sql_query call until the hash walked class methods.
+    "tpch_q1",
+    "agg_grouping_sets",
+    "window_session_agg",
+    "interval_join_batch",
+    "match_recognize_sql",
+    "graph_connected_components",
+    "ann_ivf_lloyd",
+    "dedup_minhash_lsh",
+    "text_fingerprint",
+    "match_recognize_all_rows",
+    "match_recognize_permute",
+    "match_recognize_exclusion",
+    "match_recognize_prev",
+    "match_recognize_star",
+    "match_recognize_alternation",
+    "match_recognize_skip_to_first",
+    "flink_sql_lookup_join",
+    "match_recognize_group_times",
+    "match_recognize_reluctant",
+    "match_recognize_or_define",
+    "match_recognize_min0_leading",
+    "match_recognize_min0_trailing",
+    "temporal_join_event_sql",
+    # (r1) the round-15 window, in its order, less the two benchmark
+    # queries moved to (r0):
     # (a0) faces re-hashed by the frontier-loop consolidation: graph
     # SSSP and connected components (dedup's clustering too) now run
     # through operators/graph.pregel, and graph_k_core's doc names
@@ -69,7 +105,6 @@ _PRIORITY: tuple[str, ...] = (
     # LSH dims-overflow assert (fails loudly when an embedding is
     # longer than the folded plane matrix instead of silently
     # zeroing the bucket bit):
-    "graph_connected_components",
     "pipeline_end_to_end",
     "corpus_source_overlap",
     "embedding_pca_covariance",
@@ -85,39 +120,17 @@ _PRIORITY: tuple[str, ...] = (
     "ann_pq_adc_topk",
     "ann_ivf_topk",
     "ann_ivf_assign",
-    "ann_ivf_lloyd",
-    # (b) rotation debt: the ENTIRE remaining r6 cohort (23 rows,
-    # last driver-checked in round 6 — includes the 11 rows the r14
-    # verdict names plus the 12 deferred alongside them). After this
-    # window nothing in the registry is older than r07.
+    # (b) rotation debt: the r6 cohort (23 rows, last gate-checked
+    # in round 6 — includes the 11 rows the r14 verdict names plus the
+    # 12 deferred alongside them). Only its first six still fit; the
+    # other 17 and (c), the stalest r07 rows, left the window when
+    # (r0) took its front.
     "text_repetition_ngrams",
     "tpcds_am_pm_ratio",
     "tpcds_channel_equal_share",
     "tpcds_channel_growth_gate",
     "tpcds_channel_overlap",
     "tpcds_channel_ratio",
-    "tpcds_cumulative_channel_join",
-    "tpcds_disjunctive_bands",
-    "tpcds_excess_discount",
-    "tpcds_frequent_buyers",
-    "tpcds_latency_band_matrix",
-    "tpcds_monthly_variance",
-    "tpcds_moving_avg_deviation",
-    "tpcds_promo_share",
-    "tpcds_regional_growth",
-    "tpcds_return_window_gap",
-    "tpcds_returns_adjusted_spend",
-    "tpcds_sold_returned_rebought",
-    "tpcds_subsequent_period",
-    "tpcds_two_metric_rank",
-    "tpcds_unreturned_channel_ratio",
-    "tpcds_wide_join_growth",
-    "tpcds_yearly_brand_delta",
-    # (c) the stalest r07 rows, alphabetical, filling the window to 50
-    "corpus_bpe_pair_counts",
-    "corpus_dsir_weights",
-    "corpus_lang_cap_sample",
-    "corpus_length_quantiles",
 )
 
 

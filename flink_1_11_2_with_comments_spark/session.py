@@ -14,6 +14,11 @@ as a plain SparkSession with scale-aware defaults:
   the DuckDB oracle.
 - Arrow enabled: every Pandas-UDF operator in streaming/ and
   pipeline/ rides vectorized Arrow batches, not per-row pickling.
+- Host-sized defaults: ``local[N]`` uses the CPUs this process may
+  run on (``os.sched_getaffinity``) and the driver heap is three
+  quarters of the host's ``MemTotal`` in whole GiB, at least 1g and
+  at most 16g. ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``
+  override them.
 """
 
 from __future__ import annotations
@@ -22,8 +27,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def host_cpus() -> int:
+    """CPUs this process may run on."""
+    return len(os.sched_getaffinity(0))
+
+
+def driver_mem(mem_total_kib: int) -> str:
+    """Three quarters of ``mem_total_kib`` in whole GiB, 1g to 16g."""
+    return f"{max(1, min(16, mem_total_kib * 3 // 4 // 2**20))}g"
+
+
+def host_mem_total_kib() -> int:
+    with open("/proc/meminfo") as f:
+        return next(int(line.split()[1]) for line in f
+                    if line.startswith("MemTotal:"))
+
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
 
 
 def get_spark(app_name: str = "flink_1_11_2_with_comments_spark",
@@ -48,7 +70,9 @@ def get_spark(app_name: str = "flink_1_11_2_with_comments_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or driver_mem(host_mem_total_kib()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         # robustness across testdata generations: if events.ts is ever

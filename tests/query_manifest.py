@@ -16,7 +16,10 @@ package-internal function/class it references (via its code object's
 names, nested code objects, and any `from ... import` statements in
 its body, so `from ..operators.graph import k_core_pairs` pulls
 k_core_pairs' source into graph_k_core's hash; rewriting the
-operator flags the query).
+operator flags the query). A referenced class's methods are walked
+the same way, so `TableEnvironment(spark, sf_dir)` pulls in what
+`__init__` and `sql_query` call (`catalog.load_table`,
+`plans.match_recognize.match_recognize`, ...).
 
 Sources are NORMALIZED before hashing — parsed to an AST, docstrings
 stripped, re-unparsed — so comment and docstring edits do NOT flag a
@@ -116,10 +119,26 @@ def _imported_objects(src: str, module_name: str):
     return out
 
 
-def transitive_source_hash(fn, extra: str = "") -> str:
-    """sha256 over fn's source + `extra` (the oracle SQL) + the source
-    of every reachable package-internal callable/class and the repr of
-    every referenced module-level constant."""
+def _methods(cls) -> list:
+    """The functions a class defines: plain, static and class methods
+    and property accessors."""
+    out = []
+    for attr in vars(cls).values():
+        if isinstance(attr, (staticmethod, classmethod)):
+            attr = attr.__func__
+        if isinstance(attr, property):
+            out.extend(f for f in (attr.fget, attr.fset, attr.fdel) if f)
+        elif isinstance(attr, types.FunctionType):
+            out.append(attr)
+    return out
+
+
+def reachable_sources(fn, extra: str = "") -> dict[str, str]:
+    """Normalized source of fn and of every package-internal function,
+    class and method reachable from it, plus the repr of every
+    referenced module-level constant, keyed by qualified name
+    (``module.qualname``; constants as ``module:name``). `extra` (the
+    oracle SQL) is the ``__extra__`` entry."""
     chunks: dict[str, str] = {"__extra__": extra}
     pending = [fn]
     seen: set[int] = set()
@@ -159,8 +178,14 @@ def transitive_source_hash(fn, extra: str = "") -> str:
                 continue
             chunks.setdefault(f"{obj.__module__}.{obj.__qualname__}",
                               _normalize_source(src))
-    payload = "\n\x00\n".join(f"{k}\n{v}"
-                              for k, v in sorted(chunks.items()))
+            pending.extend(_methods(obj))
+    return chunks
+
+
+def transitive_source_hash(fn, extra: str = "") -> str:
+    """sha256 over :func:`reachable_sources`."""
+    payload = "\n\x00\n".join(
+        f"{k}\n{v}" for k, v in sorted(reachable_sources(fn, extra).items()))
     return hashlib.sha256(payload.encode()).hexdigest()
 
 

@@ -18,8 +18,8 @@ import pytest
 
 from flink_1_11_2_with_comments_spark import queries as q
 
-from .query_manifest import (MANIFEST_PATH, compute_manifest,
-                             load_manifest)
+from .query_manifest import (MANIFEST_PATH, PKG, compute_manifest,
+                             load_manifest, reachable_sources)
 
 
 @pytest.fixture(scope="module")
@@ -86,3 +86,14 @@ def test_manifest_file_is_valid_json():
         data = json.load(fh)
     assert all(isinstance(v, str) and len(v) == 64
                for v in data.values())
+
+
+def test_hash_follows_class_methods():
+    """match_recognize_sql reaches the table read and the CEP planner
+    only through TableEnvironment's methods (__init__ -> register_views
+    -> load_table; sql_query -> match_recognize), so the walk must
+    follow a referenced class's methods."""
+    keys = reachable_sources(q.all_specs()["match_recognize_sql"].fn)
+    assert f"{PKG}.catalog.TableEnvironment.__init__" in keys
+    assert f"{PKG}.catalog.load_table" in keys
+    assert f"{PKG}.plans.match_recognize.match_recognize" in keys
