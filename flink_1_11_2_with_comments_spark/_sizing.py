@@ -27,6 +27,8 @@ the 100 TB plan keeps its scan-derived width and zero extra shuffle.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,6 +51,24 @@ def est_bytes(df: DataFrame) -> int:
     except Exception:
         return _UNKNOWN_STATS
     return min(est, _UNKNOWN_STATS)
+
+
+# A Join operator line of a logical plan's treeString.
+_JOIN_NODE = re.compile(r"^[\s:|+-]*Join ", re.M)
+
+
+def est_input_bytes(df: DataFrame) -> int:
+    """``est_bytes``, but ``_UNKNOWN_STATS`` when the plan joins.
+    Without CBO Catalyst sizes a join as the PRODUCT of its children's
+    sizes, so that number says nothing about the rows it yields: the
+    few hundred MinHash candidate edges of a 250-doc corpus estimate
+    at ~10 TB, and a width derived from that is a 160k-task loop. For
+    sizing work by the bytes it reads, a joined plan is unknown."""
+    est = est_bytes(df)
+    if est < _UNKNOWN_STATS and _JOIN_NODE.search(
+            df._jdf.queryExecution().optimizedPlan().treeString()):
+        return _UNKNOWN_STATS
+    return est
 
 
 def is_provably_small(df: DataFrame, per_core_bytes: int = 128 << 20) -> bool:

@@ -14,6 +14,6 @@ hash() builtins are not portable, md5 is.
 
 from .text import (fingerprint, language_id, quality_features,  # noqa: F401
                    token_stats, tokens)
-from .dedup import (exact_dedup, md5_int, minhash_signature,  # noqa: F401
+from .dedup import (exact_dedup, md5_int, minhash_lsh_bands,  # noqa: F401
                     shingles, simhash32)
 from .similarity import cosine_pairs, cosine_topk  # noqa: F401

@@ -4,9 +4,10 @@ Scale design (the whole point of these):
 - exact: hash-groupBy on a content digest — one shuffle keyed by the
   digest; at 100 TB the digest (16 bytes) shuffles, not the text.
 - MinHash+LSH: per-doc signature (H md5-derived min-hashes) computed
-  in a single explode+groupBy; banding turns O(n²) pairing into a
-  self-join on band keys — only near-duplicates collide, so the join
-  output is ~linear in the duplicate count.
+  row-locally from the doc's shingle array; banding turns O(n²)
+  pairing into bucket-local pair expansion on band keys — only
+  near-duplicates collide, so the candidate set is ~linear in the
+  duplicate count.
 - SimHash: 32-bit signature from token-hash bit votes; candidate
   pairs via Hamming distance on a 4-byte key (bucketable by prefix).
 - n-gram Jaccard: exact verification on LSH/SimHash candidates (or
@@ -65,90 +66,19 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                  F.count("*").alias("n_copies")))
 
 
-def minhash_signature(df: DataFrame, id_col: str, text_col: str,
-                      num_hashes: int = 8, shingle_n: int = 3) -> DataFrame:
-    """Per-doc MinHash signature: (id, hash_idx, minhash).
-
-    One explode (doc × shingles) + one groupBy — the signature for a
-    100 TB corpus is a single shuffle of (id, h, min) partials with
-    map-side combine; no pairwise work yet.
-    """
-    sh = df.select(F.col(id_col), shingles(text_col, shingle_n).alias("sh"))
-    exploded = sh.select(id_col, F.explode("sh").alias("shingle"))
-    hashes = exploded.select(
-        id_col, "shingle",
-        F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("h"))
-    hashed = hashes.withColumn(
-        "hv", md5_int_expr(F.concat(F.col("h").cast("string"),
-                                    F.lit("|"), F.col("shingle"))))
-    return (hashed.groupBy(id_col, "h")
-            .agg(F.min("hv").alias("minhash")))
-
-
-def lsh_bands(signatures: DataFrame, id_col: str,
-              rows_per_band: int = 2) -> DataFrame:
-    """Group signature rows into bands: (id, band, band_key).
-
-    band_key is the md5 of the band's concatenated minhashes — docs
-    sharing any band_key are candidate pairs (classic banding).
-    """
-    banded = signatures.withColumn(
-        "band", (F.col("h") / rows_per_band).cast("int"))
-    return (banded.groupBy(id_col, "band")
-            .agg(F.md5(F.concat_ws(",", F.sort_array(
-                F.collect_list(F.concat_ws(":", "h", "minhash")))))
-                .alias("band_key")))
-
-
 def minhash_lsh_bands(df: DataFrame, id_col: str, text_col: str,
                       num_hashes: int = 8, rows_per_band: int = 4,
                       shingle_n: int = 3) -> DataFrame:
-    """Wide-format MinHash banding: (id, band, band_key) in ONE shuffle.
-
-    Equivalent to minhash_signature → lsh_bands (same md5-derived
-    hash family, same band keys) but computes all H min-hashes as H
-    aggregate columns of a single groupBy(id): the shuffle carries one
-    H-column row per (id, shingle) with map-side combine, instead of
-    H× exploded rows plus a second collect_list shuffle. This is the
-    production path for 100 TB corpora; the long-format functions
-    remain as the inspectable per-hash API.
-    """
-    sh = df.select(F.col(id_col),
-                   F.explode(shingles(text_col, shingle_n)).alias("shingle"))
-    hv = [md5_int_expr(F.concat(F.lit(f"{h}|"), F.col("shingle")))
-          .alias(f"hv{h}") for h in range(num_hashes)]
-    mins = (sh.select(id_col, *hv)
-            .groupBy(id_col)
-            .agg(*[F.min(f"hv{h}").alias(f"m{h}")
-                   for h in range(num_hashes)]))
-    n_bands = num_hashes // rows_per_band
-    def band_key(b: int):
-        items = [F.concat_ws(":", F.lit(str(h)),
-                             F.col(f"m{h}").cast("string"))
-                 for h in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        # same sorted-item concatenation as lsh_bands' collect_list path
-        return F.md5(F.array_join(F.sort_array(F.array(*items)), ","))
-    bands = F.array(*[F.struct(F.lit(b).cast("int").alias("band"),
-                               band_key(b).alias("band_key"))
-                      for b in range(n_bands)])
-    return (mins.select(id_col, F.explode(bands).alias("bk"))
-            .select(id_col, "bk.band", "bk.band_key"))
-
-
-def minhash_lsh_bands_arr(df: DataFrame, id_col: str, text_col: str,
-                          num_hashes: int = 8, rows_per_band: int = 4,
-                          shingle_n: int = 3) -> DataFrame:
     """MinHash banding with ZERO shuffles: (id, band, band_key).
 
-    Same hash family and band keys as minhash_lsh_bands, but the
-    per-doc signature is a row-local `array_min` over the doc's
-    shingle ARRAY (transform + md5 per element) instead of an
-    explode + groupBy — the signature stage of a 100 TB corpus
-    becomes a pure map over the scan, no (id, shingle) rows ever
-    shuffle. Docs with an empty shingle set produce no bands (the
-    explode path's semantics). Total md5 work is identical; what
-    disappears is the exchange and the doubled subtree when the
-    band table feeds a self-join.
+    Min-hash h of a doc is the minimum over its distinct shingles of
+    md5_int("{h}|" + shingle), computed row-locally as an `array_min`
+    over the doc's shingle ARRAY (transform + md5 per element) — the
+    signature stage of a 100 TB corpus is a pure map over the scan,
+    no (id, shingle) rows ever shuffle. Band b's key is the md5 of
+    its rows' sorted "h:minhash" items joined with ",", so docs
+    sharing any band_key are candidate pairs (classic banding). Docs
+    with an empty shingle set produce no bands.
     """
     def hash_fn(h: int):
         # closure factory, NOT a default-arg lambda: F.transform
@@ -216,17 +146,6 @@ def jaccard_pairs_arr(df: DataFrame, pairs: DataFrame, id_col: str,
                     (n_inter
                      / (F.size("__sh_a") + F.size("__sh_b") - n_inter))
                     .alias("jaccard")))
-
-
-def lsh_candidate_pairs(bands: DataFrame, id_col: str) -> DataFrame:
-    """Self-join bands on (band, band_key) → distinct candidate pairs a<b."""
-    a = bands.select(F.col(id_col).alias("a_id"), "band", "band_key")
-    b = bands.select(F.col(id_col).alias("b_id"),
-                     F.col("band").alias("band2"),
-                     F.col("band_key").alias("band_key2"))
-    return (a.join(b, (a.band == b.band2) & (a.band_key == b.band_key2)
-                   & (a.a_id < b.b_id))
-            .select("a_id", "b_id").distinct())
 
 
 def jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str,

@@ -49,6 +49,12 @@ _PRIORITY: tuple[str, ...] = (
     # cover a change to the read path of the whole registry, so the
     # other 294 are not listed here; tier-1 test_oracle_parity
     # re-checks every oracle query exactly.
+    # Re-hashed since, all six already in this window:
+    # dedup_minhash_lsh and dedup_cluster_canonical (one MinHash
+    # banding chain, _minhash_lsh_jaccard), the two PCA faces
+    # (MATERIALIZED CTEs in the shared oracle text), and
+    # graph_connected_components and graph_hits (_loop_edges sizes
+    # by est_input_bytes; their plans are unchanged).
     # (r0) the nine benchmark queries, then the TableEnvironment
     # faces, whose hashes missed everything their constructor and
     # sql_query call until the hash walked class methods.

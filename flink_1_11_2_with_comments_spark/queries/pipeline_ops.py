@@ -279,26 +279,34 @@ def dedup_ngram_containment(spark, sf_dir):
     WHERE n_inter * 1.0 / (x.sz + y.sz - n_inter) >= 0.9
     """,
     doc="MinHash+LSH dedup: 8 md5-derived min-hashes, 2 bands × 4 rows, "
-        "band-key self-join for candidates, exact Jaccard ≥0.9 verification "
-        "(pipeline/dedup.py minhash_lsh_bands/lsh_candidate_pairs). "
-        "The oracle replays the entire pipeline in SQL.",
+        "bucket-local pair expansion on band keys for candidates, exact "
+        "Jaccard ≥0.9 verification "
+        "(pipeline/dedup.py minhash_lsh_bands/lsh_bucket_pairs/"
+        "jaccard_pairs_arr). The oracle replays the entire pipeline "
+        "in SQL.",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    # r14 opt: map-only banding (row-local array_min signatures, no
-    # shuffle) + bucket-local pair expansion (one shuffle, no band
-    # self-join) + row-local array_intersect verify — 6 document
-    # scans -> 3 and 18 Exchanges -> 3; identical rows (same hash
-    # family, same band keys, same exact-Jaccard threshold).
-    from ..pipeline.dedup import (jaccard_pairs_arr, lsh_bucket_pairs,
-                                  minhash_lsh_bands_arr)
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 250)
-    bands = minhash_lsh_bands_arr(d, "doc_id", "text",
-                                  num_hashes=8, rows_per_band=4,
-                                  shingle_n=1)
-    cand = lsh_bucket_pairs(bands, "doc_id")
-    j = jaccard_pairs_arr(d, cand, "doc_id", "text", shingle_n=1)
+    j = _minhash_lsh_jaccard(spark, sf_dir)
     return (j.withColumn("jaccard", F.round("jaccard", 9))
             .where(F.col("jaccard") >= 0.9))
+
+
+def _minhash_lsh_jaccard(spark, sf_dir):
+    """(a_id, b_id, jaccard) for the MinHash+LSH candidates among
+    documents with doc_id < 250: 8 min-hashes in 2 bands of 4 over
+    unigram shingles. Map-only banding (row-local array_min
+    signatures, no shuffle) + bucket-local pair expansion (one
+    shuffle, no band self-join) + row-local array_intersect verify.
+    Candidates that share no shingle score 0; docs with no shingles
+    never band, so the Jaccard denominator is never 0."""
+    from ..pipeline.dedup import (jaccard_pairs_arr, lsh_bucket_pairs,
+                                  minhash_lsh_bands)
+    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 250)
+    bands = minhash_lsh_bands(d, "doc_id", "text",
+                              num_hashes=8, rows_per_band=4,
+                              shingle_n=1)
+    cand = lsh_bucket_pairs(bands, "doc_id")
+    return jaccard_pairs_arr(d, cand, "doc_id", "text", shingle_n=1)
 
 
 @register(
@@ -360,13 +368,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 )
 def dedup_cluster_canonical(spark, sf_dir):
     from ..operators.graph import connected_components
-    from ..pipeline.dedup import (jaccard_pairs, lsh_candidate_pairs,
-                                  minhash_lsh_bands)
-    d = t(spark, sf_dir, "documents").where(F.col("doc_id") < 250)
-    bands = minhash_lsh_bands(d, "doc_id", "text",
-                              num_hashes=8, rows_per_band=4, shingle_n=1)
-    cand = lsh_candidate_pairs(bands, "doc_id")
-    j = jaccard_pairs(d, cand, "doc_id", "text", shingle_n=1)
+    j = _minhash_lsh_jaccard(spark, sf_dir)
     edges = (j.where(F.col("jaccard") >= 0.9)
              .select(F.col("a_id").alias("src"),
                      F.col("b_id").alias("dst")))
@@ -2765,7 +2767,7 @@ _PCA_Z = """
              COUNT(*) AS n
       FROM z a JOIN z b ON a.vec_id = b.vec_id
       GROUP BY 1, 2
-    ), covf AS (
+    ), covf AS MATERIALIZED (
       SELECT i, j, ROUND(sxy / n - (sx / n) * (sy / n), 12) AS cov
       FROM covs
     )"""
@@ -2774,7 +2776,11 @@ _PCA_Z = """
 def _pca_power_oracle(rounds: int = 8) -> str:
     """Unrolled power-iteration oracle: the SQL replays the identical
     rounds (mat-vec, L2 norm, normalize — all decimal-rounded to the
-    same 12 dp) so DuckDB reproduces the Spark iterates bit-exactly."""
+    same 12 dp) so DuckDB reproduces the Spark iterates bit-exactly.
+    covf and every iterate v{r} are MATERIALIZED CTEs (the BPE
+    oracle's precedent): plain CTEs are re-inlined at each reference,
+    and the unrolled chain then recomputes covf and the earlier
+    rounds many times over (minutes instead of under a second)."""
     parts = [_PCA_Z, """, d1 AS (
       SELECT COUNT(DISTINCT i) AS d FROM covf
     ), v0 AS (
@@ -2790,7 +2796,7 @@ def _pca_power_oracle(rounds: int = 8) -> str:
       SELECT ROUND(sqrt(CAST(ROUND(SUM(CAST(w * w AS DECIMAL(30,14))),
                                    12) AS DOUBLE)), 12) AS nrm
       FROM w{r}
-    ), v{r} AS (
+    ), v{r} AS MATERIALIZED (
       SELECT i, ROUND(w / nrm, 12) AS v FROM w{r}, n{r}
     )""")
     parts.append(f"""

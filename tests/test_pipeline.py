@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from flink_1_11_2_with_comments_spark.catalog import load_table
 from flink_1_11_2_with_comments_spark.pipeline.dedup import (
-    exact_dedup, lsh_bands, lsh_candidate_pairs, minhash_signature)
+    exact_dedup, lsh_bucket_pairs, minhash_lsh_bands)
 from flink_1_11_2_with_comments_spark.pipeline.multimodal import (
     decode_image, extract_features, synthesize_media)
 from flink_1_11_2_with_comments_spark.pipeline.similarity import (
@@ -35,9 +35,9 @@ def test_minhash_lsh_recall(spark, documents):
     at j=0.95, 100% at j=1.0 — so candidates stay sparse and misses
     of >=0.95 truth stay under the banding-math bound (~12%)."""
     d = documents.where(F.col("doc_id") < 250)
-    sigs = minhash_signature(d, "doc_id", "text", num_hashes=16, shingle_n=1)
-    bands = lsh_bands(sigs, "doc_id", rows_per_band=8)
-    cand = lsh_candidate_pairs(bands, "doc_id")
+    bands = minhash_lsh_bands(d, "doc_id", "text", num_hashes=16,
+                              rows_per_band=8, shingle_n=1)
+    cand = lsh_bucket_pairs(bands, "doc_id")
     n_cand = cand.count()
     n_docs = d.count()
     all_pairs = n_docs * (n_docs - 1) // 2

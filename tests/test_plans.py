@@ -1226,6 +1226,35 @@ def test_lsh_folded_dims_overflow_fails_loudly(spark):
                         .alias("b")).collect()
 
 
+def test_loop_width_ignores_join_product_estimates(spark, sf_dir):
+    """Without CBO a join's size estimate is the product of its
+    children's, so dedup_cluster_canonical's MinHash candidate edges
+    (a few hundred rows) estimate at terabytes. The loop edge table
+    must treat a joined input as unknown and repartition by column
+    (AQE coalesces it), not derive a ~160k-task width from the
+    product; a scan keeps its estimate and explicit width."""
+    from pyspark.sql import functions as F
+
+    from flink_1_11_2_with_comments_spark._sizing import (
+        _UNKNOWN_STATS, est_bytes, est_input_bytes)
+    from flink_1_11_2_with_comments_spark.operators.graph import (
+        _loop_edges)
+    from flink_1_11_2_with_comments_spark.queries.pipeline_ops import (
+        _minhash_lsh_jaccard)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    j = _minhash_lsh_jaccard(spark, sf_dir)
+    edges = j.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+    assert 1000 * est_bytes(docs) < est_bytes(edges) < _UNKNOWN_STATS
+    assert est_input_bytes(edges) == _UNKNOWN_STATS
+    assert est_input_bytes(docs) == est_bytes(docs) < _UNKNOWN_STATS
+    scan = docs.select(F.col("doc_id").alias("src"),
+                       F.col("doc_id").alias("dst"))
+    for df, kind in ((edges, "REPARTITION_BY_COL"),
+                     (scan, "REPARTITION_BY_NUM")):
+        with _loop_edges(df) as e:
+            assert kind in e._jdf.queryExecution().toString()
+
+
 def test_sizing_guard_single_definition(spark, sf_dir):
     """r15 pin (r14 advisor ask): the optimizer-stats smallness guard
     has ONE definition (_sizing.py) — pca/similarity/graph/
