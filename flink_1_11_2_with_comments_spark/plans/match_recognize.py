@@ -43,9 +43,9 @@ Supported subset (raise on anything else, loudly):
   steps' (fuzz-pinned against Python's `re`; the reference NFA's
   OPTIONAL state, flink-cep/.../pattern/Quantifier.java). Streaming
   runs min-0 at EVERY position: mid-pattern zero gaps are immutable
-  inside the watermark-complete prefix, a min-0 FIRST variable
-  routes through the anchored per-position scan (leftmost
-  preference survives zero leading bindings), and a min-0 LAST
+  inside the watermark-complete prefix, the after-match scan anchors
+  at every position (leftmost preference survives zero leading
+  bindings), and a min-0 LAST
   variable rides the same boundary deferral as any greedy trailing
   quantifier (held until a watermark-final successor fails to
   extend, or the within timeout). Patterns that can match zero
@@ -426,7 +426,7 @@ def _parse_pattern(
 
     Handles every SqlMatchRecognize pattern form in the subset:
     - quantifiers none/`+`/`*`/`?`/`{n}`/`{m,n}`/`{m,}` (min 0 forms
-      expand to present/absent alternatives in the engine);
+      are matched natively by the engine's walk);
     - top-level alternation ``A B | C D`` — one branch per arm, SQL
       preference = textual order (ties at the same start row resolve
       to the earlier branch);
@@ -519,13 +519,6 @@ def match_recognize(spark: SparkSession, sql: str,
     # union of variables across branches, first-appearance order — the
     # flag/measure basis (a variable in several branches gets one slot)
     steps = _union_steps(branches)
-    # a single branch binding a variable more than once (group
-    # quantifier unrolling) must ALSO go through the branch matcher:
-    # the union step list collapses duplicates, so the fast path
-    # would silently match `B C` for `(B C){2}`
-    has_dup = any(len({s.name.upper() for s in b}) != len(b)
-                  for b in branches)
-    alternation = branches if (len(branches) > 1 or has_dup) else None
 
     within = None
     if "WITHIN" in cl:
@@ -612,12 +605,12 @@ def match_recognize(spark: SparkSession, sql: str,
             return _all_rows_stream(src, cl, keys, ts_col, id_col,
                                     steps, within, after_match,
                                     excluded=excluded, permute=permute,
-                                    alternation=alternation,
+                                    alternation=branches,
                                     nav_kw=nav_kw)
         return _all_rows_per_match(src, cl, keys, ts_col, id_col,
                                    defines, steps, within, after_match,
                                    excluded=excluded, permute=permute,
-                                   alternation=alternation)
+                                   alternation=branches)
     if src.isStreaming:
         # streaming MATCH_RECOGNIZE (StreamExecMatch): the stateful
         # NFA implements every skip strategy — SKIP PAST LAST ROW
@@ -629,7 +622,7 @@ def match_recognize(spark: SparkSession, sql: str,
                                        within=within, id_col=id_col,
                                        permute=permute,
                                        after_match=after_match,
-                                       alternation=alternation,
+                                       alternation=branches,
                                        **nav_kw)
     else:
         lag_w = _lag_window(keys, ts_col, id_col)
@@ -642,7 +635,7 @@ def match_recognize(spark: SparkSession, sql: str,
                                       id_col=id_col,
                                       flag_exprs=flag_exprs,
                                       permute=permute,
-                                      alternation=alternation)
+                                      alternation=branches)
 
     # measures → the engine's fixed per-step outputs
     sel = [F.col(k) for k in keys]

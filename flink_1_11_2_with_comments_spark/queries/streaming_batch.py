@@ -225,20 +225,21 @@ def asof_join_batch(spark, sf_dir):
         "equivalent relational triple join.",
 )
 def cep_funnel(spark, sf_dir):
-    from ..streaming.cep import Step, match_recognize_batch
+    from ..streaming.cep import QStep, match_pattern_batch
     e = t(spark, sf_dir, "events")
     sub = e.where(F.col("event_type").isin("view", "click", "purchase")) \
         .select("user_id", "event_id", "ts", "event_type")
-    steps = [
-        Step("view", lambda ev: ev["event_type"] == "view"),
-        Step("click", lambda ev: ev["event_type"] == "click"),
-        Step("purchase", lambda ev: ev["event_type"] == "purchase"),
-    ]
-    out = match_recognize_batch(
+    names = ("view", "click", "purchase")
+    # single-event relaxed steps under NO_SKIP: every combination
+    steps = [QStep(v, lambda ev, v=v: ev["event_type"] == v)
+             for v in names]
+    out = match_pattern_batch(
         sub, ["user_id"], "ts", steps, within="6 hours",
-        flag_exprs=[F.col("event_type") == v
-                    for v in ("view", "click", "purchase")])
-    return out.select("user_id", "view_id", "click_id", "purchase_id",
+        after_match="all",
+        flag_exprs=[F.col("event_type") == v for v in names])
+    return out.select("user_id",
+                      *[F.col(f"{v}_first_id").alias(f"{v}_id")
+                        for v in names],
                       "start_ts", "end_ts")
 
 

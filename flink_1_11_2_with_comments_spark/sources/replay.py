@@ -46,25 +46,8 @@ def replay_as_stream(df: DataFrame, n_batches: int = 4,
     base = base_dir or tempfile.mkdtemp(prefix="replay_")
     data_dir = os.path.join(base, "data")
     os.makedirs(data_dir, exist_ok=True)
-
-    if order_by is not None:
-        w = Window.orderBy(order_by)
-    else:
-        w = Window.orderBy(F.lit(1))
-    tagged = df.withColumn("__b", F.ntile(n_batches).over(w)) \
-        if order_by else df.withColumn(
-            "__b", (F.monotonically_increasing_id() % n_batches + 1).cast("int"))
-
-    now = time.time() - n_batches - 1
-    for i in range(1, n_batches + 1):
-        part = tagged.where(F.col("__b") == i).drop("__b")
-        tmp = os.path.join(base, f"stage_{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(data_dir, f"batch_{i:04d}.parquet")
-        shutil.move(src, dst)
-        os.utime(dst, (now + i, now + i))  # oldest-first == batch order
-        shutil.rmtree(tmp, ignore_errors=True)
+    _stage_batches(df, data_dir, base, n_batches, order_by,
+                   first_index=0, mtime0=time.time() - n_batches - 1)
 
     return (spark.readStream
             .schema(df.schema)
@@ -119,22 +102,35 @@ def extend_replay(df: DataFrame, data_dir: str, n_batches: int = 1,
     every previously staged batch."""
     from ..catalog import instant_timestamps
 
-    df = instant_timestamps(df)
     base = tempfile.mkdtemp(prefix="replay_ext_")
+    _stage_batches(instant_timestamps(df), data_dir, base, n_batches,
+                   order_by, first_index=start_index,
+                   mtime0=time.time() + 1)
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def _stage_batches(df: DataFrame, data_dir: str, stage_dir: str,
+                   n_batches: int, order_by: str | None,
+                   first_index: int, mtime0: float) -> None:
+    """Split ``df`` into ``n_batches`` (ntile over ``order_by``, else
+    round-robin by row id) and write each as one parquet file
+    ``batch_{first_index + i:04d}.parquet`` in ``data_dir``, one
+    ``coalesce(1)`` write per batch through ``stage_dir``. Batch i
+    gets mtime ``mtime0 + i``: the file source reads oldest first, so
+    mtime order is batch order."""
     if order_by is not None:
-        w = Window.orderBy(order_by)
-        tagged = df.withColumn("__b", F.ntile(n_batches).over(w))
+        tagged = df.withColumn(
+            "__b", F.ntile(n_batches).over(Window.orderBy(order_by)))
     else:
         tagged = df.withColumn(
             "__b",
             (F.monotonically_increasing_id() % n_batches + 1).cast("int"))
-    now = time.time() + 1
     for i in range(1, n_batches + 1):
         part = tagged.where(F.col("__b") == i).drop("__b")
-        tmp = os.path.join(base, f"stage_{i}")
+        tmp = os.path.join(stage_dir, f"stage_{i}")
         part.coalesce(1).write.mode("overwrite").parquet(tmp)
         src = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(data_dir, f"batch_{start_index + i:04d}.parquet")
+        dst = os.path.join(data_dir, f"batch_{first_index + i:04d}.parquet")
         shutil.move(src, dst)
-        os.utime(dst, (now + i, now + i))
-    shutil.rmtree(base, ignore_errors=True)
+        os.utime(dst, (mtime0 + i, mtime0 + i))
+        shutil.rmtree(tmp, ignore_errors=True)

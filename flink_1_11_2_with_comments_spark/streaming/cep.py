@@ -3,21 +3,26 @@
 Reference: flink-libraries/flink-cep (CEP.java:29, Pattern.java:50 —
 where/followedBy/next/times/within), SQL MATCH_RECOGNIZE
 (StreamExecMatch.scala:68, rt/match/). The reference compiles a
-pattern to an NFA evaluated per key over the ordered stream.
+pattern to one NFA (nfa/NFA.java) evaluated per key over the ordered
+stream, behind both the Pattern API and SQL.
 
-Spark mapping: no native equivalent → NFA over per-key time-ordered
-events. Batch: applyInPandas per key (events for one key fit in one
-Arrow batch at sane key cardinality; a 100 TB run partitions by key
-first, which is the same contract the reference has — CEP state is
-per key). Streaming: keyed stateful op buffering events until the
-watermark passes, then running the same NFA on the watermark-complete
-prefix (event-time-correct, late events beyond the watermark dropped
-exactly like the reference's within-window pruning).
+Spark mapping: no native equivalent → one NFA over per-key
+time-ordered events (``QStep`` lists walked by ``_find_q_matches``),
+with the after-match skip strategy applied by one scan
+(``_scan_matches``). Batch: applyInPandas per key bucket (events for
+one key fit in one Arrow batch at sane key cardinality; a 100 TB run
+partitions by key first, which is the same contract the reference
+has — CEP state is per key). Streaming: keyed stateful op buffering
+events until the watermark passes, then running the same scan on the
+watermark-complete prefix (event-time-correct, late events beyond the
+watermark dropped exactly like the reference's within-window pruning).
 
-Semantics implemented: relaxed contiguity (followedBy), optional
-``within`` window, all-matches emission (every combination that
-satisfies the pattern — the oracle-checkable semantics; Flink's
-after-match skip strategies are selection policies layered on top).
+Semantics implemented: quantifiers (times/oneOrMore/optional, greedy
+or reluctant), strict (next) and relaxed (followedBy) contiguity,
+notFollowedBy, until, allowCombinations, alternation and PERMUTE, an
+optional ``within`` window, and the after-match strategies NO_SKIP
+('all', batch only), SKIP_PAST_LAST_EVENT, SKIP_TO_NEXT and SKIP TO
+FIRST/LAST(V) (AfterMatchSkipStrategy.java).
 """
 
 from __future__ import annotations
@@ -56,9 +61,8 @@ def _flag_projection(df: DataFrame, keys: list[str], ts_col: str,
     """
     if len(flag_exprs) != len(steps):
         raise ValueError("flag_exprs must match steps 1:1")
-    # plain Step (unquantified front-end) has no until/combinations
     if until_exprs is None:
-        if any(getattr(s, "until", None) is not None for s in steps):
+        if any(s.until is not None for s in steps):
             raise ValueError(
                 "steps with `until` need until_exprs alongside flag_exprs")
         until_exprs = [None] * len(steps)
@@ -102,17 +106,10 @@ def _rebind_steps(steps, pred_map, until_map):
     out = []
     for s in steps:
         repl = {"predicate": pred_map[s.name]}
-        if getattr(s, "until", None) is not None:
+        if s.until is not None:
             repl["until"] = until_map[s.name]
         out.append(dataclasses.replace(s, **repl))
     return out
-
-
-@dataclasses.dataclass
-class Step:
-    """One pattern step: Pattern.begin/.followedBy + .where."""
-    name: str
-    predicate: Callable[[dict], bool]
 
 
 def _records(pdf: pd.DataFrame, ts_col: str, id_col: str) -> list[dict]:
@@ -182,8 +179,8 @@ def _find_q_matches(events: list[dict], steps: list[QStep],
     at the first (= earliest-start, most-preferred) match.
 
     ``anchored``: the match's first CONSUMED event must be exactly
-    events[start_idx] (the regex `match`-at-pos model). The skip-
-    strategy loops use this and advance start_idx themselves —
+    events[start_idx] (the regex `match`-at-pos model). The after-
+    match scan (_scan_matches) uses this and advances start_idx —
     leftmost preference then holds even when leading min-0 steps
     match zero rows (un-anchored scanning would prefer a later-
     starting consuming option over a zero-repetition at start_idx).
@@ -228,11 +225,11 @@ def _find_q_matches(events: list[dict], steps: list[QStep],
         if step.min_times == 0 and not step.greedy:
             yield [], start, None
         for a in anchors:
-            if a >= n_ev:
+            if a >= n_ev or not within_ok(first_ev, events[a]):
+                # events are time-ordered: no later anchor is inside
+                # the window either
                 break
-            if not (step.predicate(events[a])
-                    and within_ok(first_ev, events[a])
-                    and not stop(events[a])):
+            if not step.predicate(events[a]) or stop(events[a]):
                 if strict:
                     break
                 continue
@@ -326,67 +323,73 @@ def _find_q_matches(events: list[dict], steps: list[QStep],
     return matches
 
 
-def _all_q_matches(events, steps, ts_col, within_ms, after_match,
-                   id_col):
-    """Matches under the after-match strategy. For SKIP_PAST_LAST with
-    a relaxed-anchor first step (every SQL MATCH_RECOGNIZE pattern),
-    a linear scan finds the earliest preferred match and jumps past
-    it — O(matches · match_span) instead of enumerating every
-    candidate match up front. SKIP_TO_NEXT_ROW emits the preferred
-    match per start row and resumes ONE PAST the match's start (not
-    its end), so matches may overlap but each start row yields at
-    most one (AfterMatchSkipStrategy.skipToNext — NOT NO_SKIP, which
-    would emit every greedy-length candidate per start).
-    SKIP TO FIRST/LAST(V) ('skip_to_first:V' / 'skip_to_last:V')
-    resumes AT the first/last row mapped to V (_skip_to_resume)."""
-    # the skip-strategy loops drive start positions ONE BY ONE with
-    # anchored matching (regex `match`-at-pos): leftmost preference is
-    # the loop's, per-position preference the walk's — correct even
-    # when leading min-0 steps consume nothing. A miss is cheap (the
-    # anchored first step fails fast), so the scan stays O(n) overall.
-    if after_match.startswith(("skip_to_first:", "skip_to_last:")):
-        mode, _, var = after_match.partition(":")
-        take_first = mode == "skip_to_first"
-        pos_of = {id(ev): i for i, ev in enumerate(events)}
-        out, idx = [], 0
-        while idx < len(events):
-            found = _find_q_matches(events, steps, ts_col, within_ms,
-                                    start_idx=idx, first_only=True,
-                                    anchored=True)
-            if not found:
-                idx += 1
-                continue
-            m, _end = found[0]
-            out.append(m)
-            idx = _skip_to_resume(m, var, take_first, pos_of)
-        return out
-    if after_match == "skip_to_next_row":
-        out, idx = [], 0
-        while idx < len(events):
+def _scan_matches(events, branches, ts_col, within_ms, after_match,
+                  hold=None):
+    """The after-match scan (AfterMatchSkipStrategy.java), the one
+    owner of the resume policy for batch and stream: yields
+    (match, resume_idx) in emission order. A lone pattern is a
+    one-branch list.
+
+    Every strategy but NO_SKIP drives start positions ONE BY ONE with
+    anchored matching (regex `match`-at-pos): leftmost preference is
+    the scan's, per-position preference the walk's, and ties at the
+    same start row break by branch order (SQL alternation/PERMUTE
+    preference) — correct even when leading min-0 steps consume
+    nothing, and for a strict first step. A miss is cheap (the
+    anchored first step fails fast), so the scan stays O(n) per
+    branch. The resume index is:
+    - 'skip_past_last': one past the match's last event;
+    - 'skip_to_next_row': one past the match's START, so matches may
+      overlap but each start row yields at most one (skipToNext — NOT
+      NO_SKIP, which emits every greedy-length candidate per start);
+    - 'skip_to_first:V' / 'skip_to_last:V': AT the first/last row
+      mapped to V (_skip_to_resume).
+    'all' (NO_SKIP) yields every candidate of every branch, with
+    resume None.
+
+    ``hold(match, branch_steps, end_idx)``: a True return stops the
+    scan BEFORE that match is yielded or its resume computed (the
+    stream defers a match that later events could still extend).
+
+    Cost note (SCALE.md): with k branches this tries up to k NFAs per
+    position — for PERMUTE that is k! branches, so matching is
+    O(n²·k!) per key worst-case. Fine at per-key event counts; bound
+    k (the reference's Calcite expansion has the same factorial
+    blowup)."""
+    if after_match == "all":
+        for steps in branches:
+            for m, _end in _find_q_matches(events, steps, ts_col,
+                                           within_ms):
+                yield m, None
+        return
+    mode, _, var = after_match.partition(":")
+    pos_of = {id(ev): i for i, ev in enumerate(events)} if var else None
+    idx = 0
+    while idx < len(events):
+        for steps in branches:
             found = _find_q_matches(events, steps, ts_col, within_ms,
                                     start_idx=idx, first_only=True,
                                     anchored=True)
             if found:
-                out.append(found[0][0])
-            idx += 1
-        return out
-    if after_match == "skip_past_last":
-        out, idx = [], 0
-        while idx < len(events):
-            found = _find_q_matches(events, steps, ts_col, within_ms,
-                                    start_idx=idx, first_only=True,
-                                    anchored=True)
-            if not found:
-                idx += 1
-                continue
-            m, end = found[0]
-            out.append(m)
+                break
+        if not found:
+            idx += 1  # anchored: only start == idx was checked
+            continue
+        m, end = found[0]
+        if hold is not None and hold(m, steps, end):
+            return
+        if mode == "skip_past_last":
             idx = end
-        return out
-    found = [m for m, _ in _find_q_matches(events, steps, ts_col,
-                                           within_ms)]
-    return _select_matches(found, id_col, after_match)
-def _skip_to_resume(m, var: str, take_first: bool, pos_of) -> int:
+        elif mode == "skip_to_next_row":
+            idx += 1
+        else:
+            idx = _skip_to_resume(m, var, mode == "skip_to_first", idx,
+                                  pos_of)
+        yield m, idx
+
+
+def _skip_to_resume(m, var: str, take_first: bool, start: int,
+                    pos_of) -> int:
     """AFTER MATCH SKIP TO FIRST/LAST(V) resume position
     (AfterMatchSkipStrategy.skipToFirst/skipToLast,
     flink-cep/.../nfa/aftermatch/): the next scan starts AT the
@@ -401,7 +404,6 @@ def _skip_to_resume(m, var: str, take_first: bool, pos_of) -> int:
         raise ValueError(
             f"AFTER MATCH SKIP TO {which}({var}): variable matched no "
             f"rows in this match")
-    start = pos_of[id(m[0][1][0])]
     tgt = pos_of[id(v_evs[0] if take_first else v_evs[-1])]
     if tgt <= start:
         raise ValueError(
@@ -428,86 +430,6 @@ def _permute_alts(steps: list[QStep]) -> list[list[QStep]]:
         [dataclasses.replace(s, contiguity=contigs[i])
          for i, s in enumerate(perm)]
         for perm in itertools.permutations(steps)]
-
-
-def _find_best_alt(events, alts, ts_col, within_ms, start_idx, pos_of):
-    """Preferred match STARTING AT start_idx across alternatives
-    (anchored — the caller advances the scan position, so leftmost
-    preference is the caller's and ties at the same start row break
-    by alternative order, SQL's PERMUTE/alternation preference).
-    ``pos_of`` is the id(event)->index map, built ONCE by the caller
-    per events list. Returns (match, end_idx, start_pos) or None."""
-    for steps in alts:
-        found = _find_q_matches(events, steps, ts_col, within_ms,
-                                start_idx=start_idx, first_only=True,
-                                anchored=True)
-        if found:
-            m, end = found[0]
-            return m, end, pos_of[id(m[0][1][0])], steps
-    return None
-
-
-def _all_alt_matches(events, alts, ts_col, within_ms, after_match,
-                     id_col):
-    """Alternation matching (the PERMUTE execution path): at each scan
-    position the earliest-starting match wins; ties at the same start
-    row are broken by alternative order — SQL's PERMUTE preference.
-    after_match as in _all_q_matches (skip_past_last resumes past the
-    match's end, skip_to_next_row one past its start). 'all' (NO_SKIP)
-    enumerates every alternative's every candidate match.
-
-    Cost note (SCALE.md): with k alternatives this scans up to k NFAs
-    per position — for PERMUTE that is k! alternatives, so matching is
-    O(n²·k!) per key worst-case. Fine at per-key event counts; bound k
-    (the reference's Calcite expansion has the same factorial blowup).
-    """
-    if after_match == "all":
-        # NO_SKIP: union of every alternative's full candidate set
-        found = [m for steps in alts
-                 for m, _ in _find_q_matches(events, steps, ts_col,
-                                             within_ms)]
-        return _select_matches(found, id_col, "all")
-    pos_of = {id(ev): i for i, ev in enumerate(events)}
-    out, idx = [], 0
-    n = len(events)
-    while idx < n:
-        found = _find_best_alt(events, alts, ts_col, within_ms, idx,
-                               pos_of)
-        if found is None:
-            idx += 1  # anchored: only start==idx was checked
-            continue
-        m, end, start, _steps = found
-        out.append(m)
-        if after_match == "skip_to_next_row":
-            idx = start + 1
-        elif after_match.startswith(("skip_to_first:", "skip_to_last:")):
-            mode, _, var = after_match.partition(":")
-            idx = _skip_to_resume(m, var, mode == "skip_to_first", pos_of)
-        else:  # skip_past_last
-            idx = end
-    return out
-
-
-def _select_matches(matches, id_col: str, after_match: str):
-    """After-match skip strategy (AfterMatchSkipStrategy.java):
-    'all' = NO_SKIP; 'skip_past_last' = SKIP_PAST_LAST_EVENT —
-    earliest-start preferred match wins, overlapping later starts
-    are discarded."""
-    if after_match == "all":
-        return matches
-    def bounds(m):
-        evs = [e for _, reps in m for e in reps]
-        return evs[0][id_col], evs[-1][id_col]
-    # stable sort by start event only: per start, preference order
-    # from _find_q_matches (greedy-first) is preserved and the first
-    # candidate wins
-    picked, last_end = [], None
-    for m in sorted(matches, key=lambda m: bounds(m)[0]):
-        s, e = bounds(m)
-        if last_end is None or s > last_end:
-            picked.append(m)
-            last_end = e
-    return picked
 
 
 def _union_steps(branches: list[list[QStep]]) -> list[QStep]:
@@ -573,18 +495,14 @@ def _key_prefilter(df: DataFrame, keys: list[str],
             .drop("__key_can_match"))
 
 
-def _prepare_branches(df, keys, ts_col, id_col, steps, flag_exprs,
-                      until_exprs, permute, alternation):
-    """Shared front half of the two batch entrypoints: validate,
-    project flags (name-keyed, once for every branch), expand PERMUTE
-    into the final alternation. min_times=0 steps are handled NATIVELY
-    by the walk (zero-repetition option in each step's preference
+def _pattern_branches(steps, alternation, after_match: str,
+                      streaming: bool = False) -> list[list[QStep]]:
+    """Validate a pattern and its after-match strategy — the one
+    validator batch and stream share. Returns the branch list (a lone
+    pattern is one branch). min_times=0 steps are handled NATIVELY by
+    the walk (zero-repetition option in each step's preference
     order — regex-equivalent backtracking; fuzz-pinned against
-    Python's `re` in tests/test_stateful.py). Returns (df,
-    union_steps, run_steps, alts): run_steps set for the
-    single-branch fast path, alts for alternation matching."""
-    if permute and alternation is not None:
-        raise ValueError("permute and alternation are mutually exclusive")
+    Python's `re` in tests/test_stateful.py)."""
     branches = alternation if alternation is not None else [steps]
     if not branches or not any(branches):
         raise ValueError("pattern needs at least one step")
@@ -595,6 +513,16 @@ def _prepare_branches(df, keys, ts_col, id_col, steps, flag_exprs,
         if any(a.negated and b.negated for a, b in zip(br, br[1:])):
             raise ValueError(
                 "consecutive notFollowedBy steps are unsupported")
+        if any(s.negated and not any(not p.negated and p.min_times > 0
+                                     for p in br[:i])
+               for i, s in enumerate(br)):
+            # the forbidden gap starts at the previous step's last
+            # event; with nothing bound before it the gap would
+            # depend on where the scan happens to start
+            raise ValueError(
+                "notFollowedBy cannot begin a pattern (no step before "
+                "it binds an event — the reference's Pattern cannot "
+                "start with a negation either)")
         if not any(not s.negated and s.min_times > 0 for s in br):
             raise NotImplementedError(
                 "patterns that can match zero rows (every positive "
@@ -605,6 +533,79 @@ def _prepare_branches(df, keys, ts_col, id_col, steps, flag_exprs,
                 "notFollowedBy cannot precede an optional (min-0) "
                 "step — a zero-repetition binding leaves the "
                 "forbidden gap unbounded")
+    mode, sep, var = after_match.partition(":")
+    if sep:
+        known = (mode in ("skip_to_first", "skip_to_last")
+                 and var.upper() in {s.name.upper() for br in branches
+                                     for s in br if not s.negated})
+    else:
+        known = mode in ("all", "skip_past_last", "skip_to_next_row")
+    if not known:
+        raise ValueError(
+            f"unknown after_match {after_match!r} (want 'all', "
+            f"'skip_past_last', 'skip_to_next_row', 'skip_to_first:V' "
+            f"or 'skip_to_last:V' with V a pattern variable)")
+    if streaming and mode == "all":
+        raise NotImplementedError(
+            "streaming CEP after-match subset: SKIP PAST LAST ROW, "
+            "SKIP TO NEXT ROW, SKIP TO FIRST(V), SKIP TO LAST(V) "
+            "(NO_SKIP 'all' is batch-only)")
+    return branches
+
+
+def _expand_permute(branches, permute: bool) -> list[list[QStep]]:
+    """PERMUTE expands every branch into its orderings (in order)."""
+    if not permute:
+        return branches
+    return [p for br in branches for p in _permute_alts(br)]
+
+
+def _match_columns(keys: list[str], pos_steps) -> tuple[str, list[str]]:
+    """ONE ROW PER MATCH output: (schema, columns) — keys, per
+    positive step its first/last event id and repetition count, then
+    the match's start/end timestamps."""
+    cols = [*keys,
+            *[c for s in pos_steps
+              for c in (f"{s.name}_first_id", f"{s.name}_last_id",
+                        f"{s.name}_n")],
+            "start_ts", "end_ts"]
+    schema = ", ".join(
+        f"{c} {'timestamp' if c in ('start_ts', 'end_ts') else 'bigint'}"
+        for c in cols)
+    return schema, cols
+
+
+def _match_row(m, key_vals: dict, pos_steps, id_col: str,
+               ts_col: str) -> dict:
+    """One ONE ROW PER MATCH row. Defaults are the SQL
+    unmatched-variable semantics: NULL ids and COUNT(V.*) = 0 for a
+    step the winning branch did not bind (or bound zero rows). A
+    branch may bind the same variable several times (group quantifier
+    unrolling, `(B C){2}` -> B C B C): FIRST keeps the earliest
+    binding, LAST the latest, COUNT accumulates. Bindings are in
+    event order (the walk only moves forward), so the match spans its
+    first binding's first event to its last binding's last."""
+    row = dict(key_vals)
+    for s in pos_steps:
+        row[f"{s.name}_first_id"] = None
+        row[f"{s.name}_last_id"] = None
+        row[f"{s.name}_n"] = 0
+    for s, reps in m:
+        if row[f"{s.name}_n"] == 0:
+            row[f"{s.name}_first_id"] = reps[0][id_col]
+        row[f"{s.name}_last_id"] = reps[-1][id_col]
+        row[f"{s.name}_n"] += len(reps)
+    row["start_ts"] = m[0][1][0][ts_col]
+    row["end_ts"] = m[-1][1][-1][ts_col]
+    return row
+
+
+def _prepare_branches(df, keys, ts_col, id_col, steps, flag_exprs,
+                      until_exprs, permute, alternation, after_match):
+    """Shared front half of the two batch entrypoints: validate,
+    project flags (name-keyed, once for every branch), expand PERMUTE
+    into the final alternation. Returns (df, union_steps, branches)."""
+    branches = _pattern_branches(steps, alternation, after_match)
     union = _union_steps(branches)
     if flag_exprs is not None:
         df, pred_map, until_map = _flag_projection(
@@ -612,15 +613,7 @@ def _prepare_branches(df, keys, ts_col, id_col, steps, flag_exprs,
         branches = [_rebind_steps(br, pred_map, until_map)
                     for br in branches]
         df = _key_prefilter(df, keys, branches)
-    expanded: list[list[QStep]] = []
-    for br in branches:
-        if permute:
-            expanded.extend(_permute_alts(br))
-        else:
-            expanded.append(br)
-    if len(expanded) == 1:
-        return df, union, expanded[0], None
-    return df, union, None, expanded
+    return df, union, _expand_permute(branches, permute)
 
 
 def match_pattern_batch(
@@ -642,54 +635,24 @@ def match_pattern_batch(
     first-appearance order) to evaluate predicates JVM-side and ship
     only flags over Arrow (plus ``until_exprs`` for steps carrying a
     stop condition). ``permute`` matches any ordering of the steps
-    (SQL PERMUTE). ``alternation`` supplies explicit branches
-    (`(A B | C D)`); steps with min_times=0 (`B*`, `B?`) are expanded
-    into present/absent branches automatically. A step absent from the
-    winning branch (or matching zero rows) reports first/last id NULL
-    and count 0 — the SQL unmatched-variable semantics."""
-    df, union, run_steps, alts = _prepare_branches(
+    (SQL PERMUTE, of every branch). ``alternation`` supplies explicit
+    branches (`(A B | C D)`); steps with min_times=0 (`B*`, `B?`) are
+    matched natively by the walk. A step absent from the winning
+    branch (or matching zero rows) reports first/last id NULL and
+    count 0 — the SQL unmatched-variable semantics."""
+    df, union, alts = _prepare_branches(
         df, keys, ts_col, id_col, steps, flag_exprs, until_exprs,
-        permute, alternation)
+        permute, alternation, after_match)
     within_ms = _interval_ms(within) if within else None
     pos_steps = [s for s in union if not s.negated]
-    key_fields = ", ".join(f"{k} bigint" for k in keys)
-    step_fields = ", ".join(
-        f"{s.name}_first_id bigint, {s.name}_last_id bigint, "
-        f"{s.name}_n bigint" for s in pos_steps)
-    out_schema = (f"{key_fields}, {step_fields}, "
-                  f"start_ts timestamp, end_ts timestamp")
-    cols = ([*keys,
-             *[c for s in pos_steps
-               for c in (f"{s.name}_first_id", f"{s.name}_last_id",
-                         f"{s.name}_n")],
-             "start_ts", "end_ts"])
+    out_schema, cols = _match_columns(keys, pos_steps)
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         events = _records(pdf, ts_col, id_col)
-        out = []
-        matches = (_all_alt_matches(events, alts, ts_col, within_ms,
-                                    after_match, id_col) if alts
-                   else _all_q_matches(events, run_steps, ts_col,
-                                       within_ms, after_match, id_col))
-        for m in matches:
-            # defaults = SQL unmatched-variable semantics: NULL ids,
-            # COUNT(V.*) = 0 for steps the winning branch didn't bind
-            row = dict.fromkeys(cols)
-            for s in pos_steps:
-                row[f"{s.name}_n"] = 0
-            row.update({k: m[0][1][0][k] for k in keys})
-            # a branch may bind the same variable several times (group
-            # quantifier unrolling, `(B C){2}` -> B C B C): FIRST keeps
-            # the earliest binding, LAST the latest, COUNT accumulates
-            for s, reps in m:
-                if row[f"{s.name}_n"] == 0:
-                    row[f"{s.name}_first_id"] = reps[0][id_col]
-                row[f"{s.name}_last_id"] = reps[-1][id_col]
-                row[f"{s.name}_n"] += len(reps)
-            all_evs = [e for _, reps in m for e in reps]
-            row["start_ts"] = all_evs[0][ts_col]
-            row["end_ts"] = all_evs[-1][ts_col]
-            out.append(row)
+        out = [_match_row(m, {k: m[0][1][0][k] for k in keys},
+                          pos_steps, id_col, ts_col)
+               for m, _ in _scan_matches(events, alts, ts_col, within_ms,
+                                         after_match)]
         return pd.DataFrame(out, columns=cols)
 
     return _bucketed_apply(df, keys, per_key, out_schema)
@@ -720,9 +683,9 @@ def match_pattern_batch_rows(
     rt/match/ and SqlMatchRecognize.java; per-event emission mirrors
     PatternProcessFunction receiving the full Map<String,List<Event>>.
     """
-    df, _union, run_steps, alts = _prepare_branches(
+    df, _union, alts = _prepare_branches(
         df, keys, ts_col, id_col, steps, flag_exprs, None, permute,
-        alternation)
+        alternation, after_match)
     within_ms = _interval_ms(within) if within else None
     key_fields = ", ".join(f"{k} bigint" for k in keys)
     out_schema = (f"{key_fields}, {id_col} bigint, {ts_col} timestamp, "
@@ -732,10 +695,8 @@ def match_pattern_batch_rows(
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         events = _records(pdf, ts_col, id_col)
         out = []
-        matches = (_all_alt_matches(events, alts, ts_col, within_ms,
-                                    after_match, id_col) if alts
-                   else _all_q_matches(events, run_steps, ts_col,
-                                       within_ms, after_match, id_col))
+        matches = [m for m, _ in _scan_matches(events, alts, ts_col,
+                                               within_ms, after_match)]
         # MATCH_NUMBER() orders by match start within the partition
         matches.sort(key=lambda m: (m[0][1][0][ts_col],
                                     m[0][1][0][id_col]))
@@ -802,129 +763,6 @@ def _bucketed_apply(df: DataFrame, keys: list[str], per_key,
         per_bucket, out_schema)
 
 
-def _find_matches(events: list[dict], steps: list[Step], ts_col: str,
-                  within_ms: int | None) -> list[list[dict]]:
-    """All relaxed-contiguity matches of steps over time-ordered events."""
-    matches: list[list[dict]] = []
-    n = len(steps)
-
-    def extend(partial: list[dict], next_idx: int, step_i: int) -> None:
-        if step_i == n:
-            matches.append(partial)
-            return
-        first_ts = partial[0][ts_col] if partial else None
-        for j in range(next_idx, len(events)):
-            ev = events[j]
-            if first_ts is not None and within_ms is not None:
-                if (ev[ts_col] - first_ts).total_seconds() * 1000 > within_ms:
-                    break  # events sorted: nothing later can qualify
-            if steps[step_i].predicate(ev):
-                extend(partial + [ev], j + 1, step_i + 1)
-
-    extend([], 0, 0)
-    return matches
-
-
-def match_recognize_batch(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    steps: list[Step],
-    within: str | None = None,
-    id_col: str = "event_id",
-    flag_exprs: list[Column] | None = None,
-) -> DataFrame:
-    """Batch MATCH_RECOGNIZE: emit one row per match with the matched
-    event ids and the match's start/end timestamps. ``flag_exprs``
-    moves predicate evaluation JVM-side (see _flag_projection)."""
-    run_steps = steps
-    if flag_exprs is not None:
-        df, pred_map, until_map = _flag_projection(
-            df, keys, ts_col, id_col, steps, flag_exprs)
-        run_steps = _rebind_steps(steps, pred_map, until_map)
-    within_ms = _interval_ms(within) if within else None
-    key_fields = ", ".join(f"{k} bigint" for k in keys)
-    id_fields = ", ".join(f"{s.name}_id bigint" for s in steps)
-    out_schema = f"{key_fields}, {id_fields}, start_ts timestamp, end_ts timestamp"
-
-    def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        events = _records(pdf, ts_col, id_col)
-        out = []
-        for m in _find_matches(events, run_steps, ts_col, within_ms):
-            row = {k: m[0][k] for k in keys}
-            for s, ev in zip(run_steps, m):
-                row[f"{s.name}_id"] = ev[id_col]
-            row["start_ts"] = m[0][ts_col]
-            row["end_ts"] = m[-1][ts_col]
-            out.append(row)
-        cols = ([*keys, *[f"{s.name}_id" for s in steps], "start_ts", "end_ts"])
-        return pd.DataFrame(out, columns=cols)
-
-    return _bucketed_apply(df, keys, per_key, out_schema)
-
-
-def match_recognize_stream(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    steps: list[Step],
-    within: str | None = None,
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Streaming MATCH_RECOGNIZE: buffer per key until the watermark
-    passes, then match on the complete prefix and evict events older
-    than the within-window (rt/match NFA state pruning analogue)."""
-    within_ms = _interval_ms(within) if within else None
-    key_fields = ", ".join(f"{k} bigint" for k in keys)
-    id_fields = ", ".join(f"{s.name}_id bigint" for s in steps)
-    out_schema = f"{key_fields}, {id_fields}, start_ts timestamp, end_ts timestamp"
-
-    def fn(key, rows: pd.DataFrame | None, state: KeyedState):
-        import datetime as dt
-        buf = state.get("buf", [])
-        emitted = set(map(tuple, state.get("emitted", [])))
-        if rows is not None:
-            for rec in rows.to_dict("records"):
-                buf.append({id_col: int(rec[id_col]),
-                            ts_col: rec[ts_col].isoformat(),
-                            "__data": {s.name: bool(s.predicate(rec))
-                                       for s in steps}})
-        buf.sort(key=lambda r: (r[ts_col], r[id_col]))
-        events = [{id_col: r[id_col],
-                   ts_col: dt.datetime.fromisoformat(r[ts_col]),
-                   "__flags": r["__data"]} for r in buf]
-        wm = state.watermark_ms()
-        complete = [e for e in events
-                    if utc_ms(e[ts_col]) <= wm] if wm > 0 else []
-        flag_steps = [Step(s.name, lambda ev, n=s.name: ev["__flags"][n])
-                      for s in steps]
-        out = []
-        for m in _find_matches(complete, flag_steps, ts_col, within_ms):
-            sig = tuple(ev[id_col] for ev in m)
-            if sig in emitted:
-                continue
-            emitted.add(sig)
-            row = {k: key[i] for i, k in enumerate(keys)}
-            for s, ev in zip(steps, m):
-                row[f"{s.name}_id"] = ev[id_col]
-            row["start_ts"] = m[0][ts_col]
-            row["end_ts"] = m[-1][ts_col]
-            out.append(row)
-        # evict: events that can no longer start or join a match
-        if within_ms is not None and wm > 0:
-            cutoff = wm - within_ms
-            buf = [r for r in buf
-                   if utc_ms(dt.datetime.fromisoformat(r[ts_col]))
-                   >= cutoff]
-        state.put("buf", buf)
-        state.put("emitted", [list(s) for s in emitted])
-        cols = ([*keys, *[f"{s.name}_id" for s in steps], "start_ts", "end_ts"])
-        return pd.DataFrame(out, columns=cols) if out else None
-
-    return keyed_process(df, keys, fn, out_schema, output_mode="append",
-                         timeout="NoTimeout")
-
-
 def match_pattern_stream(
     df: DataFrame,
     keys: list[str],
@@ -957,7 +795,8 @@ def match_pattern_stream(
     because the NFA emits complete matches atomically.
 
     ``after_match``: 'skip_past_last' resumes past the match's end and
-    evicts the consumed prefix; 'skip_to_first:V'/'skip_to_last:V'
+    evicts the consumed prefix; 'skip_to_next_row' resumes one past
+    the match's start; 'skip_to_first:V'/'skip_to_last:V'
     resume AT the first/last row mapped to V (overlapping matches
     allowed — eviction only drops rows BEFORE the resume point; the
     reference's skipToFirst/skipToLast, including its runtime error
@@ -983,10 +822,12 @@ def match_pattern_stream(
     min-0 step bound zero) and which ends exactly at the prefix
     boundary is deferred — a later in-watermark event could extend
     the greedy run (the reference's NFA equally waits for the first
-    non-matching event or the within timeout). Patterns whose first
-    positive step is min-0 (`A? B`, `A* B`) run through the anchored
-    per-position loop so leftmost preference survives zero leading
-    bindings; min-0 steps therefore stream at EVERY position.
+    non-matching event or the within timeout). The prefix runs
+    through the batch scan (_scan_matches, anchored at every
+    position), so leftmost preference survives zero leading bindings
+    (`A? B`, `A* B`) and a strict first step, and a position that
+    fails now is rescanned next trigger because nothing before it is
+    evicted until a match emits; min-0 steps stream at EVERY position.
 
     Iterative conditions (``nav_steps``: variables whose DEFINE uses
     PREV/NEXT over the input order): the buffer additionally carries
@@ -1001,43 +842,15 @@ def match_pattern_stream(
     GHOSTS (nav neighbors only, never match candidates) so a
     newly-complete event can still see its predecessor's values.
     """
-    branches = alternation if alternation is not None else [steps]
-    for br in branches:
-        if br and br[-1].negated:
-            raise ValueError(
-                "notFollowedBy cannot be the last pattern step")
-        # min-0 steps run streaming at EVERY position: mid-pattern
-        # zero-bindings sit between two CONSUMED events whose strict
-        # gap is immutable once inside the complete prefix; a min-0
-        # FIRST step would break leftmost anchoring under the
-        # un-anchored scan (a later consuming start would be
-        # preferred over zero-at-idx), so such patterns are routed
-        # through the anchored per-position loop below; a min-0 LAST
-        # step makes a boundary-ending match extensible by future
-        # events, which the generic open_ended deferral already
-        # holds back until a watermark-final successor fails to
-        # extend it (or the within timeout fires).
-        if any(a.negated and b.min_times == 0
-               for a, b in zip(br, br[1:])):
-            # same boundary _prepare_branches enforces for batch: the
-            # walk skips zero bindings after a negated step (the
-            # forbidden gap would be unbounded), which would silently
-            # REQUIRE the optional step here instead of raising
-            raise ValueError(
-                "notFollowedBy cannot precede an optional (min-0) step")
     if emit not in ("match", "rows"):
         raise ValueError("emit must be 'match' or 'rows'")
-    if (after_match not in ("skip_past_last", "skip_to_next_row")
-            and not after_match.startswith(("skip_to_first:",
-                                            "skip_to_last:"))):
-        raise NotImplementedError(
-            "streaming CEP after-match subset: SKIP PAST LAST ROW, "
-            "SKIP TO NEXT ROW, SKIP TO FIRST(V), SKIP TO LAST(V)")
+    branches = _pattern_branches(steps, alternation, after_match,
+                                 streaming=True)
     within_ms = _interval_ms(within) if within else None
-    union = _union_steps(branches) if alternation is not None else steps
+    union = _union_steps(branches)
     pos_steps = [s for s in union if not s.negated]
-    key_fields = ", ".join(f"{k} bigint" for k in keys)
     if emit == "rows":
+        key_fields = ", ".join(f"{k} bigint" for k in keys)
         measure_fields = "".join(
             f", {sp['alias']} bigint" for sp in (row_measures or []))
         out_schema = (f"{key_fields}, {id_col} bigint, "
@@ -1046,16 +859,7 @@ def match_pattern_stream(
         cols = [*keys, id_col, ts_col, "match_seq", "classifier",
                 *[sp["alias"] for sp in (row_measures or [])]]
     else:
-        step_fields = ", ".join(
-            f"{s.name}_first_id bigint, {s.name}_last_id bigint, "
-            f"{s.name}_n bigint" for s in pos_steps)
-        out_schema = (f"{key_fields}, {step_fields}, "
-                      f"start_ts timestamp, end_ts timestamp")
-        cols = ([*keys,
-                 *[c for s in pos_steps
-                   for c in (f"{s.name}_first_id", f"{s.name}_last_id",
-                             f"{s.name}_n")],
-                 "start_ts", "end_ts"])
+        out_schema, cols = _match_columns(keys, pos_steps)
 
     # flag indices are UNION positions; branch steps rebind by name so
     # a variable shared across branches (or repeated by a group
@@ -1069,30 +873,8 @@ def match_pattern_stream(
             until=(lambda ev, i=i: ev["__uflags"][i])
             if s.until is not None else None)
 
-    flag_steps = [_flag_step(s) for s in union]
-    if alternation is not None:
-        alts = [[_flag_step(s) for s in br] for br in branches]
-        if permute:
-            alts = [p for br in alts for p in _permute_alts(br)]
-    elif permute:
-        alts = _permute_alts(flag_steps)
-    elif after_match == "skip_to_next_row":
-        # SKIP TO NEXT ROW emits the preferred match PER START ROW —
-        # the scan must anchor at every position (the batch
-        # _all_q_matches loop does the same), so route the single
-        # branch through the anchored-alternatives path
-        alts = [flag_steps]
-    else:
-        first_pos = next((s for s in flag_steps if not s.negated), None)
-        # leading min-0 (`A? B`, `A* B`): the un-anchored scan would
-        # prefer a later CONSUMING start over a zero-repetition at
-        # the current position, inverting SQL's leftmost preference —
-        # anchor at every position instead (the batch loop's model);
-        # the caller-advanced idx keeps leftmost ordering and a
-        # position that fails now is rescanned next trigger because
-        # nothing is evicted until a match emits
-        alts = ([flag_steps] if first_pos is not None
-                and first_pos.min_times == 0 else None)
+    alts = _expand_permute([[_flag_step(s) for s in br]
+                            for br in branches], permute)
 
     nav = bool(nav_steps)
     nav_names = {n.upper() for n in (nav_steps or ())}
@@ -1152,55 +934,38 @@ def match_pattern_stream(
         n_ghost = sum(1 for e in events if e["__ghost"])
         n_complete = len(complete)
         out = []
-        idx = 0
         evict_n = 0  # live positions before this are consumed/passed
-        pos_of = {id(ev): i for i, ev in enumerate(complete)}
-        while idx < n_complete:
-            if alts is not None:
-                best = _find_best_alt(complete, alts, ts_col,
-                                      within_ms, idx, pos_of)
-                if best is None:
-                    idx += 1  # anchored: only start==idx was checked
-                    continue
-                found = [best[:2]]
-                bsteps = best[3]
-            else:
-                found = _find_q_matches(complete, flag_steps,
-                                        ts_col, within_ms, start_idx=idx,
-                                        first_only=True)
-                bsteps = flag_steps
-            if not found:
-                break
-            m, end = found[0]
+
+        def open_ended(m, bsteps, end) -> bool:
+            """A match ending at the prefix boundary that later events
+            could still extend: the last CONSUMED step can take more
+            reps, OR a trailing greedy min-0 step bound zero (m omits
+            zero-bound steps, so look past the last consumed step in
+            the branch's step list — a future event binding it is
+            preferred by greedy choice)."""
+            if end != n_complete:
+                return False
             last_step, last_reps = m[-1]
-            # extensible at the prefix boundary: the last CONSUMED
-            # step can take more reps, OR a trailing greedy min-0
-            # step bound zero (m omits zero-bound steps, so look past
-            # the last consumed step in the branch's step list — a
-            # future event binding it is preferred by greedy choice)
             tail_from = next(i for i, s in enumerate(bsteps)
                              if s is last_step) + 1
-            open_ended = (end == n_complete
-                          and ((not last_step.negated
-                                and last_step.greedy
-                                and (last_step.max_times is None
-                                     or (len(last_reps)
-                                         < last_step.max_times)))
-                               or any(s.greedy and s.min_times == 0
-                                      and not s.negated
-                                      for s in bsteps[tail_from:])))
-            if open_ended and within_ms is not None and wm > 0:
-                # any future non-late event has ts > wm; once
-                # first_ts + within ≤ wm it cannot satisfy within_ok,
-                # so the greedy run is final — deferring here would
-                # let the within-cutoff eviction below destroy the
-                # match's events while the key is quiet (the
-                # reference's NFA emits on the within timeout)
-                first_ts = next(reps for _, reps in m if reps)[0][ts_col]
-                if utc_ms(first_ts) + within_ms <= wm:
-                    open_ended = False
-            if open_ended:
-                break  # greedy run may extend with later events
+            if not ((last_step.greedy
+                     and (last_step.max_times is None
+                          or len(last_reps) < last_step.max_times))
+                    or any(s.greedy and s.min_times == 0
+                           and not s.negated
+                           for s in bsteps[tail_from:])):
+                return False
+            # any future non-late event has ts > wm; once first_ts +
+            # within ≤ wm it cannot satisfy within_ok, so the greedy
+            # run is final — deferring here would let the
+            # within-cutoff eviction below destroy the match's events
+            # while the key is quiet (the reference's NFA emits on the
+            # within timeout)
+            return not (within_ms is not None and wm > 0
+                        and utc_ms(m[0][1][0][ts_col]) + within_ms <= wm)
+
+        for m, resume in _scan_matches(complete, alts, ts_col, within_ms,
+                                       after_match, hold=open_ended):
             if emit == "rows":
                 seq = state.get("seq", 0) + 1
                 state.put("seq", seq)
@@ -1233,42 +998,12 @@ def match_pattern_stream(
                         rec[sp["alias"]] = val
                     out.append(rec)
             else:
-                row = {k: key[i] for i, k in enumerate(keys)}
-                all_evs = []
-                # zero-matched (min-0 / other-branch) steps report
-                # count 0 / NULL ids — the SQL unmatched-variable
-                # semantics, same as the batch builder
-                for s in pos_steps:
-                    row[f"{s.name}_first_id"] = None
-                    row[f"{s.name}_last_id"] = None
-                    row[f"{s.name}_n"] = 0
-                for s, reps in m:
-                    if row[f"{s.name}_n"] == 0:
-                        row[f"{s.name}_first_id"] = reps[0][id_col]
-                    row[f"{s.name}_last_id"] = reps[-1][id_col]
-                    row[f"{s.name}_n"] += len(reps)
-                    all_evs.extend(reps)
-                all_evs.sort(key=lambda e: (e[ts_col], e[id_col]))
-                row["start_ts"] = all_evs[0][ts_col]
-                row["end_ts"] = all_evs[-1][ts_col]
-                out.append(row)
-            if after_match == "skip_past_last":
-                idx = end
-            elif after_match == "skip_to_next_row":
-                # one preferred match per start row; resume one past
-                # the match's START (anchored scan → start == idx)
-                idx += 1
-            else:
-                # SKIP TO FIRST/LAST(V): resume AT the mapped row —
-                # overlapping matches allowed; _skip_to_resume raises
-                # the reference's runtime error if V bound no rows or
-                # resuming would not advance past the match's start
-                mode, _, var = after_match.partition(":")
-                idx = _skip_to_resume(m, var,
-                                      mode == "skip_to_first", pos_of)
+                out.append(_match_row(
+                    m, {k: key[i] for i, k in enumerate(keys)},
+                    pos_steps, id_col, ts_col))
             # events before the resume point can never join a future
             # match (every future match starts at or after it)
-            evict_n = idx
+            evict_n = resume
         consumed = buf[n_ghost:n_ghost + evict_n]
         rest = buf[n_ghost + evict_n:]
         if within_ms is not None and wm > 0:

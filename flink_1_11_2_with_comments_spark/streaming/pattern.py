@@ -131,10 +131,9 @@ class Pattern:
     def optional(self) -> "Pattern":
         """The step may match zero events (Pattern.optional,
         Pattern.java:317): min_times = 0, handled natively by the NFA
-        in regex backtracking order. Streaming supports it on
-        MID-pattern steps (the zero binding sits between consumed
-        events, immutable inside the watermark-complete prefix); a
-        min-0 first/last step raises in match_pattern_stream.
+        in regex backtracking order, batch and streaming alike (a
+        min-0 last step is held back at the watermark boundary until
+        a later event fails to extend it, or the within timeout).
 
         The reference's TIMES+optional means {0} UNION {m..n}; a
         single QStep can only express the contiguous {0..n}, so
@@ -188,17 +187,14 @@ class Pattern:
         to keep predicate evaluation JVM-side, plus ``until_exprs`` —
         one Column or None per step — when a looping step carries an
         ``until`` stop condition); streaming DataFrames route to the
-        watermark-driven stateful NFA, which supports only the default
-        skip_past_last strategy and Python predicates (a silently
-        downgraded after_match or ignored flag_exprs would change
-        semantics, so both raise).
+        watermark-driven stateful NFA, which evaluates Python
+        predicates (ignored flag_exprs would change semantics, so they
+        raise). ``after_match`` goes to the engine as given; its
+        validator rejects an unknown strategy, and NO_SKIP ('all') on
+        a stream.
         """
         steps = self.build()
         if df.isStreaming:
-            if after_match != "skip_past_last":
-                raise NotImplementedError(
-                    "streaming CEP supports only after_match="
-                    "'skip_past_last' (got %r)" % (after_match,))
             if flag_exprs is not None or until_exprs is not None:
                 raise NotImplementedError(
                     "flag_exprs/until_exprs are a batch-only "
@@ -206,7 +202,8 @@ class Pattern:
                     "predicates in the stateful NFA")
             return match_pattern_stream(df, keys, ts_col, steps,
                                         within=self._within,
-                                        id_col=id_col)
+                                        id_col=id_col,
+                                        after_match=after_match)
         if (flag_exprs is not None and until_exprs is None
                 and any(s.until is not None for s in steps)):
             raise ValueError(

@@ -18,7 +18,7 @@ from flink_1_11_2_with_comments_spark.catalog import load_table
 from flink_1_11_2_with_comments_spark.sources.replay import (
     replay_as_stream, write_stream_to_memory)
 from flink_1_11_2_with_comments_spark.streaming.cep import (
-    Step, match_recognize_batch, match_recognize_stream)
+    QStep, match_pattern_batch, match_pattern_stream)
 from flink_1_11_2_with_comments_spark.streaming.count_window import (
     count_tumbling_window)
 from flink_1_11_2_with_comments_spark.streaming.state import keyed_process
@@ -113,21 +113,25 @@ def test_cep_stream_matches_batch(spark, events):
     """Streaming NFA (watermark-gated) finds the same matches as the
     batch NFA, modulo patterns still open at end-of-stream."""
     steps = [
-        Step("view", lambda ev: ev["event_type"] == "view"),
-        Step("click", lambda ev: ev["event_type"] == "click"),
+        QStep("view", lambda ev: ev["event_type"] == "view"),
+        QStep("click", lambda ev: ev["event_type"] == "click"),
     ]
     sub = events.where(F.col("event_type").isin("view", "click"))
 
-    batch = match_recognize_batch(sub, ["user_id"], "ts", steps,
-                                  within="30 minutes")
-    batch_rows = set(map(tuple, batch.select("view_id", "click_id").collect()))
+    batch = match_pattern_batch(sub, ["user_id"], "ts", steps,
+                                within="30 minutes",
+                                after_match="skip_past_last")
+    batch_rows = set(map(tuple, batch.select(
+        "view_first_id", "click_first_id").collect()))
 
     stream = replay_as_stream(sub, n_batches=3, order_by="ts") \
         .withWatermark("ts", "1 minute")
-    out = match_recognize_stream(stream, ["user_id"], "ts", steps,
-                                 within="30 minutes")
+    out = match_pattern_stream(stream, ["user_id"], "ts", steps,
+                               within="30 minutes",
+                               after_match="skip_past_last")
     got = write_stream_to_memory(out, "cep_out", output_mode="append")
-    got_rows = set(map(tuple, got.select("view_id", "click_id").collect()))
+    got_rows = set(map(tuple, got.select(
+        "view_first_id", "click_first_id").collect()))
 
     # streaming emits only watermark-complete matches: subset, and at
     # least the matches fully inside the watermarked prefix
@@ -514,7 +518,7 @@ def test_cep_skip_past_last_equals_regex_semantics():
     import re
     from hypothesis import given, settings, strategies as st
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _all_q_matches)
+        QStep, _scan_matches)
 
     steps = [
         QStep("a", lambda e: e["t"] == "v"),
@@ -528,8 +532,8 @@ def test_cep_skip_past_last_equals_regex_semantics():
     def check(seq):
         events = [{"t": ch, "ts": i, "id": i} for i, ch in enumerate(seq)]
         got = [(m[0][1][0]["id"], m[-1][1][-1]["id"])
-               for m in _all_q_matches(events, steps, "ts", None,
-                                       "skip_past_last", "id")]
+               for m, _ in _scan_matches(events, [steps], "ts", None,
+                                         "skip_past_last")]
         exp = [(mo.start(), mo.end() - 1)
                for mo in re.finditer("vc+p", seq)]
         assert got == exp, (seq, got, exp)
@@ -545,7 +549,7 @@ def test_cep_permute_equals_regex_alternation():
     import re
     from hypothesis import given, settings, strategies as st
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _all_alt_matches, _permute_alts)
+        QStep, _permute_alts, _scan_matches)
 
     steps = [
         QStep("a", lambda e: e["t"] == "v"),
@@ -558,8 +562,8 @@ def test_cep_permute_equals_regex_alternation():
     def check(seq):
         events = [{"t": ch, "ts": i, "id": i} for i, ch in enumerate(seq)]
         got = [(m[0][1][0]["id"], m[-1][1][-1]["id"])
-               for m in _all_alt_matches(events, alts, "ts", None,
-                                         "skip_past_last", "id")]
+               for m, _ in _scan_matches(events, alts, "ts", None,
+                                         "skip_past_last")]
         exp = [(mo.start(), mo.end() - 1)
                for mo in re.finditer("vc|cv", seq)]
         assert got == exp, (seq, got, exp)
@@ -575,7 +579,7 @@ def test_cep_star_equals_regex():
     import re
     from hypothesis import given, settings, strategies as st
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _all_q_matches)
+        QStep, _scan_matches)
 
     steps = [
         QStep("a", lambda e: e["t"] == "v"),
@@ -589,8 +593,8 @@ def test_cep_star_equals_regex():
     def check(seq):
         events = [{"t": ch, "ts": i, "id": i} for i, ch in enumerate(seq)]
         got = [(m[0][1][0]["id"], m[-1][1][-1]["id"])
-               for m in _all_q_matches(events, steps, "ts", None,
-                                       "skip_past_last", "id")]
+               for m, _ in _scan_matches(events, [steps], "ts", None,
+                                         "skip_past_last")]
         exp = [(mo.start(), mo.end() - 1)
                for mo in re.finditer("vc*p", seq)]
         assert got == exp, (seq, got, exp)
@@ -611,7 +615,7 @@ def test_cep_quantifier_regex_equivalence_fuzz():
     from flink_1_11_2_with_comments_spark.plans.match_recognize import (
         _parse_pattern)
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _all_q_matches)
+        QStep, _scan_matches)
 
     def nfa_spans(pattern, s):
         braw = _parse_pattern(pattern)[0][0]
@@ -623,8 +627,8 @@ def test_cep_quantifier_regex_equivalence_fuzz():
         if not any(st.min_times > 0 for st in steps):
             return None
         events = [{"ts": i, "id": i, "c": ch} for i, ch in enumerate(s)]
-        ms = _all_q_matches(events, steps, "ts", None,
-                            "skip_past_last", "id")
+        ms = [m for m, _ in _scan_matches(events, [steps], "ts", None,
+                                          "skip_past_last")]
         return [([e for _s, r in m for e in r][0]["id"],
                  [e for _s, r in m for e in r][-1]["id"] + 1)
                 for m in ms]
@@ -660,16 +664,15 @@ def test_cep_quantifier_regex_equivalence_fuzz():
 
 def test_cep_pattern_boundaries():
     """Pattern subset boundaries raise loudly at validation: patterns
-    that can match zero rows, notFollowedBy before a min-0 step, and
-    min-0 inside PERMUTE."""
+    that can match zero rows, notFollowedBy before a min-0 step or
+    leading the pattern, and min-0 inside PERMUTE."""
     import pytest
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _permute_alts, _prepare_branches)
+        QStep, _pattern_branches, _permute_alts)
     t = lambda e: True
 
     def prep(steps):
-        return _prepare_branches(None, [], "ts", "id", steps, None,
-                                 None, False, None)
+        return _pattern_branches(steps, None, "skip_past_last")
 
     with pytest.raises(NotImplementedError, match="zero rows"):
         prep([QStep("a", t, min_times=0, max_times=None)])
@@ -678,15 +681,22 @@ def test_cep_pattern_boundaries():
               QStep("n", t, negated=True),
               QStep("b", t, min_times=0, max_times=None,
                     contiguity="strict")])
+    # a leading notFollowedBy: nothing bound before it bounds the gap
+    # (the reference cannot begin a pattern with a negation)
+    with pytest.raises(ValueError, match="notFollowedBy cannot begin"):
+        prep([QStep("n", t, negated=True), QStep("a", t)])
+    with pytest.raises(ValueError, match="notFollowedBy cannot begin"):
+        prep([QStep("a", t, min_times=0, max_times=1),
+              QStep("n", t, negated=True), QStep("b", t)])
     with pytest.raises(NotImplementedError, match="PERMUTE"):
         _permute_alts([QStep("a", t),
                        QStep("b", t, min_times=0, max_times=1)])
     # a min-0 step passes validation and stays in the single branch
-    _df, union, run_steps, alts = prep([
+    branches = prep([
         QStep("a", t), QStep("b", t, min_times=0, max_times=1,
                              contiguity="strict"),
         QStep("c", t, contiguity="strict")])
-    assert alts is None and [s.name for s in run_steps] == ["a", "b", "c"]
+    assert [[s.name for s in br] for br in branches] == [["a", "b", "c"]]
 
 
 def test_simhash_banding_pigeonhole_recall():
@@ -735,7 +745,7 @@ def test_cep_negation_equals_bruteforce():
     pair enumeration (every v..p pair with no x strictly between)."""
     from hypothesis import given, settings, strategies as st
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _all_q_matches)
+        QStep, _scan_matches)
 
     steps = [
         QStep("a", lambda e: e["t"] == "v"),
@@ -748,8 +758,8 @@ def test_cep_negation_equals_bruteforce():
     def check(seq):
         events = [{"t": ch, "ts": i, "id": i} for i, ch in enumerate(seq)]
         got = sorted((m[0][1][0]["id"], m[-1][1][-1]["id"])
-                     for m in _all_q_matches(events, steps, "ts", None,
-                                             "all", "id"))
+                     for m, _ in _scan_matches(events, [steps], "ts", None,
+                                               "all"))
         exp = sorted((i, j)
                      for i, a in enumerate(seq) if a == "v"
                      for j in range(i + 1, len(seq)) if seq[j] == "p"
@@ -1111,6 +1121,86 @@ def test_quantified_cep_stream_within_timeout_emits_quiet_key(spark):
             r.b_n) == (1, 1, 2, 3, 2)
 
 
+def _quiet_key_events(spark, types):
+    """Key 1 carries ``types`` 10 s apart; key 2 is filler traffic
+    that advances the global watermark past all of key 1."""
+    import datetime as dt
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    rows = [(1, i + 1, t0 + dt.timedelta(seconds=10 * i), et)
+            for i, et in enumerate(types)]
+    rows += [(2, 100 + i, t0 + dt.timedelta(minutes=5 + i), "other")
+             for i in range(6)]
+    return spark.createDataFrame(
+        rows, "user_id bigint, event_id bigint, ts timestamp, "
+              "event_type string")
+
+
+def test_cep_stream_strict_first_step_matches_batch(spark):
+    """A strict first step (`A B`, both Pattern.next) over a key whose
+    first event does not match: the stream scans on past that
+    position, as the batch scan does, and emits the batch matches."""
+    df = _quiet_key_events(spark, ["x", "a", "b", "x", "a", "b"])
+    steps = [
+        QStep("a", lambda ev: ev["event_type"] == "a",
+              contiguity="strict"),
+        QStep("b", lambda ev: ev["event_type"] == "b",
+              contiguity="strict"),
+    ]
+    batch = match_pattern_batch(df, ["user_id"], "ts", steps,
+                                within="1 minute",
+                                after_match="skip_past_last")
+    exp = {(r.user_id, r.a_first_id, r.b_first_id)
+           for r in batch.collect()}
+    assert exp == {(1, 2, 3), (1, 5, 6)}
+
+    stream = replay_as_stream(df, n_batches=4, order_by="ts") \
+        .withWatermark("ts", "5 seconds")
+    # within arms the event-time timer that revisits the quiet key
+    out = match_pattern_stream(stream, ["user_id"], "ts", steps,
+                               within="1 minute",
+                               after_match="skip_past_last")
+    got = {(r.user_id, r.a_first_id, r.b_first_id)
+           for r in write_stream_to_memory(
+               out, "cep_strict_first_out",
+               output_mode="append").collect()}
+    assert got == exp
+
+
+def test_pattern_api_stream_forwards_after_match(spark):
+    """Pattern.match on a stream hands ``after_match`` to the engine:
+    SKIP TO NEXT ROW gives the same rows as match_pattern_stream
+    called directly (overlapping matches from each start row), and an
+    unknown strategy raises ValueError on batch and stream alike."""
+    import pytest
+    from flink_1_11_2_with_comments_spark.streaming.pattern import Pattern
+
+    df = _quiet_key_events(spark, ["a", "a", "b"])
+    pat = (Pattern.begin("a").where(lambda ev: ev["event_type"] == "a")
+           .followed_by("b").where(lambda ev: ev["event_type"] == "b")
+           .within("1 minute"))
+
+    def stream():
+        return replay_as_stream(df, n_batches=3, order_by="ts") \
+            .withWatermark("ts", "5 seconds")
+
+    def rows(out, name):
+        return {(r.user_id, r.a_first_id, r.b_first_id)
+                for r in write_stream_to_memory(
+                    out, name, output_mode="append").collect()}
+
+    via_pattern = rows(pat.match(stream(), ["user_id"], "ts",
+                                 after_match="skip_to_next_row"),
+                       "cep_pat_next_row_out")
+    direct = rows(match_pattern_stream(stream(), ["user_id"], "ts",
+                                       pat.build(), within="1 minute",
+                                       after_match="skip_to_next_row"),
+                  "cep_direct_next_row_out")
+    assert via_pattern == direct == {(1, 1, 3), (1, 2, 3)}
+    for src in (df, stream()):
+        with pytest.raises(ValueError, match="after_match"):
+            pat.match(src, ["user_id"], "ts", after_match="bogus")
+
+
 def test_group_quantifier_unrolling():
     """(A B){m,n} / (A B)? unroll to greedy-ordered branches; unbounded
     group repetition and nesting raise (documented subset)."""
@@ -1305,13 +1395,13 @@ def test_cep_alternation_regex_equivalence_fuzz():
     """Property: alternation `A B | C D` under both SKIP PAST LAST and
     SKIP TO NEXT ROW equals the regex engine's `|` (leftmost-arm
     preference at the same start row) on random patterns — extends the
-    single-branch fuzz to the branch matcher (_all_alt_matches)."""
+    single-branch fuzz to the branch matcher (_scan_matches)."""
     import random
     import re as regex
     from flink_1_11_2_with_comments_spark.plans.match_recognize import (
         _parse_pattern)
     from flink_1_11_2_with_comments_spark.streaming.cep import (
-        QStep, _all_alt_matches, _all_q_matches)
+        QStep, _scan_matches)
 
     def build(pattern):
         branches_raw, _, _ = _parse_pattern(pattern)
@@ -1329,9 +1419,8 @@ def test_cep_alternation_regex_equivalence_fuzz():
 
     def nfa_spans(branches, s, am):
         events = [{"ts": i, "id": i, "c": ch} for i, ch in enumerate(s)]
-        ms = (_all_q_matches(events, branches[0], "ts", None, am, "id")
-              if len(branches) == 1 else
-              _all_alt_matches(events, branches, "ts", None, am, "id"))
+        ms = [m for m, _ in _scan_matches(events, branches, "ts", None,
+                                          am)]
         return [([e for _s, r in m for e in r][0]["id"],
                  [e for _s, r in m for e in r][-1]["id"] + 1)
                 for m in ms]
