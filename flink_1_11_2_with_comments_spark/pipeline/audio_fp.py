@@ -28,10 +28,8 @@ a cross product.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,21 +90,14 @@ def synthesize_audio_corpus(documents: DataFrame) -> DataFrame:
     """Per-document WAV whose CONTENT depends only on doc_id % 23
     (the cluster id) while its DURATION varies with the text length
     (6..10 windows) — the same recording at different lengths."""
-    from .multimodal import wav_build
+    from .multimodal import map_documents, wav_build
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n_windows = COMMON_WINDOWS + len(text) % 5
-                pcm = synthesize_tone_pcm(int(doc_id) % 23, n_windows)
-                rows.append({"doc_id": int(doc_id),
-                             "media": wav_build(8000, pcm)})
-            yield pd.DataFrame(rows)
+    def row(doc_id, text):
+        n_windows = COMMON_WINDOWS + len(text) % 5
+        pcm = synthesize_tone_pcm(doc_id % 23, n_windows)
+        return [{"doc_id": doc_id, "media": wav_build(8000, pcm)}]
 
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, "doc_id bigint, media binary"))
+    return map_documents(documents, row, "doc_id bigint, media binary")
 
 
 def audio_fingerprints(media: DataFrame,
@@ -114,23 +105,17 @@ def audio_fingerprints(media: DataFrame,
     """(doc_id, media WAV) -> (doc_id, signature, n_landmarks):
     map-only Arrow-batched decode + STFT + constellation — zero
     shuffle, the audio corpus never moves."""
-    from .multimodal import wav_parse
+    from .multimodal import map_rows, wav_parse
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs, counts = [], []
-            for blob in pdf[media_col]:
-                _rate, samples = wav_parse(bytes(blob))
-                hashes = peak_pair_hashes(spectral_peaks(samples))
-                sigs.append(fingerprint_signature(hashes))
-                counts.append(len(hashes))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "signature": pd.array(sigs, dtype="int64"),
-                "n_landmarks": pd.array(counts, dtype="int32")})
+    def row(doc_id, blob):
+        _rate, samples = wav_parse(blob)
+        hashes = peak_pair_hashes(spectral_peaks(samples))
+        return [{"doc_id": doc_id,
+                 "signature": fingerprint_signature(hashes),
+                 "n_landmarks": len(hashes)}]
 
-    return (media.select("doc_id", media_col).mapInPandas(
-        run, "doc_id bigint, signature bigint, n_landmarks int"))
+    return map_rows(media, ["doc_id", media_col], row,
+                    "doc_id bigint, signature bigint, n_landmarks int")
 
 
 def audio_fp_cluster_check(documents: DataFrame) -> DataFrame:

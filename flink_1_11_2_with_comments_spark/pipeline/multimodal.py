@@ -31,15 +31,63 @@ pattern is: binary column stays columnar in parquet, header fields
 extract JVM-side (predicate pushdown on dimensions!), pixel decode
 runs in executor-side Python with Arrow batches, outputs are
 fixed-width feature columns — no driver involvement.
+
+Every Python stage here (and in phash/audio_fp/video_fp) is one
+`map_rows` call: the stage supplies only its per-row function, which
+returns zero, one or several output rows (the reference's
+TableFunction.collect()); map_rows owns the Arrow batching. Decode
+and transform stages inherit their input's partitioning. Synthesizers
+go through `map_documents`, which widens the (doc_id, text) input
+only via `_sizing.widen_if_underparallel`: a provably small table
+spreads to core width, a big or unknown-size one keeps its scan width
+and no shuffle is added.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+from .._sizing import widen_if_underparallel
+
+
+def map_rows(df: DataFrame, cols: list[str],
+             fn: Callable[..., list[dict]], schema: str) -> DataFrame:
+    """Per-row Python over ``df``: one Arrow-batched mapInPandas over
+    ``df.select(*cols)`` that calls ``fn(*values)`` once per input row.
+    ``fn`` returns a list of output dicts keyed by ``schema``'s column
+    names — zero, one or several rows per input. Every batch's frame
+    carries ``schema``'s columns, so an empty batch is well-formed.
+    The stage keeps its input's partitioning (no exchange)."""
+    names = DataType.fromDDL(schema).names
+
+    def each_batch(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            yield pd.DataFrame(
+                [out for vals in zip(*(pdf[c] for c in cols))
+                 for out in fn(*vals)], columns=names)
+
+    return df.select(*cols).mapInPandas(each_batch, schema)
+
+
+def map_documents(documents: DataFrame, fn: Callable[..., list[dict]],
+                  schema: str) -> DataFrame:
+    """``map_rows`` over ``documents``' (doc_id, text) for the
+    synthesizers: CPU-bound per-document Python, so a provably small
+    input widens to core width first (widen_if_underparallel); big or
+    unknown-size input keeps its own width."""
+    docs = widen_if_underparallel(documents.select("doc_id", "text"))
+    return map_rows(docs, ["doc_id", "text"], fn, schema)
+
 
 MEDIA_SCHEMA = ("doc_id bigint, media binary, media_type string, "
                 "width int, height int, n_bytes bigint")
@@ -143,27 +191,21 @@ def extract_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
     scale (never a row-at-a-time UDF).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                if not fake_decode:
-                    decode_image(bytes(blob))  # raises: real codec absent
-                b = bytes(blob)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "n_bytes": len(b),
-                    "byte_mean": (sum(b) / len(b)) if b else 0.0,
-                    "byte_min": min(b) if b else 0,
-                    "byte_max": max(b) if b else 0,
-                    # deterministic perceptual-hash stand-in
-                    "phash": int.from_bytes(
-                        __import__("hashlib").md5(b).digest()[:8],
-                        "big", signed=False) >> 1,
-                })
-            yield pd.DataFrame(rows)
+    def row(doc_id, b):
+        if not fake_decode:
+            decode_image(b)  # raises: real codec absent
+        return [{
+            "doc_id": doc_id,
+            "n_bytes": len(b),
+            "byte_mean": (sum(b) / len(b)) if b else 0.0,
+            "byte_min": min(b) if b else 0,
+            "byte_max": max(b) if b else 0,
+            # deterministic perceptual-hash stand-in
+            "phash": int.from_bytes(hashlib.md5(b).digest()[:8],
+                                    "big", signed=False) >> 1,
+        }]
 
-    return media.mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(media, ["doc_id", "media"], row, FEATURE_SCHEMA)
 
 
 def _le(col, n: int):
@@ -292,8 +334,6 @@ PIXEL_SCHEMA = ("doc_id bigint, width int, height int, n_pixels bigint, "
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
     return (struct.pack(">I", len(data)) + ctype + data
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
 
@@ -302,8 +342,6 @@ def png_encode(width: int, height: int, rgba: bytes) -> bytes:
     """Encode RGBA pixels as a fully valid PNG (8-bit, color type 6):
     real IHDR/IDAT/IEND chunks with CRC32, zlib-compressed scanlines,
     filter type 0 per row — openable by any image viewer."""
-    import struct
-    import zlib
     assert len(rgba) == width * height * 4
     ihdr = struct.pack(">II", width, height) + bytes([8, 6, 0, 0, 0])
     stride = width * 4
@@ -365,8 +403,6 @@ def _deinterlace_adam7(raw: bytes, width: int, height: int,
     sub-images; unfilter each pass with the standard scanline logic,
     then scatter it onto the output grid with its pass stride
     (out[y0::dy, x0::dx] = pass — a numpy strided assignment)."""
-    import numpy as np
-
     out = np.zeros((height, width, bpp), dtype=np.uint8)
     pos = 0
     for x0, y0, dx, dy in _ADAM7:
@@ -392,8 +428,6 @@ def png_decode(data: bytes) -> tuple[int, int, bytes]:
     MIS-decoded a genuine Adam7 file rather than rejecting it — the
     worst failure class for a decoder that advertises real-file
     support."""
-    import struct
-    import zlib
     if data[:8] != PNG_SIGNATURE:
         raise ValueError("not a PNG")
     pos, width, height, idat = 8, None, None, b""
@@ -437,28 +471,14 @@ def deterministic_pixels(doc_id: int, width: int, height: int) -> bytes:
 def synthesize_png_pixels(documents: DataFrame) -> DataFrame:
     """Fully valid PNGs (real IDAT) per document via Arrow-batched
     mapInPandas — executor-side encode, fixed-width output schema."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, h = len(text) % 16 + 1, len(text) % 12 + 1
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "media": png_encode(
-                        w, h, deterministic_pixels(int(doc_id), w, h)),
-                    "media_type": "image/png",
-                    "width": w, "height": h, "n_bytes": 0})
-            out = pd.DataFrame(rows)
-            out["n_bytes"] = out["media"].map(len)
-            yield out
+    def row(doc_id, text):
+        w, h = len(text) % 16 + 1, len(text) % 12 + 1
+        media = png_encode(w, h, deterministic_pixels(doc_id, w, h))
+        return [{"doc_id": doc_id, "media": media,
+                 "media_type": "image/png", "width": w, "height": h,
+                 "n_bytes": len(media)}]
 
-    # CPU-bound Python encode: pin parallelism explicitly so a
-    # single-file input cannot serialize the codec loop (SCALE.md
-    # map-only-Python rule; downstream decode/resize/resample ops
-    # inherit this partitioning shuffle-free).
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, MEDIA_SCHEMA))
+    return map_documents(documents, row, MEDIA_SCHEMA)
 
 
 def decode_png_pixels(media: DataFrame,
@@ -468,26 +488,18 @@ def decode_png_pixels(media: DataFrame,
     image library needed. The former stub boundary: JPEG/DCT and
     video frame decode still require external codecs, but PNG pixels
     are now decoded for real in this container."""
-    import hashlib
+    def row(doc_id, blob):
+        w, h, px = png_decode(blob)
+        n = w * h
+        return [{"doc_id": doc_id, "width": w, "height": h,
+                 "n_pixels": n,
+                 "mean_r": round(sum(px[0::4]) / n, 6),
+                 "mean_g": round(sum(px[1::4]) / n, 6),
+                 "mean_b": round(sum(px[2::4]) / n, 6),
+                 "alpha_opaque": all(a == 255 for a in px[3::4]),
+                 "px_md5": hashlib.md5(px).hexdigest()}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[media_col]):
-                w, h, px = png_decode(bytes(blob))
-                n = w * h
-                rows.append({
-                    "doc_id": int(doc_id), "width": w, "height": h,
-                    "n_pixels": n,
-                    "mean_r": round(sum(px[0::4]) / n, 6),
-                    "mean_g": round(sum(px[1::4]) / n, 6),
-                    "mean_b": round(sum(px[2::4]) / n, 6),
-                    "alpha_opaque": all(a == 255 for a in px[3::4]),
-                    "px_md5": hashlib.md5(px).hexdigest()})
-            yield pd.DataFrame(rows)
-
-    return media.select("doc_id", media_col).mapInPandas(
-        run, PIXEL_SCHEMA)
+    return map_rows(media, ["doc_id", media_col], row, PIXEL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -504,8 +516,6 @@ def wav_build(sample_rate: int, pcm: bytes) -> bytes:
     production implementation of the header math; synthesize_wav_pcm
     and the closed-loop checks both call it, so a header-offset bug
     cannot hide in a reimplementation."""
-    import struct
-
     hdr = (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVEfmt "
            + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate,
                          sample_rate * 2, 2, 16)
@@ -517,10 +527,6 @@ def wav_parse(b: bytes):
     """RIFF/WAVE parse → (sample_rate, int16 sample array) — the ONE
     production data-chunk walk; decode_wav_samples,
     resample_pcm_linear and the closed-loop checks all call it."""
-    import struct
-
-    import numpy as np
-
     assert b[:4] == b"RIFF" and b[8:12] == b"WAVE"
     rate, = struct.unpack("<I", b[24:28])
     size, = struct.unpack("<I", b[40:44])
@@ -532,8 +538,6 @@ def sine_pcm_values(doc_id: int, n: int,
     """The deterministic test-corpus tone (frequency keyed on the doc
     id) — shared by the synthesizer and the checks' expected-value
     computation so both sides agree on the payload by construction."""
-    import math
-
     freq = 200 + (doc_id % 40) * 20
     return [int(12000 * math.sin(2 * math.pi * freq * i / sample_rate))
             for i in range(n)]
@@ -546,8 +550,6 @@ def resample_linear_kernel(x, src_rate: int, target_rate: int):
     interpolation; resample_pcm_linear and transform_check share it
     (the check's expected values are replayed scalar-by-scalar,
     independently)."""
-    import numpy as np
-
     n = len(x)
     if n < 2:  # nothing to interpolate between
         return x
@@ -565,8 +567,6 @@ def resize_nearest_kernel(px: bytes, sw: int, sh: int,
     mapping; resize_png_nearest and transform_check share it (the
     check recomputes expected pixels from the closed form,
     independently)."""
-    import numpy as np
-
     a = np.frombuffer(px, dtype=np.uint8).reshape(sh, sw, 4)
     ix = (np.arange(out_w) * sw) // out_w
     iy = (np.arange(out_h) * sh) // out_h
@@ -580,30 +580,16 @@ def synthesize_wav_pcm(documents: DataFrame,
     openable by the stdlib `wave` module (pinned in tests). Arrow-
     batched mapInPandas; the real-payload sibling of the codegen
     synthesize_wav header twin."""
-    import struct
+    def row(doc_id, text):
+        n = len(text) % 200 + 50
+        pcm = b"".join(struct.pack("<h", v)
+                       for v in sine_pcm_values(doc_id, n, sample_rate))
+        blob = wav_build(sample_rate, pcm)
+        return [{"doc_id": doc_id, "media": blob,
+                 "media_type": "audio/wav", "width": 0, "height": 0,
+                 "n_bytes": len(blob)}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text) % 200 + 50
-                pcm = b"".join(
-                    struct.pack("<h", v)
-                    for v in sine_pcm_values(int(doc_id), n, sample_rate))
-                blob = wav_build(sample_rate, pcm)
-                rows.append({"doc_id": int(doc_id), "media": blob,
-                             "media_type": "audio/wav",
-                             "width": 0, "height": 0,
-                             "n_bytes": len(blob)})
-            yield pd.DataFrame(rows)
-
-    # CPU-bound Python encode: pin parallelism explicitly so a
-    # single-file input cannot serialize the codec loop (SCALE.md
-    # map-only-Python rule; downstream decode/resize/resample ops
-    # inherit this partitioning shuffle-free).
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, MEDIA_SCHEMA))
+    return map_documents(documents, row, MEDIA_SCHEMA)
 
 
 def decode_wav_samples(media: DataFrame,
@@ -614,28 +600,18 @@ def decode_wav_samples(media: DataFrame,
     pipeline. Arrow-batched mapInPandas; no audio library —
     compressed codecs (mp3/opus) and resampling remain the env-gated
     boundary."""
-    import numpy as np
+    def row(doc_id, blob):
+        rate, x = wav_parse(blob)
+        x = x.astype(np.int64)
+        return [{"doc_id": doc_id, "sample_rate": rate,
+                 "n_samples": len(x),
+                 "mean_amp": round(float(np.abs(x).mean()), 6),
+                 "rms": round(float(np.sqrt((x * x).mean())), 6),
+                 "peak": int(np.abs(x).max()),
+                 "zero_crossings": int(
+                     np.count_nonzero(np.diff(np.signbit(x))))}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[media_col]):
-                rate, x = wav_parse(bytes(blob))
-                x = x.astype(np.int64)
-                n = len(x)
-                rows.append({
-                    "doc_id": int(doc_id), "sample_rate": int(rate),
-                    "n_samples": n,
-                    "mean_amp": round(float(np.abs(x).mean()), 6),
-                    "rms": round(float(np.sqrt((x * x).mean())), 6),
-                    "peak": int(np.abs(x).max()),
-                    "zero_crossings": int(
-                        np.count_nonzero(np.diff(np.signbit(x)))),
-                })
-            yield pd.DataFrame(rows)
-
-    return media.select("doc_id", media_col).mapInPandas(
-        run, AUDIO_SCHEMA)
+    return map_rows(media, ["doc_id", media_col], row, AUDIO_SCHEMA)
 
 
 RESIZE_SCHEMA = ("doc_id bigint, media binary, width int, height int, "
@@ -654,27 +630,15 @@ def resize_png_nearest(media: DataFrame, out_w: int, out_h: int,
     env-gated boundary; nearest-neighbor is exactly representable in
     integer index math, so the test can pin output pixels
     source-exactly: out[x, y] = src[x*sw//ow, y*sh//oh]."""
-    import hashlib
+    def row(doc_id, blob):
+        sw, sh, px = png_decode(blob)
+        raw = resize_nearest_kernel(px, sw, sh, out_w, out_h)
+        out = png_encode(out_w, out_h, raw)
+        return [{"doc_id": doc_id, "media": out, "width": out_w,
+                 "height": out_h, "n_bytes": len(out),
+                 "px_md5": hashlib.md5(raw).hexdigest()}]
 
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[media_col]):
-                sw, sh, px = png_decode(bytes(blob))
-                raw = resize_nearest_kernel(px, sw, sh, out_w, out_h)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "media": png_encode(out_w, out_h, raw),
-                    "width": out_w, "height": out_h, "n_bytes": 0,
-                    "px_md5": hashlib.md5(raw).hexdigest()})
-            out_pdf = pd.DataFrame(rows)
-            out_pdf["n_bytes"] = out_pdf["media"].map(len)
-            yield out_pdf
-
-    return media.select("doc_id", media_col).mapInPandas(
-        run, RESIZE_SCHEMA)
+    return map_rows(media, ["doc_id", media_col], row, RESIZE_SCHEMA)
 
 
 RESAMPLE_SCHEMA = ("doc_id bigint, sample_rate int, n_samples bigint, "
@@ -692,29 +656,22 @@ def resample_pcm_linear(media: DataFrame, target_rate: int,
     resampling use the sibling resample_pcm_sinc (round 13; direct
     windowed-sinc, no scipy). Arrow-batched mapInPandas, map-only,
     zero shuffle."""
-    import numpy as np
+    def row(doc_id, blob):
+        src_rate, x = wav_parse(blob)
+        y = resample_linear_kernel(x.astype(np.float64), src_rate,
+                                   target_rate)
+        return [_resample_stats(doc_id, target_rate, y)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[media_col]):
-                src_rate, x = wav_parse(bytes(blob))
-                x = x.astype(np.float64)
-                y = resample_linear_kernel(x, src_rate, target_rate)
-                n_out = len(y)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "sample_rate": int(target_rate),
-                    "n_samples": int(n_out),
-                    "mean_amp": round(float(np.abs(y).mean()), 6)
-                    if n_out else 0.0,
-                    "rms": round(float(np.sqrt((y * y).mean())), 6)
-                    if n_out else 0.0,
-                    "peak": int(np.abs(y).max()) if n_out else 0})
-            yield pd.DataFrame(rows)
+    return map_rows(media, ["doc_id", media_col], row, RESAMPLE_SCHEMA)
 
-    return media.select("doc_id", media_col).mapInPandas(
-        run, RESAMPLE_SCHEMA)
+
+def _resample_stats(doc_id: int, rate: int, y) -> dict:
+    """RESAMPLE_SCHEMA row for a resampled signal ``y``."""
+    n = len(y)
+    return {"doc_id": doc_id, "sample_rate": rate, "n_samples": n,
+            "mean_amp": round(float(np.abs(y).mean()), 6) if n else 0.0,
+            "rms": round(float(np.sqrt((y * y).mean())), 6) if n else 0.0,
+            "peak": int(np.abs(y).max()) if n else 0}
 
 
 # ---------------------------------------------------------------------------
@@ -860,7 +817,6 @@ def gif_encode(width: int, height: int, indices: bytes,
     logical screen descriptor, global color table, image descriptor,
     real LZW-compressed data in 255-byte sub-blocks, trailer —
     openable by any image viewer."""
-    import struct
     palette = palette or GIF_PALETTE16
     assert len(palette) == 16 and len(indices) == width * height
     assert all(i < 16 for i in indices)
@@ -887,7 +843,6 @@ def gif_decode(data: bytes) -> tuple[int, int, bytes]:
     de-interlaced through the four GIF89a passes (rows 0,8,16.. then
     4,12.. then 2,6.. then odd) — both former subset boundaries
     removed in round 9."""
-    import struct
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     sw, sh = struct.unpack("<HH", data[6:10])
@@ -962,53 +917,31 @@ def deterministic_indices(doc_id: int, width: int, height: int) -> bytes:
 def synthesize_gif_pixels(documents: DataFrame) -> DataFrame:
     """Fully valid GIF89a per document (real LZW data) via
     Arrow-batched mapInPandas — executor-side encode."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, h = len(text) % 21 + 4, len(text) % 17 + 4
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "media": gif_encode(
-                        w, h, deterministic_indices(int(doc_id), w, h)),
-                    "media_type": "image/gif",
-                    "width": w, "height": h, "n_bytes": 0})
-            out = pd.DataFrame(rows)
-            out["n_bytes"] = out["media"].map(len)
-            yield out
+    def row(doc_id, text):
+        w, h = len(text) % 21 + 4, len(text) % 17 + 4
+        media = gif_encode(w, h, deterministic_indices(doc_id, w, h))
+        return [{"doc_id": doc_id, "media": media,
+                 "media_type": "image/gif", "width": w, "height": h,
+                 "n_bytes": len(media)}]
 
-    # CPU-bound Python encode: pin parallelism explicitly so a
-    # single-file input cannot serialize the codec loop (SCALE.md
-    # map-only-Python rule; downstream decode/resize/resample ops
-    # inherit this partitioning shuffle-free).
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, MEDIA_SCHEMA))
+    return map_documents(documents, row, MEDIA_SCHEMA)
 
 
 def decode_gif_pixels(media: DataFrame,
                       media_col: str = "media") -> DataFrame:
     """Pixel statistics over a GIF binary column — REAL decode (pure
     Python LZW + palette), Arrow-batched mapInPandas."""
-    import hashlib
+    def row(doc_id, blob):
+        w, h, px = gif_decode(blob)
+        n = w * h
+        return [{"doc_id": doc_id, "width": w, "height": h,
+                 "n_pixels": n,
+                 "mean_r": round(sum(px[0::3]) / n, 6),
+                 "mean_g": round(sum(px[1::3]) / n, 6),
+                 "mean_b": round(sum(px[2::3]) / n, 6),
+                 "px_md5": hashlib.md5(px).hexdigest()}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[media_col]):
-                w, h, px = gif_decode(bytes(blob))
-                n = w * h
-                rows.append({
-                    "doc_id": int(doc_id), "width": w, "height": h,
-                    "n_pixels": n,
-                    "mean_r": round(sum(px[0::3]) / n, 6),
-                    "mean_g": round(sum(px[1::3]) / n, 6),
-                    "mean_b": round(sum(px[2::3]) / n, 6),
-                    "px_md5": hashlib.md5(px).hexdigest()})
-            yield pd.DataFrame(rows)
-
-    return media.select("doc_id", media_col).mapInPandas(
-        run, PIXEL_SCHEMA_GIF)
+    return map_rows(media, ["doc_id", media_col], row, PIXEL_SCHEMA_GIF)
 
 
 ROUNDTRIP_SCHEMA = ("doc_id bigint, fmt string, dim1 bigint, "
@@ -1037,58 +970,41 @@ def roundtrip_check(documents: DataFrame) -> DataFrame:
     dimension and fails the value hash. One Arrow-batched
     mapInPandas, zero shuffle — the plumbing contract of every
     multimodal op here."""
-    import math
-    import struct
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id, ln = int(doc_id), len(text)
-                # --- GIF ---
-                w, h = ln % 21 + 4, ln % 17 + 4
-                idx = deterministic_indices(doc_id, w, h)
-                dw, dh, rgb = gif_decode(gif_encode(w, h, idx))
-                exp = b"".join(bytes(GIF_PALETTE16[i]) for i in idx)
-                rows.append({"doc_id": doc_id, "fmt": "gif",
-                             "dim1": dw, "dim2": dh,
-                             "payload_ok": rgb == exp})
-                # --- PNG ---
-                w, h = ln % 16 + 1, ln % 12 + 1
-                rgba = deterministic_pixels(doc_id, w, h)
-                pw, ph, px = png_decode(png_encode(w, h, rgba))
-                rows.append({"doc_id": doc_id, "fmt": "png",
-                             "dim1": pw, "dim2": ph,
-                             "payload_ok": px == rgba})
-                # --- WAV: the PRODUCTION container path end-to-end —
-                # sine_pcm_values (synthesize_wav_pcm's payload) →
-                # wav_build (its RIFF header math) → wav_parse
-                # (decode_wav_samples' chunk walk) — compared against
-                # an INDEPENDENTLY recomputed scalar sine replay, so a
-                # chunk offset / byte-order / width / tone-formula bug
-                # in any of those production functions flips the flag.
-                rate, n = 8000, ln % 200 + 50
-                expect = [int(12000 * math.sin(
-                    2 * math.pi * (200 + (doc_id % 40) * 20)
-                    * i / rate)) for i in range(n)]
-                pcm = b"".join(struct.pack("<h", v)
-                               for v in sine_pcm_values(doc_id, n, rate))
-                drate, got = wav_parse(wav_build(rate, pcm))
-                rows.append({"doc_id": doc_id, "fmt": "wav",
-                             "dim1": int(drate),
-                             "dim2": len(got),
-                             "payload_ok": got.tolist() == expect})
-            yield pd.DataFrame(rows, columns=["doc_id", "fmt", "dim1",
-                                              "dim2", "payload_ok"])
+    def row(doc_id, text):
+        ln = len(text)
+        # --- GIF ---
+        w, h = ln % 21 + 4, ln % 17 + 4
+        idx = deterministic_indices(doc_id, w, h)
+        dw, dh, rgb = gif_decode(gif_encode(w, h, idx))
+        exp = b"".join(bytes(GIF_PALETTE16[i]) for i in idx)
+        # --- PNG ---
+        w, h = ln % 16 + 1, ln % 12 + 1
+        rgba = deterministic_pixels(doc_id, w, h)
+        pw, ph, px = png_decode(png_encode(w, h, rgba))
+        # --- WAV: the PRODUCTION container path end-to-end —
+        # sine_pcm_values (synthesize_wav_pcm's payload) → wav_build
+        # (its RIFF header math) → wav_parse (decode_wav_samples' chunk
+        # walk) — compared against an INDEPENDENTLY recomputed scalar
+        # sine replay, so a chunk offset / byte-order / width /
+        # tone-formula bug in any of those production functions flips
+        # the flag.
+        rate, n = 8000, ln % 200 + 50
+        expect = [int(12000 * math.sin(
+            2 * math.pi * (200 + (doc_id % 40) * 20) * i / rate))
+            for i in range(n)]
+        pcm = b"".join(struct.pack("<h", v)
+                       for v in sine_pcm_values(doc_id, n, rate))
+        drate, got = wav_parse(wav_build(rate, pcm))
+        return [
+            {"doc_id": doc_id, "fmt": "gif", "dim1": dw, "dim2": dh,
+             "payload_ok": rgb == exp},
+            {"doc_id": doc_id, "fmt": "png", "dim1": pw, "dim2": ph,
+             "payload_ok": px == rgba},
+            {"doc_id": doc_id, "fmt": "wav", "dim1": drate,
+             "dim2": len(got), "payload_ok": got.tolist() == expect}]
 
-    # CPU-bound Python stage: a single small parquet file would give
-    # ONE input partition and serialize every codec call — pin the
-    # parallelism explicitly (the CEP flag-projection doctrine;
-    # exempt from AQE coalescing). The shuffled payload is only
-    # (doc_id, text).
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, ROUNDTRIP_SCHEMA))
+    return map_documents(documents, row, ROUNDTRIP_SCHEMA)
 
 
 def transform_check(documents: DataFrame, out_w: int = 8,
@@ -1113,77 +1029,56 @@ def transform_check(documents: DataFrame, out_w: int = 8,
         (n-1)*target//src + 1, dim2 = n — both relational.
 
     One Arrow-batched mapInPandas, zero shuffle."""
-    import math
-    import struct
 
-    import numpy as np
+    def row(doc_id, text):
+        ln = len(text)
+        # --- PNG nearest-neighbor resize: the PRODUCTION pipeline —
+        # png_encode → png_decode → resize_nearest_kernel
+        # (resize_png_nearest's exact index mapping) → re-encode →
+        # decode; expected pixels come from the independent closed
+        # form below.
+        sw, sh = ln % 16 + 1, ln % 12 + 1
+        rgba = deterministic_pixels(doc_id, sw, sh)
+        dw, dh, px = png_decode(png_encode(sw, sh, rgba))
+        rw, rh, rpx = png_decode(png_encode(
+            out_w, out_h, resize_nearest_kernel(px, dw, dh, out_w, out_h)))
+        exp = bytearray()
+        for y in range(out_h):
+            for x in range(out_w):
+                gx, gy = (x * sw) // out_w, (y * sh) // out_h
+                exp += bytes(((gx * 7 + doc_id) % 256,
+                              (gy * 13 + doc_id) % 256,
+                              (gx * gy + 3 * doc_id) % 256, 255))
+        # --- WAV linear resample: the PRODUCTION path —
+        # sine_pcm_values → wav_build → wav_parse →
+        # resample_linear_kernel (resample_pcm_linear's interpolation);
+        # expected values are the independent scalar replay below.
+        src_rate, n = 8000, ln % 200 + 50
+        vals = [int(12000 * math.sin(
+            2 * math.pi * (200 + (doc_id % 40) * 20) * i / src_rate))
+            for i in range(n)]
+        pcm = b"".join(struct.pack("<h", v)
+                       for v in sine_pcm_values(doc_id, n, src_rate))
+        prate, xi = wav_parse(wav_build(src_rate, pcm))
+        y = resample_linear_kernel(xi.astype(np.float64), prate,
+                                   target_rate)
+        n_out = (n - 1) * target_rate // src_rate + 1
+        ok = len(y) == n_out
+        for i in range(n_out):  # independent scalar replay
+            t = i * (src_rate / target_rate)
+            j = min(int(t), n - 2)
+            f = t - j
+            if y[i] != vals[j] + f * (vals[j + 1] - vals[j]):
+                ok = False
+                break
+        return [
+            {"doc_id": doc_id, "fmt": "png_resize", "dim1": sw,
+             "dim2": sh, "payload_ok": (rw, rh) == (out_w, out_h)
+             and rpx == bytes(exp)},
+            {"doc_id": doc_id, "fmt": "wav_resample", "dim1": n_out,
+             "dim2": n, "payload_ok": ok}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id, ln = int(doc_id), len(text)
-                # --- PNG nearest-neighbor resize: the PRODUCTION
-                # pipeline — png_encode → png_decode →
-                # resize_nearest_kernel (resize_png_nearest's exact
-                # index mapping) → re-encode → decode; expected pixels
-                # come from the independent closed form below.
-                sw, sh = ln % 16 + 1, ln % 12 + 1
-                rgba = deterministic_pixels(doc_id, sw, sh)
-                dw, dh, px = png_decode(png_encode(sw, sh, rgba))
-                rw, rh, rpx = png_decode(png_encode(
-                    out_w, out_h,
-                    resize_nearest_kernel(px, dw, dh, out_w, out_h)))
-                exp = bytearray()
-                for y in range(out_h):
-                    for x in range(out_w):
-                        gx, gy = (x * sw) // out_w, (y * sh) // out_h
-                        exp += bytes(((gx * 7 + doc_id) % 256,
-                                      (gy * 13 + doc_id) % 256,
-                                      (gx * gy + 3 * doc_id) % 256,
-                                      255))
-                rows.append({"doc_id": doc_id, "fmt": "png_resize",
-                             "dim1": sw, "dim2": sh,
-                             "payload_ok": (rw, rh) == (out_w, out_h)
-                             and rpx == bytes(exp)})
-                # --- WAV linear resample: the PRODUCTION path —
-                # sine_pcm_values → wav_build → wav_parse →
-                # resample_linear_kernel (resample_pcm_linear's
-                # interpolation); expected values are the independent
-                # scalar replay below.
-                src_rate, n = 8000, ln % 200 + 50
-                vals = [int(12000 * math.sin(
-                    2 * math.pi * (200 + (doc_id % 40) * 20)
-                    * i / src_rate)) for i in range(n)]
-                pcm = b"".join(struct.pack("<h", v)
-                               for v in sine_pcm_values(doc_id, n,
-                                                        src_rate))
-                prate, xi = wav_parse(wav_build(src_rate, pcm))
-                y = resample_linear_kernel(xi.astype(np.float64),
-                                           prate, target_rate)
-                n_out = (n - 1) * target_rate // src_rate + 1
-                ok = len(y) == n_out
-                for i in range(n_out):  # independent scalar replay
-                    t = i * (src_rate / target_rate)
-                    j = min(int(t), n - 2)
-                    f = t - j
-                    if y[i] != vals[j] + f * (vals[j + 1] - vals[j]):
-                        ok = False
-                        break
-                rows.append({"doc_id": doc_id, "fmt": "wav_resample",
-                             "dim1": n_out, "dim2": n,
-                             "payload_ok": ok})
-            yield pd.DataFrame(rows, columns=["doc_id", "fmt", "dim1",
-                                              "dim2", "payload_ok"])
-
-    # CPU-bound Python stage: a single small parquet file would give
-    # ONE input partition and serialize every codec call — pin the
-    # parallelism explicitly (the CEP flag-projection doctrine;
-    # exempt from AQE coalescing). The shuffled payload is only
-    # (doc_id, text).
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, ROUNDTRIP_SCHEMA))
+    return map_documents(documents, row, ROUNDTRIP_SCHEMA)
 
 
 PIXEL_CHECK_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -1198,20 +1093,11 @@ def _expected_md5(documents: DataFrame, per_doc) -> DataFrame:
     production pipeline (including the synthesizer formulas) shows up
     as a mismatch rather than cancelling out. `per_doc(doc_id, ln)`
     returns the expected raw pixel bytes."""
-    import hashlib
+    def row(doc_id, text):
+        px = per_doc(doc_id, len(text))
+        return [{"doc_id": doc_id, "e_md5": hashlib.md5(px).hexdigest()}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                px = per_doc(int(doc_id), len(text))
-                rows.append({"doc_id": int(doc_id),
-                             "e_md5": hashlib.md5(px).hexdigest()})
-            yield pd.DataFrame(rows)
-
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, "doc_id bigint, e_md5 string"))
+    return map_documents(documents, row, "doc_id bigint, e_md5 string")
 
 
 def pixel_decode_check(documents: DataFrame) -> DataFrame:
@@ -1300,36 +1186,28 @@ def synthesize_jpeg(documents: DataFrame,
     mapInPandas shape as the PNG/GIF synthesizers)."""
     from .jpeg import jpeg_encode, jpeg_encode_color
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, h, ncomp, px = _jpeg_field(int(doc_id), len(text))
-                d = int(doc_id)
-                # mode-2 docs are 4:2:0; mode-1 docs are 4:4:4 except
-                # every 7th, which exercises 4:2:2 (r14)
-                sub = ("4:2:0" if d % 3 == 2
-                       else "4:2:2" if (d % 3 == 1 and d % 7 == 0)
-                       else "4:4:4")
-                prog = int(doc_id) % 5 == 0
-                ri = 2 if int(doc_id) % 2 else 0
-                media = (jpeg_encode(w, h, px, quality,
-                                     restart_interval=ri,
-                                     progressive=prog)
-                         if ncomp == 1
-                         else jpeg_encode_color(w, h, px, quality,
-                                                subsampling=sub,
-                                                restart_interval=ri,
-                                                progressive=prog))
-                rows.append({"doc_id": int(doc_id), "media": media,
-                             "width": w, "height": h, "ncomp": ncomp})
-            yield pd.DataFrame(rows)
+    def row(d, text):
+        w, h, ncomp, px = _jpeg_field(d, len(text))
+        # mode-2 docs are 4:2:0; mode-1 docs are 4:4:4 except every
+        # 7th, which exercises 4:2:2 (r14)
+        sub = ("4:2:0" if d % 3 == 2
+               else "4:2:2" if (d % 3 == 1 and d % 7 == 0)
+               else "4:4:4")
+        prog = d % 5 == 0
+        ri = 2 if d % 2 else 0
+        media = (jpeg_encode(w, h, px, quality, restart_interval=ri,
+                             progressive=prog)
+                 if ncomp == 1
+                 else jpeg_encode_color(w, h, px, quality,
+                                        subsampling=sub,
+                                        restart_interval=ri,
+                                        progressive=prog))
+        return [{"doc_id": d, "media": media, "width": w, "height": h,
+                 "ncomp": ncomp}]
 
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(
-                run, "doc_id bigint, media binary, width int, "
-                     "height int, ncomp int"))
+    return map_documents(documents, row,
+                         "doc_id bigint, media binary, width int, "
+                         "height int, ncomp int")
 
 
 def jpeg_roundtrip_check(documents: DataFrame, quality: int = 90,
@@ -1350,40 +1228,27 @@ def jpeg_roundtrip_check(documents: DataFrame, quality: int = 90,
     regression in the DCT, quantization, zigzag, Huffman coding,
     byte stuffing, color conversion, MCU interleave, or marker
     layout flips decode_ok."""
-    import numpy as np
-
     from .jpeg import jpeg_decode_any
 
-    enc = synthesize_jpeg(documents, quality)
+    def row(doc_id, media, w, h, nc):
+        dw, dh, dnc, px = jpeg_decode_any(media)
+        ok = (dw, dh, dnc) == (w, h, nc)
+        if ok:
+            # expectation replayed from the closed form, independent
+            # of every codec path
+            exp = np.frombuffer(_jpeg_field_from_dims(doc_id, dw, dh)[3],
+                                dtype=np.uint8).astype(np.int64)
+            got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+            tol = tol_gray if dnc == 1 else tol_color
+            ok = (got.shape == exp.shape
+                  and bool(np.max(np.abs(got - exp)) <= tol))
+        return [{"doc_id": doc_id, "width": w, "height": h,
+                 "n_pixels": w * h, "decode_ok": bool(ok)}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, media, w, h, nc in zip(
-                    pdf["doc_id"], pdf["media"], pdf["width"],
-                    pdf["height"], pdf["ncomp"]):
-                dw, dh, dnc, px = jpeg_decode_any(bytes(media))
-                ok = (dw, dh, dnc) == (int(w), int(h), int(nc))
-                if ok:
-                    # expectation replayed from the closed form,
-                    # independent of every codec path
-                    exp = np.frombuffer(
-                        _jpeg_field_from_dims(int(doc_id), dw, dh)[3],
-                        dtype=np.uint8).astype(np.int64)
-                    got = np.frombuffer(px, dtype=np.uint8) \
-                        .astype(np.int64)
-                    tol = tol_gray if dnc == 1 else tol_color
-                    ok = (got.shape == exp.shape
-                          and bool(np.max(np.abs(got - exp)) <= tol))
-                rows.append({"doc_id": int(doc_id), "width": int(w),
-                             "height": int(h),
-                             "n_pixels": int(w) * int(h),
-                             "decode_ok": bool(ok)})
-            yield pd.DataFrame(rows)
-
-    return enc.mapInPandas(
-        run, "doc_id bigint, width int, height int, n_pixels bigint, "
-             "decode_ok boolean")
+    return map_rows(synthesize_jpeg(documents, quality),
+                    ["doc_id", "media", "width", "height", "ncomp"], row,
+                    "doc_id bigint, width int, height int, "
+                    "n_pixels bigint, decode_ok boolean")
 
 
 def _jpeg_field_from_dims(doc_id: int, w: int,
@@ -1409,8 +1274,6 @@ def _flac_field(doc_id: int, text_len: int):
     distinct subframe choices — a smooth ramp (FIXED predictors), a
     flat clip (CONSTANT), and a quadratic wrap that is effectively
     incompressible (VERBATIM / high rice params)."""
-    import numpy as np
-
     n = text_len % 400 + 50
     channels = doc_id % 2 + 1
     sample_rate = 8000 + (doc_id % 3) * 4000
@@ -1432,23 +1295,15 @@ def synthesize_flac(documents: DataFrame) -> DataFrame:
     PNG/GIF/JPEG synthesizers (pipeline/flac.py flac_encode)."""
     from .flac import flac_encode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n, ch, sr, pcm = _flac_field(int(doc_id), len(text))
-                media = flac_encode(pcm, sr, channels=ch,
-                                    block_size=192)
-                rows.append({"doc_id": int(doc_id), "media": media,
-                             "n_samples": n, "channels": ch,
-                             "sample_rate": sr})
-            yield pd.DataFrame(rows)
+    def row(doc_id, text):
+        n, ch, sr, pcm = _flac_field(doc_id, len(text))
+        return [{"doc_id": doc_id,
+                 "media": flac_encode(pcm, sr, channels=ch, block_size=192),
+                 "n_samples": n, "channels": ch, "sample_rate": sr}]
 
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(
-                run, "doc_id bigint, media binary, n_samples int, "
-                     "channels int, sample_rate int"))
+    return map_documents(documents, row,
+                         "doc_id bigint, media binary, n_samples int, "
+                         "channels int, sample_rate int")
 
 
 def flac_roundtrip_check(documents: DataFrame) -> DataFrame:
@@ -1467,37 +1322,25 @@ def flac_roundtrip_check(documents: DataFrame) -> DataFrame:
     face."""
     from .flac import flac_decode
 
-    enc = synthesize_flac(documents)
+    def row(doc_id, media, n, ch, sr):
+        dsr, dch, dbps, pcm = flac_decode(media)
+        ok = ((dsr, dch, dbps) == (sr, ch, 16)
+              and pcm == _flac_field_pcm(doc_id, n, ch))
+        return [{"doc_id": doc_id, "n_samples": n, "channels": ch,
+                 "sample_rate": sr, "n_frames": (n + 191) // 192,
+                 "decode_ok": bool(ok)}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, media, n, ch, sr in zip(
-                    pdf["doc_id"], pdf["media"], pdf["n_samples"],
-                    pdf["channels"], pdf["sample_rate"]):
-                dsr, dch, dbps, pcm = flac_decode(bytes(media))
-                exp = _flac_field_pcm(int(doc_id), int(n), int(ch))
-                ok = ((dsr, dch, dbps) == (int(sr), int(ch), 16)
-                      and pcm == exp)
-                rows.append({"doc_id": int(doc_id),
-                             "n_samples": int(n),
-                             "channels": int(ch),
-                             "sample_rate": int(sr),
-                             "n_frames": (int(n) + 191) // 192,
-                             "decode_ok": bool(ok)})
-            yield pd.DataFrame(rows)
-
-    return enc.mapInPandas(
-        run, "doc_id bigint, n_samples int, channels int, "
-             "sample_rate int, n_frames int, decode_ok boolean")
+    return map_rows(synthesize_flac(documents),
+                    ["doc_id", "media", "n_samples", "channels",
+                     "sample_rate"], row,
+                    "doc_id bigint, n_samples int, channels int, "
+                    "sample_rate int, n_frames int, decode_ok boolean")
 
 
 def _flac_field_pcm(doc_id: int, n: int, channels: int) -> bytes:
     """_flac_field's PCM with the sample count given directly (the
     check stage knows it from the synth row, independent of the
     decode path under test)."""
-    import numpy as np
-
     base = doc_id % 97
     i = np.arange(n * channels, dtype=np.int64)
     if doc_id % 3 == 0:
@@ -1528,8 +1371,6 @@ def resample_sinc_kernel(x, src_rate: int, target_rate: int,
     scipy — so it runs inside the Arrow-batched executors like every
     other production kernel here; a scalar pure-Python reference
     replays it exactly in tests."""
-    import numpy as np
-
     n = len(x)
     if n < 2:
         return x
@@ -1559,29 +1400,13 @@ def resample_pcm_sinc(media: DataFrame, target_rate: int,
     resamplers remain out of scope, this is the direct-form
     evaluation). Arrow-batched mapInPandas, map-only, zero
     shuffle."""
-    import numpy as np
+    def row(doc_id, blob):
+        src_rate, x = wav_parse(blob)
+        y = resample_sinc_kernel(x.astype(np.float64), src_rate,
+                                 target_rate, taps)
+        return [_resample_stats(doc_id, target_rate, y)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[media_col]):
-                src_rate, x = wav_parse(bytes(blob))
-                y = resample_sinc_kernel(x.astype(np.float64),
-                                         src_rate, target_rate, taps)
-                n_out = len(y)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "sample_rate": int(target_rate),
-                    "n_samples": int(n_out),
-                    "mean_amp": round(float(np.abs(y).mean()), 6)
-                    if n_out else 0.0,
-                    "rms": round(float(np.sqrt((y * y).mean())), 6)
-                    if n_out else 0.0,
-                    "peak": int(np.abs(y).max()) if n_out else 0})
-            yield pd.DataFrame(rows)
-
-    return media.select("doc_id", media_col).mapInPandas(
-        run, RESAMPLE_SCHEMA)
+    return map_rows(media, ["doc_id", media_col], row, RESAMPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1597,24 +1422,16 @@ def synthesize_mjpeg(documents: DataFrame,
     in-repo implementations."""
     from .mjpeg_avi import mjpeg_synthesize
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ln = len(text)
-                w, h = ln % 16 + 1, ln % 12 + 1
-                n = ln % 5 + 2
-                rows.append({"doc_id": int(doc_id),
-                             "media": mjpeg_synthesize(
-                                 w, h, n, int(doc_id), quality),
-                             "width": w, "height": h, "n_frames": n})
-            yield pd.DataFrame(rows)
+    def row(doc_id, text):
+        ln = len(text)
+        w, h, n = ln % 16 + 1, ln % 12 + 1, ln % 5 + 2
+        return [{"doc_id": doc_id,
+                 "media": mjpeg_synthesize(w, h, n, doc_id, quality),
+                 "width": w, "height": h, "n_frames": n}]
 
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(
-                run, "doc_id bigint, media binary, width int, "
-                     "height int, n_frames int"))
+    return map_documents(documents, row,
+                         "doc_id bigint, media binary, width int, "
+                         "height int, n_frames int")
 
 
 def mjpeg_frame_check(documents: DataFrame, every: int = 2,
@@ -1627,48 +1444,32 @@ def mjpeg_frame_check(documents: DataFrame, every: int = 2,
     ramp replayed independently. decode_ok requires container dims,
     frame count, sampled-frame indices, per-frame dims, and the
     per-frame error bound to ALL hold."""
-    import numpy as np
-
     from .mjpeg_avi import avi_parse, mjpeg_sample_frames
 
-    enc = synthesize_mjpeg(documents, quality)
+    def row(doc_id, blob, w, h, n):
+        pw, ph, _fps, raw = avi_parse(blob)
+        sampled = mjpeg_sample_frames(blob, every=every)
+        ok = ((pw, ph, len(raw)) == (w, h, n)
+              and [s[0] for s in sampled] == list(range(0, n, every)))
+        if ok:
+            base = doc_id % 64
+            for ix, fw, fh, px in sampled:
+                exp = np.array(
+                    [v for y in range(fh) for x in range(fw)
+                     for v in ((20 + base + 2 * ix + 2 * x + y) & 0xFF,
+                               (40 + base + 2 * ix + x + 2 * y) & 0xFF,
+                               (60 + base + 2 * ix + x + y) & 0xFF)],
+                    dtype=np.int64)
+                got = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+                if (fw, fh) != (w, h) or got.shape != exp.shape \
+                        or np.max(np.abs(got - exp)) > tol:
+                    ok = False
+                    break
+        return [{"doc_id": doc_id, "n_frames": n,
+                 "n_sampled": (n + every - 1) // every, "width": w,
+                 "height": h, "decode_ok": bool(ok)}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, media, w, h, n in zip(
-                    pdf["doc_id"], pdf["media"], pdf["width"],
-                    pdf["height"], pdf["n_frames"]):
-                blob = bytes(media)
-                pw, ph, _fps, raw = avi_parse(blob)
-                sampled = mjpeg_sample_frames(blob, every=every)
-                ok = ((pw, ph, len(raw)) == (int(w), int(h), int(n))
-                      and [s[0] for s in sampled]
-                      == list(range(0, int(n), every)))
-                if ok:
-                    base = int(doc_id) % 64
-                    for ix, fw, fh, px in sampled:
-                        exp = np.array(
-                            [v for y in range(fh) for x in range(fw)
-                             for v in (
-                                 (20 + base + 2 * ix + 2 * x + y) & 0xFF,
-                                 (40 + base + 2 * ix + x + 2 * y) & 0xFF,
-                                 (60 + base + 2 * ix + x + y) & 0xFF)],
-                            dtype=np.int64)
-                        got = np.frombuffer(px, dtype=np.uint8) \
-                            .astype(np.int64)
-                        if (fw, fh) != (int(w), int(h)) \
-                                or got.shape != exp.shape \
-                                or np.max(np.abs(got - exp)) > tol:
-                            ok = False
-                            break
-                rows.append({"doc_id": int(doc_id),
-                             "n_frames": int(n),
-                             "n_sampled": (int(n) + every - 1) // every,
-                             "width": int(w), "height": int(h),
-                             "decode_ok": bool(ok)})
-            yield pd.DataFrame(rows)
-
-    return enc.mapInPandas(
-        run, "doc_id bigint, n_frames int, n_sampled int, width int, "
-             "height int, decode_ok boolean")
+    return map_rows(synthesize_mjpeg(documents, quality),
+                    ["doc_id", "media", "width", "height", "n_frames"],
+                    row, "doc_id bigint, n_frames int, n_sampled int, "
+                         "width int, height int, decode_ok boolean")

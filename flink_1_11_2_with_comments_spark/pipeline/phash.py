@@ -29,10 +29,7 @@ non-adversarial hash distribution.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -93,25 +90,19 @@ def phash_column(media: DataFrame, media_col: str = "media",
     map-only compute — zero shuffle, the corpus never moves. decode
     defaults to the in-repo PNG decoder; any callable
     bytes -> (w, h, rgba bytes) slots in."""
+    from .multimodal import map_rows
     if decode is None:
         from .multimodal import png_decode as decode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = []
-            for blob in pdf[media_col]:
-                w, h, rgba = decode(bytes(blob))
-                px = np.frombuffer(rgba, np.uint8).reshape(h, w, 4)
-                luma = (0.299 * px[..., 0] + 0.587 * px[..., 1]
-                        + 0.114 * px[..., 2])
-                # map the unsigned 64-bit hash into bigint range
-                hashes.append(phash64(luma) - (1 << 63))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "phash": pd.array(hashes,
-                                                  dtype="int64")})
+    def row(doc_id, blob):
+        w, h, rgba = decode(blob)
+        px = np.frombuffer(rgba, np.uint8).reshape(h, w, 4)
+        luma = 0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
+        # map the unsigned 64-bit hash into bigint range
+        return [{"doc_id": doc_id, "phash": phash64(luma) - (1 << 63)}]
 
-    return (media.select("doc_id", media_col)
-            .mapInPandas(run, "doc_id bigint, phash bigint"))
+    return map_rows(media, ["doc_id", media_col], row,
+                    "doc_id bigint, phash bigint")
 
 
 def phash_bands(hashes: DataFrame, n_bands: int = 4) -> DataFrame:
@@ -149,25 +140,16 @@ def synthesize_phash_corpus(documents: DataFrame) -> DataFrame:
     box area-resize inverts a block upscale exactly, so every render
     of a tile hashes IDENTICALLY and clusters are exactly the pat
     groups — the closed form a SQL oracle can state."""
-    from .multimodal import png_encode
+    from .multimodal import map_documents, png_encode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                sx, sy = len(text) % 3 + 1, len(text) % 2 + 1
-                t = np.repeat(np.repeat(_phash_tile(int(doc_id) % 23),
-                                        sy, 0), sx, 1)
-                h, w = t.shape
-                rgba = np.dstack([t, t, t,
-                                  np.full_like(t, 255)]).tobytes()
-                rows.append({"doc_id": int(doc_id),
-                             "media": png_encode(w, h, rgba)})
-            yield pd.DataFrame(rows)
+    def row(doc_id, text):
+        sx, sy = len(text) % 3 + 1, len(text) % 2 + 1
+        t = np.repeat(np.repeat(_phash_tile(doc_id % 23), sy, 0), sx, 1)
+        h, w = t.shape
+        rgba = np.dstack([t, t, t, np.full_like(t, 255)]).tobytes()
+        return [{"doc_id": doc_id, "media": png_encode(w, h, rgba)}]
 
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, "doc_id bigint, media binary"))
+    return map_documents(documents, row, "doc_id bigint, media binary")
 
 
 def phash_cluster_check(documents: DataFrame) -> DataFrame:

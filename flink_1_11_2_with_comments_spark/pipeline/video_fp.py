@@ -39,10 +39,8 @@ as every other dedup operator in this package.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -152,21 +150,15 @@ def synthesize_video_corpus(documents: DataFrame) -> DataFrame:
     doc_id % 23 (the cluster id) while its DURATION (6..10 frames)
     and header fps vary with the text length — the same footage
     published at different lengths/rates."""
+    from .multimodal import map_documents
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = COMMON_FRAMES + len(text) % 5
-                fps = 8 + len(text) % 7
-                rows.append({"doc_id": int(doc_id),
-                             "media": synthesize_video_clip(
-                                 int(doc_id) % 23, n, fps=fps)})
-            yield pd.DataFrame(rows)
+    def row(doc_id, text):
+        n = COMMON_FRAMES + len(text) % 5
+        fps = 8 + len(text) % 7
+        return [{"doc_id": doc_id,
+                 "media": synthesize_video_clip(doc_id % 23, n, fps=fps)}]
 
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    return (documents.select("doc_id", "text").repartition(par)
-            .mapInPandas(run, "doc_id bigint, media binary"))
+    return map_documents(documents, row, "doc_id bigint, media binary")
 
 
 def video_fingerprints(media: DataFrame,
@@ -174,22 +166,15 @@ def video_fingerprints(media: DataFrame,
     """(doc_id, media AVI) -> (doc_id, signature, n_frames):
     map-only Arrow-batched container walk + prefix frame decode +
     pHash — zero shuffle, the video corpus never moves."""
+    from .multimodal import map_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs, counts = [], []
-            for blob in pdf[media_col]:
-                hashes, n = frame_phashes(bytes(blob),
-                                          limit=SIGNATURE_FRAMES)
-                sigs.append(clip_signature(hashes))
-                counts.append(n)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "signature": pd.array(sigs, dtype="int64"),
-                "n_frames": pd.array(counts, dtype="int32")})
+    def row(doc_id, blob):
+        hashes, n = frame_phashes(blob, limit=SIGNATURE_FRAMES)
+        return [{"doc_id": doc_id, "signature": clip_signature(hashes),
+                 "n_frames": n}]
 
-    return (media.select("doc_id", media_col).mapInPandas(
-        run, "doc_id bigint, signature bigint, n_frames int"))
+    return map_rows(media, ["doc_id", media_col], row,
+                    "doc_id bigint, signature bigint, n_frames int")
 
 
 def video_fp_cluster_check(documents: DataFrame) -> DataFrame:

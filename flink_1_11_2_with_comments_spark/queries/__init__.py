@@ -49,12 +49,13 @@ _PRIORITY: tuple[str, ...] = (
     # cover a change to the read path of the whole registry, so the
     # other 294 are not listed here; tier-1 test_oracle_parity
     # re-checks every oracle query exactly.
-    # Re-hashed since, all six already in this window:
+    # Re-hashed since, all six in the window at the time:
     # dedup_minhash_lsh and dedup_cluster_canonical (one MinHash
     # banding chain, _minhash_lsh_jaccard), the two PCA faces
     # (MATERIALIZED CTEs in the shared oracle text), and
     # graph_connected_components and graph_hits (_loop_edges sizes
-    # by est_input_bytes; their plans are unchanged).
+    # by est_input_bytes; their plans are unchanged). The PCA faces
+    # and graph_hits left it when the media block (m) took the tail.
     # (r0) the nine benchmark queries, then the TableEnvironment
     # faces, whose hashes missed everything their constructor and
     # sql_query call until the hash walked class methods. One NFA for
@@ -90,58 +91,38 @@ _PRIORITY: tuple[str, ...] = (
     "match_recognize_min0_leading",
     "match_recognize_min0_trailing",
     "temporal_join_event_sql",
+    # (m) the 20 media faces, re-hashed when their 25 hand-written
+    # mapInPandas loops became map_rows calls and the synthesizers'
+    # unconditional repartition became widen_if_underparallel (plans
+    # and rows unchanged at sf0.01).
+    "multimodal_features",
+    "multimodal_decode",
+    "multimodal_metadata",
+    "multimodal_audio_decode",
+    "multimodal_video_boxes",
+    "multimodal_pixel_decode",
+    "multimodal_audio_samples",
+    "multimodal_image_resize",
+    "multimodal_audio_resample",
+    "multimodal_gif_decode",
+    "multimodal_roundtrip_check",
+    "multimodal_transform_check",
+    "multimodal_pixel_check",
+    "multimodal_gif_check",
+    "multimodal_jpeg_check",
+    "multimodal_mjpeg_frames",
+    "multimodal_flac_check",
+    "dedup_image_phash",
+    "dedup_audio_fingerprint",
+    "dedup_video_fingerprint",
     # (r1) the round-15 window, in its order, less the two benchmark
-    # queries moved to (r0):
-    # (a0) faces re-hashed by the frontier-loop consolidation: graph
-    # SSSP and connected components (dedup's clustering too) now run
-    # through operators/graph.pregel, and graph_k_core's doc names
-    # k_core_pairs. graph_connected_components and graph_hits, also
-    # re-hashed, already sit in (a)/(a2) below.
+    # queries moved to (r0), cut to its first three entries when (m)
+    # took the tail: faces re-hashed by the frontier-loop
+    # consolidation (graph SSSP and dedup's clustering now run through
+    # operators/graph.pregel).
     "graph_sssp",
     "graph_pregel_sssp",
     "dedup_cluster_canonical",
-    "graph_k_core",
-    # (a) queries whose plan changed in this optimization round —
-    # the guarded single-split-scan widens (corpus_contamination
-    # 4.28->1.15s, boilerplate_ngrams 3.75->0.66s,
-    # corpus_bigram_logprob 2.52->0.49s, all best-of-3 sf0.1, rows
-    # identical) and the faces examined/touched for the r15 asks:
-    "corpus_contamination",
-    "boilerplate_ngrams",
-    "corpus_bigram_logprob",
-    "graph_hits",
-    "dedup_simhash_pairs",
-    "streaming_iterate_halving",
-    "streaming_iterate_chain_walk",  # shares the rewritten iterate_stream
-    # (a2) queries flagged by the shared-sizing refactor (the
-    # optimizer-stats guard now lives in _sizing.py — one definition,
-    # int()-wrapped, unknown-sentinel-guarded; plans unchanged, but
-    # the manifest hash is transitive so they re-verify) and by the
-    # LSH dims-overflow assert (fails loudly when an embedding is
-    # longer than the folded plane matrix instead of silently
-    # zeroing the bucket bit):
-    "pipeline_end_to_end",
-    "corpus_source_overlap",
-    "embedding_pca_covariance",
-    "embedding_pca_project_top1",
-    "dedup_embedding_cosine",
-    "ann_lsh_buckets",
-    # (a3) the PQ and IVF faces: guarded widen before the interpreted
-    # block-distance folds in pq_encode and the centroid argmin fold
-    # in ivf._fold_assign (same single-split-scan class;
-    # ann_ivf_topk 5.08 -> 1.32s, dedup_semdedup 2.47 -> 0.65s —
-    # semdedup left the window when (a0) took the tail of (c))
-    "ann_pq_encode",
-    "ann_pq_adc_topk",
-    "ann_ivf_topk",
-    "ann_ivf_assign",
-    # (b) rotation debt: the r6 cohort (23 rows, last gate-checked
-    # in round 6 — includes the 11 rows the r14 verdict names plus the
-    # 12 deferred alongside them). Only its first two still fit; the
-    # other 21 and (c), the stalest r07 rows, left the window when
-    # (r0) took its front.
-    "text_repetition_ngrams",
-    "tpcds_am_pm_ratio",
 )
 
 

@@ -1023,21 +1023,30 @@ def match_pattern_stream(
             ghosts = []
         buf = ghosts + rest
         state.put("buf", buf)
-        if within_ms is not None and rest:
-            # arm the within-timeout: if this key goes quiet, fn must
-            # still run once the watermark passes earliest + within so
-            # the deferred-final emission above happens (the
-            # reference's NFA timeout — CepOperator.onEventTime);
-            # keyed to the earliest LIVE row (ghosts never expire)
-            earliest = utc_ms(dt.datetime.fromisoformat(rest[0][0]))
-            state.register_event_timer(
-                int(max(earliest + within_ms + 1, wm + 1)))
+        # one event-time timer per key (Spark's GroupState), re-armed
+        # on every call, so a quiet key still runs when the watermark
+        # passes: (a) its newest live row, once that row is not yet
+        # watermark-complete, so the rows buffered after the key's
+        # last arrival are matched; (b) with `within`, earliest live
+        # row + within, so the deferred-final emission above happens
+        # (the reference's NFA timeout — CepOperator.onEventTime).
+        # Ghosts never expire and never arm.
+        fire = []
+        if rest:
+            newest = utc_ms(dt.datetime.fromisoformat(rest[-1][0]))
+            if newest > wm:
+                fire.append(newest)
+            if within_ms is not None:
+                fire.append(utc_ms(dt.datetime.fromisoformat(rest[0][0]))
+                            + within_ms + 1)
+        if fire:
+            state.register_event_timer(int(max(min(fire), wm + 1)))
         return pd.DataFrame(out, columns=cols) if out else None
 
-    return keyed_process(
-        df, keys, fn, out_schema, output_mode="append",
-        timeout="EventTimeTimeout" if within_ms is not None
-        else "NoTimeout")
+    # EventTimeTimeout needs a watermark: a stream without
+    # withWatermark fails when the query starts, not silently
+    return keyed_process(df, keys, fn, out_schema, output_mode="append",
+                         timeout="EventTimeTimeout")
 
 
 def _interval_ms(interval: str) -> int:

@@ -135,12 +135,14 @@ def column_diff(spark_df, con, oracle: str, name: str = "?") -> list[str]:
     return findings
 
 
-def assert_exact(spark_df, con, oracle: str, name: str = "?") -> None:
+def assert_exact(spark_df, con, oracle: str, name: str = "?") -> int:
     """Strict variant: floats bitwise AND numeric types tagged.
 
     int-vs-float cell type skew (73 vs 73.0) fails here, matching the
     driver's repr-level hash — this is what makes a local pass imply a
     driver pass.
+
+    Returns the row count, which both sides share once this passes.
     """
     sp = spark_df.toPandas()
     du = con.execute(oracle).fetchdf()
@@ -151,3 +153,4 @@ def assert_exact(spark_df, con, oracle: str, name: str = "?") -> None:
     du_rows = _rows(du, du_cols, strict=True)
     diffs = [(i, a, b) for i, (a, b) in enumerate(zip(sp_rows, du_rows)) if a != b]
     assert not diffs, f"{name}: {len(diffs)} exact diffs, first: {diffs[:3]}"
+    return len(sp)

@@ -21,11 +21,65 @@ def con(sf_dir):
     c.close()
 
 
+# Oracles whose EMPTINESS is the semantic point; every other oracle
+# must return at least one row at the verification scale.
+INTENTIONALLY_EMPTY = {
+    "null_not_in",  # NULL-in-subquery three-valued logic: the empty
+                    # result IS the NULL-semantics pin
+}
+
+
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_oracle_parity(spark, sf_dir, con, name):
+    """Exact parity, plus two guards on the same frames:
+
+    - no column may be INTEGER on the Spark side but FLOAT on the
+      DuckDB side (or vice versa): '3' vs '3.0' fails the
+      correctness gate's representation-level value hash even when values are equal (how
+      fn_math went red in round 3, and what DuckDB's
+      SUM(int)→HUGEINT→float64 silently causes). DESCRIBE reads the
+      oracle's declared types without a data pass, so a nullable int
+      column cannot flake by surfacing a NULL first row;
+    - the oracle is not vacuously empty: a 0-row result passes the
+      hash however the operator is implemented (how setop_except_all
+      shipped an exceptAll that was never exercised, and
+      join_left_anti/tpch_q20/tpch_q22/tpcds_fraction_of_max were
+      green on empty sets for ten rounds)."""
     spec = SPECS[name]
     df = spec.fn(spark, sf_dir)
-    assert_exact(df, con, spec.oracle, name)
+    skew = _int_float_skew(df, con, spec.oracle)
+    assert not skew, f"{name}: int-vs-float columns {skew}"
+    n = assert_exact(df, con, spec.oracle, name)
+    assert n > 0 or name in INTENTIONALLY_EMPTY, (
+        f"{name}: 0-row oracle (vacuous check)")
+
+
+def _int_float_skew(df, con, oracle: str) -> list[tuple]:
+    """(column, spark type, DuckDB type) for every column that is
+    integer on one side and float-like on the other. Benign
+    asymmetries (int32 vs int64 widths, datetime ns vs us resolution)
+    are allowed — the gate's value hash renders those identically."""
+    sp_types = {f.name: f.dataType.simpleString()
+                for f in df.schema.fields}
+    bad = []
+    for col, dtype, *_rest in con.execute(
+            f"DESCRIBE SELECT * FROM ({oracle})").fetchall():
+        d = dtype.upper()
+        s = sp_types.get(col, "?")
+        int_s = s in ("tinyint", "smallint", "int", "bigint")
+        # DECIMAL and HUGEINT count as float-like: fetchdf renders both
+        # with a decimal point (pandas has no int128, so HUGEINT — what
+        # DuckDB returns for SUM(BIGINT) — widens to float64), which
+        # hash-mismatches an integer column even when every value is
+        # equal (events_hourly_to_daily_rollup was red for two rounds
+        # on exactly this).
+        float_d = (d in ("FLOAT", "DOUBLE", "REAL", "HUGEINT")
+                   or d.startswith("DECIMAL"))
+        int_d = d in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT",
+                      "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT")
+        if (int_s and float_d) or (s == "double" and int_d):
+            bad.append((col, s, d))
+    return bad
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
@@ -62,47 +116,6 @@ def test_results_invariant_to_partitioning(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_oracle_dtypes_never_int_vs_float(spark, sf_dir, con):
-    """Driver-hash guard: for every oracle, no column may be INTEGER
-    on the Spark side but FLOAT on the DuckDB side (or vice versa) —
-    '3' vs '3.0' fails the representation-level value hash even when
-    values are equal (how fn_math went red in round 3, and what
-    DuckDB's SUM(int)→HUGEINT→float64 silently causes). Benign
-    asymmetries (int32 vs int64 widths, datetime ns vs us resolution)
-    are allowed — the driver's hash renders those identically.
-    DESCRIBE per oracle keeps this a pure schema check: declared
-    column types, no data pass — and unlike a LIMIT-1 fetchdf probe
-    it cannot flake when a nullable int column happens to surface a
-    NULL first row (pandas would widen it to float64)."""
-    bad = []
-    for name in WITH_ORACLE:
-        spec = SPECS[name]
-        desc = con.execute(
-            f"DESCRIBE SELECT * FROM ({spec.oracle})").fetchall()
-        sp_types = {f.name: f.dataType.simpleString()
-                    for f in spec.fn(spark, sf_dir).schema.fields}
-        for col, dtype, *_rest in desc:
-            d = dtype.upper()
-            s = sp_types.get(col, "?")
-            int_s = s in ("tinyint", "smallint", "int", "bigint")
-            # DECIMAL and HUGEINT count as float-like: fetchdf renders
-            # both with a decimal point (pandas has no int128, so
-            # HUGEINT — what DuckDB returns for SUM(BIGINT) — widens to
-            # float64), which hash-mismatches an integer column even
-            # when every value is equal (events_hourly_to_daily_rollup
-            # was red for two rounds on exactly this).
-            float_d = (d in ("FLOAT", "DOUBLE", "REAL", "HUGEINT")
-                       or d.startswith("DECIMAL"))
-            int_d = d in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT",
-                          "UTINYINT", "USMALLINT",
-                          "UINTEGER", "UBIGINT")
-            if int_s and float_d:
-                bad.append((name, col, s, d))
-            if s == "double" and int_d:
-                bad.append((name, col, s, d))
-    assert not bad, bad
-
-
 def test_k_core_oracle_converged_within_unrolled_rounds(con):
     """r9-ADVICE pin: the graph_k_core oracle unrolls a FIXED 8 peel
     rounds while operators/graph.k_core_pairs iterates to fixpoint
@@ -117,29 +130,6 @@ def test_k_core_oracle_converged_within_unrolled_rounds(con):
     r8 = sorted(con.execute(_k_core_oracle(k=80, rounds=8)).fetchall())
     r9 = sorted(con.execute(_k_core_oracle(k=80, rounds=9)).fetchall())
     assert r8 == r9 and len(r8) > 0
-
-
-def test_no_oracle_is_vacuously_empty(con):
-    """r11 audit, made standing: a 0-row result passes the driver's
-    hash no matter how the operator is implemented (how
-    setop_except_all shipped an exceptAll that was never exercised,
-    and join_left_anti/tpch_q20/tpch_q22/tpcds_fraction_of_max were
-    green on empty sets for ten rounds). Every oracle must return at
-    least one row at the verification scale — except the entries
-    whose EMPTINESS is the semantic point."""
-    intentionally_empty = {
-        "null_not_in",  # NULL-in-subquery three-valued logic: the
-                        # empty result IS the NULL-semantics pin
-    }
-    vacuous = []
-    for name in WITH_ORACLE:
-        if name in intentionally_empty:
-            continue
-        n = con.execute(
-            f"SELECT COUNT(*) FROM ({SPECS[name].oracle})").fetchone()[0]
-        if n == 0:
-            vacuous.append(name)
-    assert not vacuous, f"0-row oracles (vacuous checks): {vacuous}"
 
 
 def test_assert_exact_rejects_int_vs_float_skew(spark, con):

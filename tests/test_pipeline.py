@@ -172,6 +172,35 @@ def test_multimodal_stub_contract(spark, documents):
         extract_features(media, fake_decode=False).collect()
 
 
+def test_map_rows_emits_zero_one_or_many_rows(spark):
+    """map_rows calls fn once per input row and emits the dicts it
+    returns: [] drops the row, two dicts give two rows, and a
+    partition with no rows yields a well-formed empty batch with the
+    schema's columns."""
+    from flink_1_11_2_with_comments_spark.pipeline.multimodal import (
+        map_rows)
+
+    schema = "doc_id bigint, part int, media binary"
+    # 3 rows over 4 partitions: at least one partition is empty
+    src = spark.createDataFrame(
+        [(1, "a"), (2, ""), (3, "bc")], "doc_id bigint, text string"
+    ).repartition(4)
+
+    def row(doc_id, text):
+        return [{"doc_id": doc_id, "part": i, "media": c.encode()}
+                for i, c in enumerate(text)]
+
+    out = map_rows(src, ["doc_id", "text"], row, schema)
+    assert out.columns == ["doc_id", "part", "media"]
+    got = sorted((r.doc_id, r.part, bytes(r.media)) for r in out.collect())
+    assert got == [(1, 0, b"a"), (3, 0, b"b"), (3, 1, b"c")]
+
+    none = map_rows(src, ["doc_id", "text"], lambda *_: [], schema)
+    assert none.collect() == []
+    assert none.schema.simpleString() == \
+        "struct<doc_id:bigint,part:int,media:binary>"
+
+
 def test_png_header_parser_on_genuine_png(spark):
     """parse_png_header must decode a REAL PNG built independently with
     struct.pack + zlib CRC (not via synthesize_png) — proving the

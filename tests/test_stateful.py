@@ -1166,6 +1166,45 @@ def test_cep_stream_strict_first_step_matches_batch(spark):
     assert got == exp
 
 
+def test_cep_stream_quiet_key_without_within_matches_batch(spark):
+    """Without ``within`` a quiet key still runs once the watermark
+    passes its newest buffered row: key 1 stops after `x a b x a b`
+    while key 2 advances the watermark, and the stream emits the two
+    batch matches."""
+    df = _quiet_key_events(spark, ["x", "a", "b", "x", "a", "b"])
+    steps = [QStep("a", lambda ev: ev["event_type"] == "a"),
+             QStep("b", lambda ev: ev["event_type"] == "b")]
+    exp = {(r.user_id, r.a_first_id, r.b_first_id)
+           for r in match_pattern_batch(df, ["user_id"], "ts", steps,
+                                        after_match="skip_past_last")
+           .collect()}
+    assert exp == {(1, 2, 3), (1, 5, 6)}
+
+    stream = replay_as_stream(df, n_batches=4, order_by="ts") \
+        .withWatermark("ts", "5 seconds")
+    out = match_pattern_stream(stream, ["user_id"], "ts", steps)
+    got = {(r.user_id, r.a_first_id, r.b_first_id)
+           for r in write_stream_to_memory(
+               out, "cep_quiet_no_within_out",
+               output_mode="append").collect()}
+    assert got == exp
+
+
+def test_cep_stream_without_watermark_fails_at_start(spark):
+    """Stream CEP runs on event-time timers, so a stream without a
+    watermark is refused when the query starts instead of emitting
+    nothing."""
+    df = _quiet_key_events(spark, ["a", "b"])
+    steps = [QStep("a", lambda ev: ev["event_type"] == "a"),
+             QStep("b", lambda ev: ev["event_type"] == "b")]
+    out = match_pattern_stream(
+        replay_as_stream(df, n_batches=2, order_by="ts"), ["user_id"],
+        "ts", steps)
+    writer = out.writeStream.format("memory").queryName("cep_no_wm_out")
+    with pytest.raises(Exception, match="(?i)watermark"):
+        writer.start().stop()
+
+
 def test_pattern_api_stream_forwards_after_match(spark):
     """Pattern.match on a stream hands ``after_match`` to the engine:
     SKIP TO NEXT ROW gives the same rows as match_pattern_stream
