@@ -7,9 +7,12 @@ as a plain SparkSession with scale-aware defaults:
 - AQE on (runtime re-plan ≈ Blink's cost-based + mini-batch tuning,
   but adaptive): coalesces small shuffle partitions, rewrites skewed
   joins, converts to broadcast when runtime stats allow.
-- shuffle.partitions sized to the local core count for tests; on a
-  real cluster this is overridden per-deployment (AQE coalescing
-  makes the initial number much less critical).
+- ``spark.sql.shuffle.partitions`` is the core count, with no floor
+  (``shuffle_width``). AQE coalesces batch shuffles anyway, but Spark
+  fixes each streaming query's state-store count from this width at
+  the query's first batch, and every store writes and commits its own
+  delta file per micro-batch: one store per core runs in one wave.
+  On a real cluster this is overridden per deployment.
 - UTC session timezone so naive timestamps compare exactly against
   the DuckDB oracle.
 - Arrow enabled: every Pandas-UDF operator in streaming/ and
@@ -38,6 +41,12 @@ def driver_mem(mem_total_kib: int) -> str:
     return f"{max(1, min(16, mem_total_kib * 3 // 4 // 2**20))}g"
 
 
+def shuffle_width(cpus: str) -> str:
+    """Default shuffle width for ``local[cpus]``: the core count, or
+    the host's CPUs when ``cpus`` is not a number (``*``)."""
+    return cpus if cpus.isdigit() else str(host_cpus())
+
+
 def host_mem_total_kib() -> int:
     with open("/proc/meminfo") as f:
         return next(int(line.split()[1]) for line in f
@@ -58,7 +67,7 @@ def get_spark(app_name: str = "flink_1_11_2_with_comments_spark",
     (timezone, ANSI-adjacent behavior, AQE) are the ones that travel.
     """
     cpus = str(cpus or CPUS)
-    shuffle = str(shuffle_partitions or max(int(cpus) if cpus.isdigit() else 32, 8))
+    shuffle = str(shuffle_partitions or shuffle_width(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

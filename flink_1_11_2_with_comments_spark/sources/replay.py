@@ -11,6 +11,11 @@ Spark's file stream source picks files oldest-modification-first, so
 each staged batch gets a strictly increasing mtime — otherwise batch
 order (and therefore watermark progression and late-data dropping)
 would be nondeterministic.
+
+All N files come from one Spark write (``_stage_batches``): the rows
+are tagged with their batch once, sorted by batch and arrival in one
+task, and written partitioned by batch, so staging costs one job
+however many batches there are.
 """
 
 from __future__ import annotations
@@ -113,24 +118,36 @@ def _stage_batches(df: DataFrame, data_dir: str, stage_dir: str,
                    n_batches: int, order_by: str | None,
                    first_index: int, mtime0: float) -> None:
     """Split ``df`` into ``n_batches`` (ntile over ``order_by``, else
-    round-robin by row id) and write each as one parquet file
-    ``batch_{first_index + i:04d}.parquet`` in ``data_dir``, one
-    ``coalesce(1)`` write per batch through ``stage_dir``. Batch i
-    gets mtime ``mtime0 + i``: the file source reads oldest first, so
-    mtime order is batch order."""
+    round-robin by row id) and stage batch i as the parquet file
+    ``batch_{first_index + i:04d}.parquet`` in ``data_dir``, with
+    mtime ``mtime0 + i``: the file source reads oldest first, so mtime
+    order is batch order.
+
+    One Spark write stages every batch: a single task sorted by batch
+    and then by ``order_by`` (or the row id) writes one file per batch
+    (``partitionBy``) through ``stage_dir``, so each file keeps the
+    arrival order. A batch that got no rows still gets its own empty
+    file, so the replay always has ``n_batches`` micro-batches."""
     if order_by is not None:
         tagged = df.withColumn(
             "__b", F.ntile(n_batches).over(Window.orderBy(order_by)))
+        within = order_by
     else:
-        tagged = df.withColumn(
-            "__b",
-            (F.monotonically_increasing_id() % n_batches + 1).cast("int"))
+        tagged = (df.withColumn("__id", F.monotonically_increasing_id())
+                  .withColumn("__b",
+                              (F.col("__id") % n_batches + 1).cast("int")))
+        within = "__id"
+    staged = tagged.coalesce(1).sortWithinPartitions("__b", within)
+    if order_by is None:
+        staged = staged.drop("__id")
+    tmp = os.path.join(stage_dir, "stage")
+    staged.write.mode("overwrite").partitionBy("__b").parquet(tmp)
     for i in range(1, n_batches + 1):
-        part = tagged.where(F.col("__b") == i).drop("__b")
-        tmp = os.path.join(stage_dir, f"stage_{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        batch = os.path.join(tmp, f"__b={i}")
+        if not os.path.isdir(batch):  # no rows: stage a schema-only file
+            df.limit(0).coalesce(1).write.parquet(batch)
+        src = glob.glob(os.path.join(batch, "part-*.parquet"))[0]
         dst = os.path.join(data_dir, f"batch_{first_index + i:04d}.parquet")
         shutil.move(src, dst)
         os.utime(dst, (mtime0 + i, mtime0 + i))
-        shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)

@@ -29,3 +29,10 @@ def test_cpus_default_to_host_unless_set(monkeypatch):
     finally:
         monkeypatch.undo()
         importlib.reload(session)
+
+
+def test_shuffle_width_is_core_count_without_floor():
+    assert session.shuffle_width("4") == "4"
+    assert session.shuffle_width("1") == "1"
+    assert session.shuffle_width("32") == "32"
+    assert session.shuffle_width("*") == str(len(os.sched_getaffinity(0)))

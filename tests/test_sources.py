@@ -4,6 +4,7 @@ exactly-once pattern, TableEnvironment facade."""
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
 
@@ -69,6 +70,67 @@ def test_streaming_file_sink(spark, orders):
     q.processAllAvailable()
     q.stop()
     assert spark.read.parquet(out).count() == orders.count()
+
+
+def _staged(data_dir):
+    """(name, mtime, rows) of each staged file, oldest first."""
+    import pyarrow.parquet as pq
+    paths = sorted(glob.glob(os.path.join(data_dir, "*")),
+                   key=os.path.getmtime)
+    return [(os.path.basename(p), os.path.getmtime(p),
+             pq.read_table(p).to_pylist()) for p in paths]
+
+
+def test_replay_staging_contract(spark, orders):
+    """replay_as_stream stages exactly n_batches files; read oldest
+    first they hold the input in order_by order. An input with fewer
+    rows than batches still gives one (possibly empty) file per
+    batch, and extend_replay names and dates its files after
+    start_index and after every earlier file."""
+    from flink_1_11_2_with_comments_spark.sources.replay import extend_replay
+
+    base = tempfile.mkdtemp(prefix="stage_")
+    replay_as_stream(orders, n_batches=3, order_by="o_orderdate",
+                     base_dir=base)
+    data_dir = os.path.join(base, "data")
+    staged = _staged(data_dir)
+    assert [name for name, _, _ in staged] == [
+        f"batch_{i:04d}.parquet" for i in (1, 2, 3)]
+    rows = [r for _, _, batch in staged for r in batch]
+    assert len(rows) == orders.count()
+    dates = [r["o_orderdate"] for r in rows]
+    assert dates == sorted(dates)
+    assert set(rows[0]) == set(orders.columns)
+
+    tiny = tempfile.mkdtemp(prefix="stage_tiny_")
+    replay_as_stream(orders.orderBy("o_orderkey").limit(2), n_batches=4,
+                     order_by="o_orderdate", base_dir=tiny)
+    staged = _staged(os.path.join(tiny, "data"))
+    assert [name for name, _, _ in staged] == [
+        f"batch_{i:04d}.parquet" for i in (1, 2, 3, 4)]
+    assert sum(len(batch) for _, _, batch in staged) == 2
+    assert any(not batch for _, _, batch in staged)
+
+    # without order_by: round-robin by row id, every row staged once
+    rr = tempfile.mkdtemp(prefix="stage_rr_")
+    replay_as_stream(orders, n_batches=2, base_dir=rr)
+    staged = _staged(os.path.join(rr, "data"))
+    assert len(staged) == 2
+    assert sorted(r["o_orderkey"] for _, _, batch in staged
+                  for r in batch) == sorted(
+        r.o_orderkey for r in orders.select("o_orderkey").collect())
+
+    last_mtime = max(os.path.getmtime(p)
+                     for p in glob.glob(os.path.join(data_dir, "*")))
+    extend_replay(orders.limit(10), data_dir, n_batches=2,
+                  order_by="o_orderdate", start_index=7)
+    staged = _staged(data_dir)
+    added = [(name, mtime) for name, mtime, _ in staged[3:]]
+    assert [name for name, _ in added] == ["batch_0008.parquet",
+                                           "batch_0009.parquet"]
+    assert last_mtime < added[0][1]
+    assert added[1][1] - added[0][1] == pytest.approx(1.0)
+    assert sum(len(batch) for _, _, batch in staged[3:]) == 10
 
 
 def test_foreach_batch_idempotent_sink(spark, orders):

@@ -87,6 +87,52 @@ def test_count_tumbling_window(spark, events):
     assert abs(got_totals - exp_totals) < 1e-6
 
 
+def test_stream_results_invariant_to_state_width(spark, events):
+    """Streaming twin of test_results_invariant_to_partitioning: a
+    watermarked tumble window and a keyed count window give the same
+    rows whether their keyed state is split over 3 or 8 state stores,
+    and each query runs exactly as many stores as the shuffle width
+    set when it started."""
+    from flink_1_11_2_with_comments_spark.streaming.windows import tumble
+
+    stream = replay_as_stream(events, n_batches=3, order_by="ts")
+    queries = {
+        "tumble": lambda s: (s.withWatermark("ts", "10 minutes")
+                             .groupBy(tumble("ts", "1 hour"), "event_type")
+                             .agg(F.count("*").alias("n"),
+                                  F.sum("value").alias("total"))
+                             .select("window.start", "window.end",
+                                     "event_type", "n", "total")),
+        "count": lambda s: count_tumbling_window(s, ["user_id"], size=5,
+                                                 value_col="value"),
+    }
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    results = {}
+    try:
+        for width in (3, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+            for name, build in queries.items():
+                table = f"width_{name}_{width}"
+                q = (build(stream).writeStream.format("memory")
+                     .queryName(table).outputMode("append").start())
+                try:
+                    q.processAllAvailable()
+                    states = [p["stateOperators"][0]
+                              for p in q.recentProgress if p["stateOperators"]]
+                finally:
+                    q.stop()
+                assert states
+                assert {s["numShufflePartitions"] for s in states} == {width}
+                results[name, width] = sorted(
+                    map(tuple, spark.table(table).collect()))
+                spark.catalog.dropTempView(table)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for name in queries:
+        assert results[name, 3]
+        assert results[name, 3] == results[name, 8]
+
+
 def test_keyed_process_running_count(spark, events):
     """KeyedProcessFunction analogue: per-key running count kept in
     ValueState across micro-batches (GroupAggFunction.java:43 shape)."""
