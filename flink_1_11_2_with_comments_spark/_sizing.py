@@ -71,6 +71,19 @@ def est_input_bytes(df: DataFrame) -> int:
     return est
 
 
+def loop_width(df: DataFrame) -> int | None:
+    """Partition count for a driver loop over ``df``, from input stats
+    rather than the session shuffle width: about one partition per
+    64 MB of ``est_input_bytes`` (at least 1, at most 200k), so a
+    small loop input runs narrow. None when the size is unknown (the
+    sentinel, or a joined plan): the caller keeps a by-column
+    repartition, which AQE can coalesce."""
+    est = est_input_bytes(df)
+    if est >= _UNKNOWN_STATS:
+        return None
+    return max(1, min(2 * est // (128 << 20) + 1, 200_000))
+
+
 def is_provably_small(df: DataFrame, per_core_bytes: int = 128 << 20) -> bool:
     """True when the optimizer KNOWS ``df`` underfills the cluster
     (estimate < cores x one default scan split) — the guard condition

@@ -26,7 +26,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .._sizing import _UNKNOWN_STATS, est_input_bytes
+from .._sizing import loop_width
 
 DEC = "decimal(38,10)"
 
@@ -67,8 +67,8 @@ def _superstep(df: DataFrame) -> DataFrame:
 @contextmanager
 def _loop_edges(edges: DataFrame):
     """The loop's edge table, partitioned on ``src`` and cached for
-    the ``with`` block. Width is ~128 MB of input per partition from
-    the optimizer's free size estimate, not the session shuffle width
+    the ``with`` block. Width is ``_sizing.loop_width``, from the
+    optimizer's free size estimate, not the session shuffle width
     (32-task stages over 1.3k rows cost ~1.2s/round at sf0.1). Unknown
     stats (the Long.MaxValue sentinel of RDD-backed input, or a joined
     input, whose estimate is a product: est_input_bytes) fall back to
@@ -77,12 +77,9 @@ def _loop_edges(edges: DataFrame):
     and it is released in ``finally``; the caller's frame is never
     persisted or unpersisted, so a caller's cache survives the loop.
     """
-    est = est_input_bytes(edges)
-    if est < _UNKNOWN_STATS:
-        n_part = max(1, min(2 * est // (128 << 20) + 1, 200_000))
-        owned = edges.repartition(n_part, "src").persist()
-    else:
-        owned = edges.repartition("src").persist()
+    n_part = loop_width(edges)
+    owned = (edges.repartition(n_part, "src") if n_part
+             else edges.repartition("src")).persist()
     try:
         yield owned
     finally:

@@ -117,12 +117,11 @@ def power_top1(cov_full: DataFrame, rounds: int = 8) -> DataFrame:
     for very high-dimensional matrices. Measured before the
     checkpoint (the checkpointed RDD reports the unknown sentinel).
     """
-    from .._sizing import _UNKNOWN_STATS, est_bytes
+    from .._sizing import loop_width
     from ..operators.graph import _superstep
 
-    est = est_bytes(cov_full)
-    if est < _UNKNOWN_STATS:
-        n_part = max(1, min(2 * est // (128 << 20) + 1, 200_000))
+    n_part = loop_width(cov_full)
+    if n_part:
         cov_full = cov_full.repartition(n_part, "j")
     covf = _superstep(cov_full)
     dims = covf.select("i").distinct()

@@ -32,6 +32,10 @@ Supported subset (raise on anything else, loudly):
   Streaming too: the NFA buffer carries the nav-referenced columns
   and freezes nav flags once neighbors are watermark-final
   (cep.match_pattern_stream nav_steps).
+- each DEFINE is parsed once (_parse_define) into OR-of-AND atoms;
+  the batch JVM Column (_parse_flag_expr), the stream's Python
+  predicate (_parse_predicate), the nav metadata and the pruned
+  column set are all read off those atoms.
 
 - quantifiers: none (exactly once), `+`, `*`, `?`, `{n}`, `{m,n}`,
   `{m,}` — each RELUCTANT with a trailing `?` (`B+?`, `B*?`, `B??`,
@@ -71,21 +75,22 @@ Supported subset (raise on anything else, loudly):
 - measures: FIRST(V.<id>), LAST(V.<id>), bare V.<id>, COUNT(V.*),
   MATCH_NUMBER(), CLASSIFIER() — each optionally prefixed RUNNING or
   FINAL (SqlMatchRecognize.java RUNNING/FINAL; runtime rt/match/).
-  ONE ROW PER MATCH: everything is FINAL (RUNNING evaluated at the
-  last row of a completed match equals FINAL — both accepted). ALL
-  ROWS PER MATCH: default is RUNNING; the NFA emits one row per
-  matched event (cep.match_pattern_batch_rows) and measures compile
-  to JVM-side window functions over (partition, match_seq) — running
-  frame rowsBetween(unboundedPreceding, currentRow), final frame the
-  whole match.
+  MEASURES is parsed once (_parse_measures). ONE ROW PER MATCH:
+  everything is FINAL (RUNNING evaluated at the last row of a
+  completed match equals FINAL — both accepted) and the per-variable
+  measures read the NFA's match-row columns. ALL ROWS PER MATCH:
+  default is RUNNING; batch and stream run the same NFA option
+  (emit="rows") and the same evaluator (cep._match_rows), which
+  emits one row per matched event with MATCH_NUMBER(), CLASSIFIER()
+  and the measures over the running frame (the match's rows up to
+  the current one) or the final frame (the whole match). Matches are
+  complete when they are emitted, so no window function runs after
+  the NFA, and a stream's rows on watermark-complete input are the
+  batch rows by construction (MATCH_NUMBER() persists in stream
+  state).
 - ALL ROWS PER MATCH output: PARTITION BY keys, order/id columns,
   then the measures (the pruned projection that crossed the NFA, not
-  every input column — documented subset). Streaming inputs support
-  ALL ROWS with the FULL measure set — MATCH_NUMBER()/CLASSIFIER()
-  are the NFA's emitted columns (numbering persisted in state), and
-  the aggregate measures are evaluated at emission inside the state
-  function (matches emit atomically, so the batch window frames are
-  computable row-by-row).
+  every input column — documented subset).
 - pattern concatenation is consecutive rows (SQL standard); the match
   may begin at any row — first step anchors relaxed, the rest strict.
 - default after-match strategy is SKIP PAST LAST ROW (SQL standard,
@@ -94,9 +99,11 @@ Supported subset (raise on anything else, loudly):
 
 from __future__ import annotations
 
+import functools
 import re
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming.cep import QStep, _union_steps, match_pattern_batch
@@ -141,23 +148,62 @@ _COND_IN = re.compile(
     re.IGNORECASE)
 
 
-def _in_values(raw: str) -> list:
-    vals = []
-    for item in raw.split(","):
-        lit = item.strip()
-        vals.append(lit[1:-1] if lit.startswith("'") else (
-            float(lit) if "." in lit else int(lit)))
-    return vals
+def _literal(lit: str):
+    lit = lit.strip()
+    return lit[1:-1] if lit.startswith("'") else (
+        float(lit) if "." in lit else int(lit))
 
 
-def _atoms(cond: str) -> list[list[str]]:
+class _Atom(NamedTuple):
+    """One DEFINE test on the defined variable's own row:
+    ``col op rhs``. ``op`` is an ``_OPS`` key with a literal ``rhs``,
+    or "in" / "not in" with a tuple of literals. With ``link``
+    ("__prev" / "__next") ``rhs`` is a column of the row ``off`` rows
+    before / after (SQL PREV/NEXT)."""
+    col: str
+    op: str
+    rhs: object
+    link: str | None = None
+    off: int = 1
+
+    @property
+    def cols(self) -> set[str]:
+        return {self.col, self.rhs} if self.link else {self.col}
+
+
+def _parse_define(cond: str, var: str) -> list[list[_Atom]]:
     """DEFINE condition → disjuncts of conjunct atoms (AND binds
     tighter than OR, SQL precedence; no parentheses in the subset —
-    the same boundary the rest of the parser draws)."""
-    return [[a.strip() for a in re.split(r"\s+AND\s+", d,
-                                         flags=re.IGNORECASE)]
-            for d in re.split(r"\s+OR\s+", cond.strip(),
-                              flags=re.IGNORECASE)]
+    the same boundary the rest of the parser draws). TRUE (an
+    undefined catch-all variable) is one empty conjunction. The one
+    subset check for both emitters: every atom must test ``var``."""
+    if cond.strip().upper() == "TRUE":
+        return [[]]
+    out = []
+    for d in re.split(r"\s+OR\s+", cond.strip(), flags=re.IGNORECASE):
+        conj = []
+        for part in re.split(r"\s+AND\s+", d, flags=re.IGNORECASE):
+            part = part.strip()
+            m = (_COND_PREV.match(part) or _COND_IN.match(part)
+                 or _COND.match(part))
+            if not m or m.group(1).upper() != var.upper():
+                raise NotImplementedError(
+                    f"MATCH_RECOGNIZE DEFINE subset: `{part}` "
+                    f"(want {var}.col <op> literal | PREV(V.col[, n]) "
+                    f"| {var}.col [NOT] IN (...) [AND/OR ...])")
+            if m.re is _COND_PREV:
+                conj.append(_Atom(m.group(2), m.group(3), m.group(6),
+                                  f"__{m.group(4).lower()}",
+                                  int(m.group(7) or 1)))
+            elif m.re is _COND_IN:
+                conj.append(_Atom(
+                    m.group(2), "not in" if m.group(3) else "in",
+                    tuple(_literal(v) for v in m.group(4).split(","))))
+            else:
+                conj.append(_Atom(m.group(2), m.group(3),
+                                  _literal(m.group(4))))
+        out.append(conj)
+    return out
 
 
 def _lag_window(keys: list[str], ts_col: str, id_col: str):
@@ -177,116 +223,60 @@ def _split_clauses(body: str) -> dict[str, str]:
     return out
 
 
-def _parse_predicate(cond: str, var: str):
-    """Conjunction of `V.col op literal` (or `op PREV(V.col [, n])`) →
-    python predicate over a row dict. TRUE → always-true (an undefined
-    catch-all variable). PREV walks the ``__prev`` chain cep._records
-    attaches; beyond the partition start it is NULL → condition false
-    (the SQL semantics)."""
-    cond = cond.strip()
-    if cond.upper() == "TRUE":
-        return lambda ev: True
-    disjuncts = []
-    for conj in _atoms(cond):
-        tests = []
-        for part in conj:
-            pm = _COND_PREV.match(part)
-            if pm and pm.group(1).upper() == var.upper():
-                col, op = pm.group(2), _OPS[pm.group(3)]
-                link = ("__prev" if pm.group(4).upper() == "PREV"
-                        else "__next")
-                pcol, off = pm.group(6), int(pm.group(7) or 1)
-
-                def nav_test(ev, col=col, op=op, pcol=pcol, off=off,
-                             link=link):
-                    p = ev
-                    for _ in range(off):
-                        p = p.get(link) if p else None
-                    return p is not None and op(ev[col], p[pcol])
-
-                tests.append(nav_test)
-                continue
-            im = _COND_IN.match(part)
-            if im and im.group(1).upper() == var.upper():
-                col, neg = im.group(2), bool(im.group(3))
-                vals = set(_in_values(im.group(4)))
-                tests.append(
-                    lambda ev, c=col, vs=vals, n=neg:
-                    (ev[c] not in vs) if n else (ev[c] in vs))
-                continue
-            m = _COND.match(part)
-            if not m or m.group(1).upper() != var.upper():
-                raise NotImplementedError(
-                    f"MATCH_RECOGNIZE DEFINE subset: `{part}` "
-                    f"(want {var}.col <op> literal | PREV(V.col[, n]) "
-                    f"| {var}.col [NOT] IN (...) [AND/OR ...])")
-            col, op, lit = m.group(2), m.group(3), m.group(4)
-            val = lit[1:-1] if lit.startswith("'") else (
-                float(lit) if "." in lit else int(lit))
-            tests.append(
-                lambda ev, c=col, o=_OPS[op], v=val: o(ev[c], v))
-        disjuncts.append(tests)
-    return lambda ev, ds=disjuncts: any(all(t(ev) for t in ts)
-                                        for ts in ds)
+def _atom_test(a: _Atom):
+    if a.link:
+        def nav_test(ev):
+            p = ev
+            for _ in range(a.off):
+                p = p.get(a.link) if p else None
+            return p is not None and _OPS[a.op](ev[a.col], p[a.rhs])
+        return nav_test
+    if a.op in ("in", "not in"):
+        vals, neg = set(a.rhs), a.op == "not in"
+        return lambda ev: (ev[a.col] in vals) != neg
+    return lambda ev: _OPS[a.op](ev[a.col], a.rhs)
 
 
-def _parse_flag_expr(cond: str, var: str, lag_window=None):
-    """Same DEFINE conjunction as a JVM boolean Column — the _OPS
-    lambdas build Column expressions when fed Columns, so predicate
-    evaluation stays in whole-stage codegen and only (keys, id, ts,
-    flags) cross the Arrow boundary (cep._flag_projection).
-    PREV(V.col, n) compiles to LAG(col, n) over ``lag_window``
-    (partition keys, row order) — still fully JVM-side; NULL beyond
-    the partition start coalesces to false."""
-    cond = cond.strip()
-    if cond.upper() == "TRUE":
+def _parse_predicate(disjuncts: list[list[_Atom]]):
+    """Parsed DEFINE → Python predicate over a row dict (the stream
+    evaluates it at ingestion). PREV/NEXT walk the ``__prev`` /
+    ``__next`` chain that cep._records and the stream buffer attach;
+    beyond the partition bounds it is NULL → condition false (the SQL
+    semantics)."""
+    tests = [[_atom_test(a) for a in conj] for conj in disjuncts]
+    return lambda ev: any(all(t(ev) for t in ts) for ts in tests)
+
+
+def _atom_column(a: _Atom, lag_window):
+    if a.link:
+        if lag_window is None:
+            raise NotImplementedError(
+                "PREV()/NEXT() conditions need a row order "
+                "(batch only)")
+        nav = F.lag if a.link == "__prev" else F.lead
+        return F.coalesce(
+            _OPS[a.op](F.col(a.col), nav(a.rhs, a.off).over(lag_window)),
+            F.lit(False))
+    if a.op in ("in", "not in"):
+        c = F.col(a.col).isin(*a.rhs)
+        return ~c if a.op == "not in" else c
+    return _OPS[a.op](F.col(a.col), F.lit(a.rhs))
+
+
+def _parse_flag_expr(disjuncts: list[list[_Atom]], lag_window=None):
+    """The same parsed DEFINE as a JVM boolean Column (batch) — the
+    _OPS lambdas build Column expressions when fed Columns, so
+    predicate evaluation stays in whole-stage codegen and only (keys,
+    id, ts, flags) cross the Arrow boundary (cep._flag_projection).
+    PREV/NEXT(V.col, n) compile to LAG/LEAD(col, n) over
+    ``lag_window`` (partition keys, row order) — still fully JVM-side;
+    NULL beyond the partition bounds coalesces to false."""
+    if disjuncts == [[]]:
         return F.lit(True)
-    expr = None
-    for conj in _atoms(cond):
-        cexpr = None
-        for part in conj:
-            pm = _COND_PREV.match(part)
-            if pm and pm.group(1).upper() != var.upper():
-                # same subset boundary as _parse_predicate: the LHS
-                # must be the variable being defined (DEFINE B AS
-                # C.v > PREV(C.v) is outside the subset in BOTH
-                # execution paths)
-                raise NotImplementedError(
-                    f"MATCH_RECOGNIZE DEFINE subset: `{part}` "
-                    f"(want {var}.col <op> ... )")
-            if pm:
-                if lag_window is None:
-                    raise NotImplementedError(
-                        "PREV()/NEXT() conditions need a row order "
-                        "(batch only)")
-                col, pcol = pm.group(2), pm.group(6)
-                off = int(pm.group(7) or 1)
-                nav = (F.lag if pm.group(4).upper() == "PREV"
-                       else F.lead)
-                c = F.coalesce(
-                    _OPS[pm.group(3)](F.col(col),
-                                      nav(pcol, off).over(lag_window)),
-                    F.lit(False))
-            elif (im := _COND_IN.match(part)) \
-                    and im.group(1).upper() == var.upper():
-                c = F.col(im.group(2)).isin(*_in_values(im.group(4)))
-                if im.group(3):
-                    c = ~c
-            else:
-                m = _COND.match(part)
-                if not m or m.group(1).upper() != var.upper():
-                    raise NotImplementedError(
-                        f"MATCH_RECOGNIZE DEFINE subset: `{part}` "
-                        f"(want {var}.col <op> literal | "
-                        f"PREV(V.col[, n]) | {var}.col [NOT] IN (...) "
-                        f"[AND/OR ...])")
-                col, op, lit = m.group(2), m.group(3), m.group(4)
-                val = lit[1:-1] if lit.startswith("'") else (
-                    float(lit) if "." in lit else int(lit))
-                c = _OPS[op](F.col(col), F.lit(val))
-            cexpr = c if cexpr is None else (cexpr & c)
-        expr = cexpr if expr is None else (expr | cexpr)
-    return expr
+    return functools.reduce(Column.__or__, [
+        functools.reduce(Column.__and__,
+                         [_atom_column(a, lag_window) for a in conj])
+        for conj in disjuncts])
 
 
 def _parse_branch(
@@ -473,12 +463,71 @@ def _parse_pattern(
     return branches, excluded, False
 
 
+# ONE ROW PER MATCH: measure kind → the NFA's per-variable column
+_ONE_ROW_COLS = {"first_id": "{}_first_id", "last_id": "{}_last_id",
+                 "count_var": "{}_n"}
+# ALL ROWS PER MATCH: measure kinds the NFA emits as columns
+_EMITTED = {"match_number": "match_seq", "classifier": "classifier"}
+
+
+def _parse_measures(text: str, id_col: str, all_rows: bool) -> list[dict]:
+    """MEASURES → one dict per measure, in order: ``alias``, ``kind``
+    (first_id, last_id, count_var, count_all, match_number or
+    classifier), ``var`` (the pattern variable, for first_id /
+    last_id / count_var) and ``final`` (the FINAL prefix; ALL ROWS
+    PER MATCH defaults to RUNNING, per the SQL standard). Bare
+    ``V.id`` is LAST(V.id). ONE ROW PER MATCH reads only the
+    per-variable kinds: RUNNING at the last row of a completed match
+    equals FINAL, so both prefixes are accepted there."""
+    out = []
+    for item in re.split(r",\s*(?=[^,]+\s+AS\s)", text,
+                         flags=re.IGNORECASE):
+        if not item.strip():
+            continue
+        expr, _, alias = re.split(r"\s+(AS)\s+", item.strip(),
+                                  maxsplit=1, flags=re.IGNORECASE)
+        sm = re.match(r"^(RUNNING|FINAL)\s+(.*)$", expr.strip(),
+                      re.IGNORECASE | re.DOTALL)
+        expr = (sm.group(2) if sm else expr).strip()
+        kind = var = None
+        if re.match(r"MATCH_NUMBER\s*\(\s*\)$", expr, re.IGNORECASE):
+            kind = "match_number"
+        elif re.match(r"CLASSIFIER\s*\(\s*\)$", expr, re.IGNORECASE):
+            kind = "classifier"
+        elif (m := re.match(rf"FIRST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
+                            re.IGNORECASE)):
+            kind, var = "first_id", m.group(1)
+        elif (m := re.match(rf"LAST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
+                            re.IGNORECASE)):
+            kind, var = "last_id", m.group(1)
+        elif (m := re.match(r"COUNT\s*\(\s*(?:(\w+)\.)?\*\s*\)$", expr,
+                            re.IGNORECASE)):
+            var = m.group(1)
+            kind = "count_var" if var else "count_all"
+        elif (m := re.match(rf"(\w+)\.{id_col}$", expr)):
+            kind, var = "last_id", m.group(1)
+        if all_rows and kind is None:
+            raise NotImplementedError(
+                f"ALL ROWS MEASURES subset: `{expr}` (want MATCH_NUMBER(), "
+                f"CLASSIFIER(), FIRST/LAST(V.{id_col}), COUNT(V.*), "
+                f"COUNT(*), V.{id_col})")
+        if not all_rows and kind not in _ONE_ROW_COLS:
+            raise NotImplementedError(
+                f"MEASURES subset: `{expr}` (want FIRST/LAST(V.{id_col}), "
+                f"V.{id_col}, COUNT(V.*))")
+        out.append({"alias": alias.strip(), "kind": kind, "var": var,
+                    "final": bool(sm) and sm.group(1).upper() == "FINAL"})
+    return out
+
+
 def match_recognize(spark: SparkSession, sql: str,
                     df: DataFrame | None = None) -> DataFrame:
     """Parse and execute a MATCH_RECOGNIZE query (subset above).
 
     `df` overrides the FROM table (for streaming inputs); otherwise
-    the table is resolved from the Spark catalog.
+    the table is resolved from the Spark catalog. Batch and stream
+    run the same parse: one atom list per DEFINE, one measure list,
+    one output select.
     """
     m = _MR.match(sql.strip().rstrip(";").strip())
     if not m:
@@ -496,21 +545,22 @@ def match_recognize(spark: SparkSession, sql: str,
     order = [c.strip() for c in cl["ORDER BY"].split(",")]
     ts_col = order[0]
     id_col = order[1] if len(order) > 1 else "event_id"
+    all_rows = "ALL ROWS PER MATCH" in cl
+    measures = _parse_measures(cl.get("MEASURES", ""), id_col, all_rows)
 
-    defines: dict[str, str] = {}
+    defines: dict[str, list[list[_Atom]]] = {}
     for item in re.split(r",\s*(?=\w+\s+AS\s)", cl["DEFINE"],
                          flags=re.IGNORECASE):
         var, _, cond = re.split(r"\s+(AS)\s+", item.strip(),
                                 maxsplit=1, flags=re.IGNORECASE)
-        defines[var.upper()] = cond
+        defines[var.upper()] = _parse_define(cond, var)
 
     branches_raw, excluded, permute = _parse_pattern(cl["PATTERN"])
     branches = []
     for braw in branches_raw:
         bsteps = []
         for i, (name, mn, mx, greedy) in enumerate(braw):
-            pred = _parse_predicate(defines.get(name.upper(), "TRUE"),
-                                    name)
+            pred = _parse_predicate(defines.get(name.upper(), [[]]))
             bsteps.append(QStep(
                 name, pred, min_times=mn, max_times=mx,
                 contiguity="relaxed" if i == 0 else "strict",
@@ -553,64 +603,36 @@ def match_recognize(spark: SparkSession, sql: str,
     else:
         raise NotImplementedError(f"AFTER MATCH subset: {after}")
 
-    all_rows = "ALL ROWS PER MATCH" in cl
-
-    src = df if df is not None else spark.table(table)
-    # iterative-condition metadata: which variables navigate with
-    # PREV/NEXT, which source columns those conditions read, and the
-    # deepest offsets — the streaming NFA buffers exactly those
-    # columns and freezes nav flags once neighbors are watermark-final
-    nav_vars: set[str] = set()
-    nav_cols: set[str] = set()
-    max_prev = max_next = 0
-    for var, cond in defines.items():
-        parts = [p for conj in _atoms(cond) for p in conj]
-        if not any(_COND_PREV.match(p) for p in parts):
-            continue
-        nav_vars.add(var.upper())
-        for part in parts:
-            if (pm := _COND_PREV.match(part)):
-                nav_cols.update((pm.group(2), pm.group(6)))
-                off = int(pm.group(7) or 1)
-                if pm.group(4).upper() == "PREV":
-                    max_prev = max(max_prev, off)
-                else:
-                    max_next = max(max_next, off)
-            elif (m := _COND.match(part)):
-                # a nav variable's non-nav tests also evaluate at NFA
-                # time — their columns ride along in the buffer too
-                nav_cols.add(m.group(2))
-            elif (im := _COND_IN.match(part)):
-                nav_cols.add(im.group(2))
-    nav_kw = dict(nav_steps=nav_vars, nav_cols=sorted(nav_cols),
-                  max_prev=max_prev, max_next=max_next) \
-        if nav_vars else {}
+    # iterative-condition metadata, from the same atoms: which
+    # variables navigate with PREV/NEXT, which source columns those
+    # variables' conditions read, and the deepest offsets — the
+    # streaming NFA buffers exactly those columns and freezes nav
+    # flags once neighbors are watermark-final
+    atoms = {v: [a for conj in d for a in conj] for v, d in defines.items()}
+    nav_vars = {v for v, ats in atoms.items() if any(a.link for a in ats)}
+    navs = [a for v in nav_vars for a in atoms[v]]
+    nav_kw = dict(
+        nav_steps=nav_vars, nav_cols=sorted(set().union(
+            *(a.cols for a in navs))),
+        max_prev=max((a.off for a in navs if a.link == "__prev"),
+                     default=0),
+        max_next=max((a.off for a in navs if a.link == "__next"),
+                     default=0)) if nav_vars else {}
     # column pruning: ship only key/order/DEFINE-referenced columns
     # into the per-key NFA (the parser knows the full referenced set,
     # so the Arrow transfer carries nothing else)
-    cond_cols = set()
-    for cond in defines.values():
-        for part in (p for conj in _atoms(cond) for p in conj):
-            if (m := _COND.match(part)):
-                cond_cols.add(m.group(2))
-            elif (pm := _COND_PREV.match(part)):
-                cond_cols.update((pm.group(2), pm.group(6)))
-            elif (im := _COND_IN.match(part)):
-                cond_cols.add(im.group(2))
-    needed = [c for c in src.columns
-              if c in {*keys, ts_col, id_col, *cond_cols}]
-    src = src.select(*needed)
-    if all_rows:
-        if src.isStreaming:
-            return _all_rows_stream(src, cl, keys, ts_col, id_col,
-                                    steps, within, after_match,
-                                    excluded=excluded, permute=permute,
-                                    alternation=branches,
-                                    nav_kw=nav_kw)
-        return _all_rows_per_match(src, cl, keys, ts_col, id_col,
-                                   defines, steps, within, after_match,
-                                   excluded=excluded, permute=permute,
-                                   alternation=branches)
+    cond_cols = set().union(*(a.cols for ats in atoms.values()
+                              for a in ats))
+    src = df if df is not None else spark.table(table)
+    src = src.select(*[c for c in src.columns
+                       if c in {*keys, ts_col, id_col, *cond_cols}])
+    # ALL ROWS measures the NFA evaluates per matched row (the rest
+    # are its match_seq / classifier columns)
+    specs = [{**ms, "alias": f"__m{i}"} for i, ms in enumerate(measures)
+             if ms["kind"] not in _EMITTED] if all_rows else None
+    kw = dict(within=within, id_col=id_col, permute=permute,
+              after_match=after_match, alternation=branches,
+              emit="rows" if all_rows else "match", row_measures=specs)
     if src.isStreaming:
         # streaming MATCH_RECOGNIZE (StreamExecMatch): the stateful
         # NFA implements every skip strategy — SKIP PAST LAST ROW
@@ -618,226 +640,29 @@ def match_recognize(spark: SparkSession, sql: str,
         # FIRST/LAST(V), and SKIP TO NEXT ROW (anchored
         # per-start-row scan)
         from ..streaming.cep import match_pattern_stream
-        matched = match_pattern_stream(src, keys, ts_col, steps,
-                                       within=within, id_col=id_col,
-                                       permute=permute,
-                                       after_match=after_match,
-                                       alternation=branches,
+        matched = match_pattern_stream(src, keys, ts_col, steps, **kw,
                                        **nav_kw)
     else:
         lag_w = _lag_window(keys, ts_col, id_col)
-        flag_exprs = [_parse_flag_expr(defines.get(s.name.upper(), "TRUE"),
-                                       s.name, lag_window=lag_w)
+        flag_exprs = [_parse_flag_expr(defines.get(s.name.upper(), [[]]),
+                                       lag_window=lag_w)
                       for s in steps]
         matched = match_pattern_batch(src, keys, ts_col, steps,
-                                      within=within,
-                                      after_match=after_match,
-                                      id_col=id_col,
-                                      flag_exprs=flag_exprs,
-                                      permute=permute,
-                                      alternation=branches)
+                                      flag_exprs=flag_exprs, **kw)
 
-    # measures → the engine's fixed per-step outputs
-    sel = [F.col(k) for k in keys]
-    for item in re.split(r",\s*(?=[^,]+\s+AS\s)", cl.get("MEASURES", ""),
-                         flags=re.IGNORECASE):
-        if not item.strip():
-            continue
-        expr, _, alias = re.split(r"\s+(AS)\s+", item.strip(),
-                                  maxsplit=1, flags=re.IGNORECASE)
-        # ONE ROW PER MATCH: RUNNING at the final row of a completed
-        # match equals FINAL, so both prefixes erase here
-        expr = re.sub(r"^(RUNNING|FINAL)\s+", "", expr.strip(),
-                      flags=re.IGNORECASE)
-        fm = re.match(rf"FIRST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
-                      re.IGNORECASE)
-        lm = re.match(rf"LAST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
-                      re.IGNORECASE)
-        cm = re.match(r"COUNT\s*\(\s*(\w+)\.\*\s*\)$", expr, re.IGNORECASE)
-        bm = re.match(rf"(\w+)\.{id_col}$", expr)
-        if fm:
-            col = f"{fm.group(1)}_first_id"
-        elif lm:
-            col = f"{lm.group(1)}_last_id"
-        elif cm:
-            col = f"{cm.group(1)}_n"
-        elif bm:  # SQL-standard final semantics: last row of the variable
-            col = f"{bm.group(1)}_last_id"
-        else:
-            raise NotImplementedError(
-                f"MEASURES subset: `{expr}` (want FIRST/LAST(V.{id_col}), "
-                f"V.{id_col}, COUNT(V.*))")
-        sel.append(F.col(col).alias(alias.strip()))
-    return matched.select(*sel)
-
-
-def _all_rows_stream(src: DataFrame, cl: dict[str, str],
-                     keys: list[str], ts_col: str, id_col: str,
-                     steps: list, within: str | None,
-                     after_match: str,
-                     excluded: set[str] = frozenset(),
-                     permute: bool = False,
-                     alternation: list | None = None,
-                     nav_kw: dict | None = None) -> DataFrame:
-    """Streaming ALL ROWS PER MATCH: the stateful NFA emits one row
-    per matched event with MATCH_NUMBER() (a per-key counter persisted
-    across micro-batches) and CLASSIFIER(). Aggregate measures —
-    FIRST/LAST(V.id), COUNT(V.*), COUNT(*), bare V.id, each RUNNING
-    (default) or FINAL — are evaluated AT EMISSION inside the NFA
-    state function: a match is emitted atomically with all its rows in
-    hand, so the same frames the batch twin computes as window
-    functions over (keys, match_seq) are computable row-by-row with no
-    post-hoc window (which an append-mode stream could not run).
-    Exactly the batch `_all_rows_per_match` measure subset."""
-    from ..streaming.cep import match_pattern_stream
-    specs: list[dict] = []
-    sel_plan: list[tuple[str, str]] = []  # (source col, alias)
-    for item in re.split(r",\s*(?=[^,]+\s+AS\s)", cl.get("MEASURES", ""),
-                         flags=re.IGNORECASE):
-        if not item.strip():
-            continue
-        expr, _, alias = re.split(r"\s+(AS)\s+", item.strip(),
-                                  maxsplit=1, flags=re.IGNORECASE)
-        expr, alias = expr.strip(), alias.strip()
-        sm = re.match(r"^(RUNNING|FINAL)\s+(.*)$", expr,
-                      re.IGNORECASE | re.DOTALL)
-        # SQL standard: ALL ROWS PER MATCH defaults to RUNNING
-        final = bool(sm and sm.group(1).upper() == "FINAL")
-        if sm:
-            expr = sm.group(2).strip()
-        fm = re.match(rf"FIRST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
-                      re.IGNORECASE)
-        lm = re.match(rf"LAST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
-                      re.IGNORECASE)
-        cm = re.match(r"COUNT\s*\(\s*(\w+)\.\*\s*\)$", expr,
-                      re.IGNORECASE)
-        ca = re.match(r"COUNT\s*\(\s*\*\s*\)$", expr, re.IGNORECASE)
-        bm = re.match(rf"(\w+)\.{id_col}$", expr)
-        if re.match(r"MATCH_NUMBER\s*\(\s*\)$", expr, re.IGNORECASE):
-            sel_plan.append(("match_seq", alias))
-            continue
-        if re.match(r"CLASSIFIER\s*\(\s*\)$", expr, re.IGNORECASE):
-            sel_plan.append(("classifier", alias))
-            continue
-        if fm:
-            spec = {"kind": "first_id", "var": fm.group(1)}
-        elif lm:
-            spec = {"kind": "last_id", "var": lm.group(1)}
-        elif cm:
-            spec = {"kind": "count_var", "var": cm.group(1)}
-        elif ca:
-            spec = {"kind": "count_all"}
-        elif bm:  # bare V.id: RUNNING LAST semantics in ALL ROWS mode
-            spec = {"kind": "last_id", "var": bm.group(1)}
-        else:
-            raise NotImplementedError(
-                f"ALL ROWS MEASURES subset: `{expr}` (want "
-                f"MATCH_NUMBER(), CLASSIFIER(), FIRST/LAST(V.{id_col}),"
-                f" COUNT(V.*), COUNT(*), V.{id_col})")
-        spec.update(alias=f"__m{len(specs)}", final=final)
-        specs.append(spec)
-        sel_plan.append((spec["alias"], alias))
-    rows = match_pattern_stream(src, keys, ts_col, steps,
-                                within=within, id_col=id_col,
-                                permute=permute, emit="rows",
-                                after_match=after_match,
-                                alternation=alternation,
-                                row_measures=specs,
-                                **(nav_kw or {}))
-    sel = [*[F.col(k) for k in keys], F.col(ts_col), F.col(id_col),
-           *[F.col(c).alias(a) for c, a in sel_plan]]
-    out = rows.select(*sel, F.col("classifier").alias("__cls"))
-    if excluded:
-        out = out.where(~F.col("__cls").isin(*sorted(excluded)))
-    return out.drop("__cls")
-
-
-def _all_rows_per_match(src: DataFrame, cl: dict[str, str],
-                        keys: list[str], ts_col: str, id_col: str,
-                        defines: dict[str, str], steps: list,
-                        within: str | None,
-                        after_match: str,
-                        excluded: set[str] = frozenset(),
-                        permute: bool = False,
-                        alternation: list | None = None) -> DataFrame:
-    """ALL ROWS PER MATCH: the NFA emits one row per matched event
-    (keys, id, ts, match_seq, classifier); every measure compiles to
-    a JVM-side window function over the match — running frame up to
-    the current row, final frame the whole match (rt/match/ RUNNING
-    vs FINAL; MATCH_NUMBER()/CLASSIFIER() are the emitted columns).
-
-    ``excluded`` variables (pattern exclusion ``{- V -}``) take part
-    in matching and in measure aggregation, but their rows are
-    filtered from the output AFTER the measure windows are computed —
-    the SQL-standard exclusion semantics.
-    """
-    from pyspark.sql import Window
-
-    from ..streaming.cep import match_pattern_batch_rows
-
-    flag_exprs = [_parse_flag_expr(defines.get(s.name.upper(), "TRUE"),
-                                   s.name,
-                                   lag_window=_lag_window(keys, ts_col,
-                                                          id_col))
-                  for s in steps]
-    rows = match_pattern_batch_rows(
-        src, keys, ts_col, steps, within=within,
-        after_match=after_match, id_col=id_col, flag_exprs=flag_exprs,
-        permute=permute, alternation=alternation)
-
-    base = Window.partitionBy(*keys, "match_seq").orderBy(ts_col, id_col)
-    w_run = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_fin = base.rowsBetween(Window.unboundedPreceding,
-                             Window.unboundedFollowing)
-
-    def of_var(var: str, col):
-        return F.when(F.col("classifier") == var, col)
-
-    sel = [*[F.col(k) for k in keys], F.col(ts_col), F.col(id_col)]
-    for item in re.split(r",\s*(?=[^,]+\s+AS\s)", cl.get("MEASURES", ""),
-                         flags=re.IGNORECASE):
-        if not item.strip():
-            continue
-        expr, _, alias = re.split(r"\s+(AS)\s+", item.strip(),
-                                  maxsplit=1, flags=re.IGNORECASE)
-        expr = expr.strip()
-        sm = re.match(r"^(RUNNING|FINAL)\s+(.*)$", expr,
-                      re.IGNORECASE | re.DOTALL)
-        # SQL standard: ALL ROWS PER MATCH defaults to RUNNING
-        w = (w_fin if sm and sm.group(1).upper() == "FINAL" else w_run)
-        if sm:
-            expr = sm.group(2).strip()
-        fm = re.match(rf"FIRST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
-                      re.IGNORECASE)
-        lm = re.match(rf"LAST\s*\(\s*(\w+)\.{id_col}\s*\)$", expr,
-                      re.IGNORECASE)
-        cm = re.match(r"COUNT\s*\(\s*(\w+)\.\*\s*\)$", expr, re.IGNORECASE)
-        ca = re.match(r"COUNT\s*\(\s*\*\s*\)$", expr, re.IGNORECASE)
-        bm = re.match(rf"(\w+)\.{id_col}$", expr)
-        if re.match(r"MATCH_NUMBER\s*\(\s*\)$", expr, re.IGNORECASE):
-            col = F.col("match_seq")
-        elif re.match(r"CLASSIFIER\s*\(\s*\)$", expr, re.IGNORECASE):
-            col = F.col("classifier")
-        elif fm:
-            col = F.first(of_var(fm.group(1), F.col(id_col)),
-                          ignorenulls=True).over(w)
-        elif lm:
-            col = F.last(of_var(lm.group(1), F.col(id_col)),
-                         ignorenulls=True).over(w)
-        elif cm:
-            col = F.count(of_var(cm.group(1), F.lit(1))).over(w)
-        elif ca:
-            col = F.count(F.lit(1)).over(w)
-        elif bm:  # bare V.id: RUNNING LAST semantics in ALL ROWS mode
-            col = F.last(of_var(bm.group(1), F.col(id_col)),
-                         ignorenulls=True).over(w)
-        else:
-            raise NotImplementedError(
-                f"ALL ROWS MEASURES subset: `{expr}` (want MATCH_NUMBER(), "
-                f"CLASSIFIER(), FIRST/LAST(V.{id_col}), COUNT(V.*), "
-                f"COUNT(*), V.{id_col})")
-        sel.append(col.alias(alias.strip()))
-    out = rows.select(*sel, F.col("classifier").alias("__cls"))
+    key_cols = [F.col(k) for k in keys]
+    if not all_rows:
+        return matched.select(*key_cols, *[
+            F.col(_ONE_ROW_COLS[ms["kind"]].format(ms["var"]))
+            .alias(ms["alias"]) for ms in measures])
+    # ALL ROWS PER MATCH: keys, order/id columns, then the measures;
+    # excluded variables (`{- V -}`) fed the measures, but their rows
+    # are dropped from the output (the SQL-standard exclusion)
+    out = matched.select(
+        *key_cols, F.col(ts_col), F.col(id_col),
+        *[F.col(_EMITTED.get(ms["kind"], f"__m{i}")).alias(ms["alias"])
+          for i, ms in enumerate(measures)],
+        F.col("classifier").alias("__cls"))
     if excluded:
         out = out.where(~F.col("__cls").isin(*sorted(excluded)))
     return out.drop("__cls")

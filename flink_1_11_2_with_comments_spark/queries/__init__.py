@@ -115,13 +115,16 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_image_phash",
     "dedup_audio_fingerprint",
     "dedup_video_fingerprint",
-    # (r1) the round-15 window, in its order, less the two benchmark
-    # queries moved to (r0), cut to its first three entries when (m)
-    # took the tail: faces re-hashed by the frontier-loop
-    # consolidation (graph SSSP and dedup's clustering now run through
-    # operators/graph.pregel).
-    "graph_sssp",
-    "graph_pregel_sssp",
+    # (s) the two loop faces outside this block that the one
+    # loop-width rule (_sizing.loop_width, shared by _loop_edges and
+    # pca.power_top1) re-hashed; their plans are unchanged at sf0.01.
+    # They took the places of graph_sssp and graph_pregel_sssp, whose
+    # source has not changed since the frontier-loop consolidation.
+    "graph_hits",
+    "embedding_pca_project_top1",
+    # (r1) the round-15 window's frontier-loop face that is still here:
+    # dedup's clustering runs through operators/graph.pregel, and
+    # _loop_edges re-hashed it again.
     "dedup_cluster_canonical",
 )
 

@@ -523,9 +523,10 @@ def match_recognize_sql(spark, sf_dir):
     doc="MATCH_RECOGNIZE ALL ROWS PER MATCH with RUNNING vs FINAL "
         "measures, MATCH_NUMBER() and CLASSIFIER() "
         "(SqlMatchRecognize.java RUNNING/FINAL; runtime rt/match/): "
-        "the NFA emits one row per matched event "
-        "(cep.match_pattern_batch_rows) and every measure compiles to "
-        "a JVM-side window function over (partition, match_seq). "
+        "the NFA emits one row per matched event and evaluates every "
+        "measure over its RUNNING or FINAL frame as it emits "
+        "(cep.match_pattern_batch emit='rows', the evaluator the "
+        "stream shares), so no window runs over (partition, match_seq). "
         "Oracle: gaps-and-islands maximal click runs preceded by an "
         "adjacent view, exploded to per-event rows with running "
         "positions derived from rn offsets.",
@@ -639,7 +640,8 @@ def match_recognize_permute(spark, sf_dir):
         "nor purchase), then purchase — B rows match and feed FINAL "
         "COUNT(B.*), but are omitted from the output "
         "(SqlMatchRecognize exclusion syntax; plans/match_recognize.py "
-        "filters classifier rows after the measure windows). Oracle: "
+        "filters classifier rows after the NFA has evaluated the "
+        "measures). Oracle: "
         "each purchase pairs with the last click before it when the gap "
         "is non-empty and purchase-free; emits the A and C rows only.",
 )

@@ -28,15 +28,19 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import CPUS, shuffle_width
+
 
 def hive_spark(warehouse_dir: str, metastore_dir: str,
                app_name: str = "hive_catalog",
-               cpus: int | str = 8) -> SparkSession:
+               cpus: int | str = CPUS) -> SparkSession:
     """A Hive-catalog SparkSession over an embedded Derby metastore.
 
     Must run in a JVM with no prior SparkSession (see module doc).
     ``javax.jdo...ConnectionURL`` pins the metastore to
     ``metastore_dir`` so concurrent tests never share Derby state.
+    Cores and shuffle width follow the shared session's defaults
+    (``session.CPUS``, ``session.shuffle_width``).
     """
     return (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -44,7 +48,7 @@ def hive_spark(warehouse_dir: str, metastore_dir: str,
         .config("spark.sql.warehouse.dir", warehouse_dir)
         .config("javax.jdo.option.ConnectionURL",
                 f"jdbc:derby:;databaseName={metastore_dir};create=true")
-        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.shuffle.partitions", shuffle_width(str(cpus)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .enableHiveSupport()

@@ -560,19 +560,28 @@ def _expand_permute(branches, permute: bool) -> list[list[QStep]]:
     return [p for br in branches for p in _permute_alts(br)]
 
 
-def _match_columns(keys: list[str], pos_steps) -> tuple[str, list[str]]:
-    """ONE ROW PER MATCH output: (schema, columns) — keys, per
-    positive step its first/last event id and repetition count, then
-    the match's start/end timestamps."""
-    cols = [*keys,
-            *[c for s in pos_steps
-              for c in (f"{s.name}_first_id", f"{s.name}_last_id",
-                        f"{s.name}_n")],
-            "start_ts", "end_ts"]
-    schema = ", ".join(
-        f"{c} {'timestamp' if c in ('start_ts', 'end_ts') else 'bigint'}"
-        for c in cols)
-    return schema, cols
+def _output_columns(emit: str, keys: list[str], pos_steps, id_col: str,
+                    ts_col: str, row_measures) -> tuple[str, list[str]]:
+    """Output (schema, columns) of batch and stream CEP.
+    ``emit="match"`` (ONE ROW PER MATCH): keys, per positive step its
+    first/last event id and repetition count, then the match's
+    start/end timestamps. ``emit="rows"`` (ALL ROWS PER MATCH): keys,
+    id, ts, ``match_seq``, ``classifier``, then one bigint per
+    ``row_measures`` spec."""
+    if emit == "match":
+        cols = [*keys,
+                *[c for s in pos_steps
+                  for c in (f"{s.name}_first_id", f"{s.name}_last_id",
+                            f"{s.name}_n")],
+                "start_ts", "end_ts"]
+        types = {"start_ts": "timestamp", "end_ts": "timestamp"}
+    elif emit == "rows":
+        cols = [*keys, id_col, ts_col, "match_seq", "classifier",
+                *[sp["alias"] for sp in row_measures or ()]]
+        types = {ts_col: "timestamp", "classifier": "string"}
+    else:
+        raise ValueError("emit must be 'match' or 'rows'")
+    return ", ".join(f"{c} {types.get(c, 'bigint')}" for c in cols), cols
 
 
 def _match_row(m, key_vals: dict, pos_steps, id_col: str,
@@ -600,9 +609,39 @@ def _match_row(m, key_vals: dict, pos_steps, id_col: str,
     return row
 
 
+def _match_rows(m, key_vals: dict, id_col: str, ts_col: str, seq: int,
+                row_measures) -> list[dict]:
+    """The ALL ROWS PER MATCH rows of one match — the one measure
+    evaluator batch and stream share (rt/match/ RUNNING vs FINAL). One
+    row per matched event in (ts, id) order with ``match_seq`` (SQL
+    MATCH_NUMBER()), ``classifier`` (the event's variable) and one
+    value per ``row_measures`` spec ({alias, kind, var, final}):
+    first_id / last_id / count_var over the rows of ``var``,
+    count_all over every row, each taken over the RUNNING frame (the
+    match's rows up to the current one) or, with ``final``, the whole
+    match. Matches are complete when they are emitted, so both frames
+    are known row by row."""
+    mrows = sorted(((s.name, ev) for s, reps in m for ev in reps),
+                   key=lambda p: (p[1][ts_col], p[1][id_col]))
+    out = [{**key_vals, id_col: ev[id_col], ts_col: ev[ts_col],
+            "match_seq": seq, "classifier": cls} for cls, ev in mrows]
+    for sp in row_measures or ():
+        n, first, last, vals = 0, None, None, []
+        for cls, ev in mrows:
+            if sp["kind"] == "count_all" or cls == sp.get("var"):
+                n += 1
+                first = ev[id_col] if n == 1 else first
+                last = ev[id_col]
+            vals.append({"count_all": n, "count_var": n, "first_id": first,
+                         "last_id": last}[sp["kind"]])
+        for rec, val in zip(out, vals):
+            rec[sp["alias"]] = vals[-1] if sp.get("final") else val
+    return out
+
+
 def _prepare_branches(df, keys, ts_col, id_col, steps, flag_exprs,
                       until_exprs, permute, alternation, after_match):
-    """Shared front half of the two batch entrypoints: validate,
+    """Front half of match_pattern_batch: validate,
     project flags (name-keyed, once for every branch), expand PERMUTE
     into the final alternation. Returns (df, union_steps, branches)."""
     branches = _pattern_branches(steps, alternation, after_match)
@@ -628,86 +667,49 @@ def match_pattern_batch(
     permute: bool = False,
     until_exprs: list[Column | None] | None = None,
     alternation: list[list[QStep]] | None = None,
+    emit: str = "match",
+    row_measures: list[dict] | None = None,
 ) -> DataFrame:
-    """Quantified batch CEP: one row per match with, per (positive)
-    step, the first/last matched event id and the repetition count.
+    """Quantified batch CEP. ``emit="match"`` (default) yields one row
+    per match with, per (positive) step, the first/last matched event
+    id and the repetition count; a step absent from the winning branch
+    (or matching zero rows) reports first/last id NULL and count 0 —
+    the SQL unmatched-variable semantics. ``emit="rows"`` yields the
+    ALL ROWS PER MATCH shape of match_pattern_stream, from the same
+    evaluator (_match_rows): one row per matched event with
+    ``match_seq`` (MATCH_NUMBER(), 1-based, ordered by match start
+    within the key), ``classifier`` and the ``row_measures`` columns.
+
     Pass ``flag_exprs`` (one boolean Column per DISTINCT step name, in
     first-appearance order) to evaluate predicates JVM-side and ship
     only flags over Arrow (plus ``until_exprs`` for steps carrying a
     stop condition). ``permute`` matches any ordering of the steps
     (SQL PERMUTE, of every branch). ``alternation`` supplies explicit
     branches (`(A B | C D)`); steps with min_times=0 (`B*`, `B?`) are
-    matched natively by the walk. A step absent from the winning
-    branch (or matching zero rows) reports first/last id NULL and
-    count 0 — the SQL unmatched-variable semantics."""
+    matched natively by the walk."""
     df, union, alts = _prepare_branches(
         df, keys, ts_col, id_col, steps, flag_exprs, until_exprs,
         permute, alternation, after_match)
     within_ms = _interval_ms(within) if within else None
     pos_steps = [s for s in union if not s.negated]
-    out_schema, cols = _match_columns(keys, pos_steps)
+    out_schema, cols = _output_columns(emit, keys, pos_steps, id_col,
+                                       ts_col, row_measures)
 
     def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
         events = _records(pdf, ts_col, id_col)
-        out = [_match_row(m, {k: m[0][1][0][k] for k in keys},
-                          pos_steps, id_col, ts_col)
-               for m, _ in _scan_matches(events, alts, ts_col, within_ms,
-                                         after_match)]
-        return pd.DataFrame(out, columns=cols)
-
-    return _bucketed_apply(df, keys, per_key, out_schema)
-
-
-def match_pattern_batch_rows(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    steps: list[QStep],
-    within: str | None = None,
-    after_match: str = "skip_past_last",
-    id_col: str = "event_id",
-    flag_exprs: list[Column] | None = None,
-    permute: bool = False,
-    alternation: list[list[QStep]] | None = None,
-) -> DataFrame:
-    """Quantified batch CEP, ALL ROWS PER MATCH shape: one output row
-    per MATCHED EVENT — (keys, id, ts, match_seq, classifier), where
-    match_seq is the SQL MATCH_NUMBER() (1-based, ordered by match
-    start within the key) and classifier is the pattern variable the
-    event matched (CLASSIFIER()). RUNNING/FINAL measures are NOT
-    computed here — they are plain window functions over
-    (keys, match_seq) on this output, so they stay JVM-side
-    (plans/match_recognize.py builds them).
-
-    Reference: ALL ROWS PER MATCH + RUNNING/FINAL semantics in
-    rt/match/ and SqlMatchRecognize.java; per-event emission mirrors
-    PatternProcessFunction receiving the full Map<String,List<Event>>.
-    """
-    df, _union, alts = _prepare_branches(
-        df, keys, ts_col, id_col, steps, flag_exprs, None, permute,
-        alternation, after_match)
-    within_ms = _interval_ms(within) if within else None
-    key_fields = ", ".join(f"{k} bigint" for k in keys)
-    out_schema = (f"{key_fields}, {id_col} bigint, {ts_col} timestamp, "
-                  f"match_seq bigint, classifier string")
-    cols = [*keys, id_col, ts_col, "match_seq", "classifier"]
-
-    def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        events = _records(pdf, ts_col, id_col)
-        out = []
         matches = [m for m, _ in _scan_matches(events, alts, ts_col,
                                                within_ms, after_match)]
-        # MATCH_NUMBER() orders by match start within the partition
-        matches.sort(key=lambda m: (m[0][1][0][ts_col],
-                                    m[0][1][0][id_col]))
-        for seq, m in enumerate(matches, start=1):
-            for s, reps in m:
-                for ev in reps:
-                    out.append({
-                        **{k: ev[k] for k in keys},
-                        id_col: ev[id_col], ts_col: ev[ts_col],
-                        "match_seq": seq, "classifier": s.name,
-                    })
+        key_vals = {k: events[0][k] for k in keys} if events else {}
+        if emit == "match":
+            out = [_match_row(m, key_vals, pos_steps, id_col, ts_col)
+                   for m in matches]
+        else:
+            # MATCH_NUMBER() orders by match start within the partition
+            matches.sort(key=lambda m: (m[0][1][0][ts_col],
+                                        m[0][1][0][id_col]))
+            out = [r for seq, m in enumerate(matches, start=1)
+                   for r in _match_rows(m, key_vals, id_col, ts_col, seq,
+                                        row_measures)]
         return pd.DataFrame(out, columns=cols)
 
     return _bucketed_apply(df, keys, per_key, out_schema)
@@ -783,16 +785,17 @@ def match_pattern_stream(
     """Streaming quantified CEP (reference: flink-cep/.../nfa/NFA.java
     with AfterMatchSkipStrategy.java).
 
-    ``emit="match"`` (default) yields one row per match with per-step
-    first/last ids and counts; ``emit="rows"`` yields the ALL ROWS PER
-    MATCH shape — one row per MATCHED EVENT with ``match_seq``
-    (MATCH_NUMBER(), a per-key counter persisted in state across
-    micro-batches) and ``classifier`` (the matched variable), plus one
-    column per ``row_measures`` spec ({alias, kind, var, final}) with
-    kind in first_id/last_id/count_var/count_all — evaluated over the
-    RUNNING frame (rows of the match up to the current row) or, with
-    final=True, the whole match; measures are computable at emission
-    because the NFA emits complete matches atomically.
+    ``emit`` and ``row_measures`` mean what they mean for
+    match_pattern_batch, and both engines build their rows with the
+    same helpers (_match_row, _match_rows): ``emit="match"`` (default)
+    yields one row per match with per-step first/last ids and counts;
+    ``emit="rows"`` yields one row per MATCHED EVENT with
+    ``match_seq`` (MATCH_NUMBER(), here a per-key counter persisted in
+    state across micro-batches), ``classifier`` and one column per
+    ``row_measures`` spec ({alias, kind, var, final}, kind in
+    first_id/last_id/count_var/count_all) over the RUNNING or FINAL
+    frame. A match is emitted atomically, so on watermark-complete
+    input the stream's rows are the batch rows.
 
     ``after_match``: 'skip_past_last' resumes past the match's end and
     evicts the consumed prefix; 'skip_to_next_row' resumes one past
@@ -842,24 +845,13 @@ def match_pattern_stream(
     GHOSTS (nav neighbors only, never match candidates) so a
     newly-complete event can still see its predecessor's values.
     """
-    if emit not in ("match", "rows"):
-        raise ValueError("emit must be 'match' or 'rows'")
     branches = _pattern_branches(steps, alternation, after_match,
                                  streaming=True)
     within_ms = _interval_ms(within) if within else None
     union = _union_steps(branches)
     pos_steps = [s for s in union if not s.negated]
-    if emit == "rows":
-        key_fields = ", ".join(f"{k} bigint" for k in keys)
-        measure_fields = "".join(
-            f", {sp['alias']} bigint" for sp in (row_measures or []))
-        out_schema = (f"{key_fields}, {id_col} bigint, "
-                      f"{ts_col} timestamp, match_seq bigint, "
-                      f"classifier string{measure_fields}")
-        cols = [*keys, id_col, ts_col, "match_seq", "classifier",
-                *[sp["alias"] for sp in (row_measures or [])]]
-    else:
-        out_schema, cols = _match_columns(keys, pos_steps)
+    out_schema, cols = _output_columns(emit, keys, pos_steps, id_col,
+                                       ts_col, row_measures)
 
     # flag indices are UNION positions; branch steps rebind by name so
     # a variable shared across branches (or repeated by a group
@@ -884,6 +876,7 @@ def match_pattern_stream(
         import datetime as dt
         buf = state.get("buf", [])
         wm = state.watermark_ms()
+        key_vals = dict(zip(keys, key))
         if rows is not None:
             for rec in rows.to_dict("records"):
                 if wm > 0 and utc_ms(rec[ts_col]) <= wm:
@@ -969,38 +962,11 @@ def match_pattern_stream(
             if emit == "rows":
                 seq = state.get("seq", 0) + 1
                 state.put("seq", seq)
-                # event order within the match (combinations may bind
-                # non-consecutive rows; steps are otherwise temporal)
-                mrows = sorted(((s.name, ev) for s, reps in m
-                                for ev in reps),
-                               key=lambda p: (p[1][ts_col],
-                                              p[1][id_col]))
-                for i, (cls, ev) in enumerate(mrows):
-                    rec = {**{k: key[j] for j, k in enumerate(keys)},
-                           id_col: ev[id_col], ts_col: ev[ts_col],
-                           "match_seq": seq, "classifier": cls}
-                    for sp in (row_measures or []):
-                        frame = mrows if sp.get("final") \
-                            else mrows[:i + 1]
-                        kind, var = sp["kind"], sp.get("var")
-                        if kind == "count_all":
-                            val = len(frame)
-                        elif kind == "count_var":
-                            val = sum(1 for c, _ in frame if c == var)
-                        else:  # first_id / last_id
-                            ids = [e[id_col] for c, e in frame
-                                   if c == var]
-                            if not ids:
-                                val = None
-                            else:
-                                val = ids[0] if kind == "first_id" \
-                                    else ids[-1]
-                        rec[sp["alias"]] = val
-                    out.append(rec)
+                out.extend(_match_rows(m, key_vals, id_col, ts_col, seq,
+                                       row_measures))
             else:
-                out.append(_match_row(
-                    m, {k: key[i] for i, k in enumerate(keys)},
-                    pos_steps, id_col, ts_col))
+                out.append(_match_row(m, key_vals, pos_steps, id_col,
+                                      ts_col))
             # events before the resume point can never join a future
             # match (every future match starts at or after it)
             evict_n = resume

@@ -24,10 +24,18 @@ _CHILD = textwrap.dedent("""
     from flink_1_11_2_with_comments_spark.sources.hive import (
         hive_spark, is_hive_catalog, partition_pruned_plan,
         save_partitioned_table, table_partitions)
+    from flink_1_11_2_with_comments_spark.session import (
+        CPUS, shuffle_width)
     from pyspark.sql import functions as F
 
     spark = hive_spark({warehouse!r}, {metastore!r})
     assert is_hive_catalog(spark), "session is not Hive-backed"
+    # the shared session's core count and shuffle width, not a fixed 8
+    assert spark.sparkContext.master == f"local[{{CPUS}}]", (
+        spark.sparkContext.master, CPUS)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert width == shuffle_width(CPUS), (width, CPUS)
+    print("SIZING_OK")
 
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     df = orders.withColumn("o_year", F.year("o_orderdate"))
@@ -76,12 +84,11 @@ def test_hive_catalog_roundtrip_subprocess():
             metastore=os.path.join(base, "metastore"))
         proc = subprocess.run(
             [sys.executable, "-c", script],
-            capture_output=True, text=True, timeout=300,
-            env={**os.environ, "SPARK_GRAFT_CPUS": "8"})
+            capture_output=True, text=True, timeout=300)
         out = proc.stdout
         assert proc.returncode == 0, (
             f"hive subprocess failed\nstdout:\n{out}\n"
             f"stderr:\n{proc.stderr[-4000:]}")
-        for marker in ("PARTITIONS_OK", "ROUNDTRIP_OK", "PRUNING_OK",
-                       "INSERT_OK"):
+        for marker in ("SIZING_OK", "PARTITIONS_OK", "ROUNDTRIP_OK",
+                       "PRUNING_OK", "INSERT_OK"):
             assert marker in out, f"missing {marker}\n{out}"

@@ -1011,6 +1011,19 @@ def test_cep_key_prefilter_no_extra_shuffle(spark, sf_dir):
     assert "BatchEvalPython" not in p
 
 
+def test_match_recognize_all_rows_single_exchange(spark, sf_dir):
+    """ALL ROWS PER MATCH measures are evaluated by the NFA as it
+    emits (cep._match_rows), not by a window over (keys, match_seq)
+    after it: the flag projection's keyed repartition is the plan's
+    only Exchange and the key prefilter its only Window — the shape
+    test_cep_key_prefilter_no_extra_shuffle pins for cep_quantified."""
+    p = plan(spark, "match_recognize_all_rows", sf_dir)
+    body = p.split("== Physical Plan ==")[1].split("\n(1) ")[0]
+    assert body.count("Exchange") == 1, body
+    assert body.count("Window") == 1, body
+    assert "FlatMapGroupsInPandas" in body, body
+
+
 def test_domain_quota_uses_window_group_limit(spark, sf_dir):
     """corpus_domain_quota's per-source cap must compile to
     WindowGroupLimit: each map partition pre-prunes to its local

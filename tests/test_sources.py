@@ -327,7 +327,7 @@ def test_match_recognize_parser_subset():
     grammar maps to the right QStep bounds."""
     import pytest
     from flink_1_11_2_with_comments_spark.plans.match_recognize import (
-        _parse_pattern, _parse_predicate)
+        _parse_define, _parse_pattern, _parse_predicate)
     branches, excluded, permute = _parse_pattern("(A B+ C{2,4} D{3} E{2,})")
     assert branches == [[
         ("A", 1, 1, True), ("B", 1, None, True), ("C", 2, 4, True),
@@ -351,18 +351,68 @@ def test_match_recognize_parser_subset():
         _parse_pattern("(A | PERMUTE(B, C))")  # permute + alternation
     with pytest.raises(NotImplementedError):
         _parse_pattern("(A {- B -} {- C -)")  # unbalanced exclusion
-    p = _parse_predicate("X.v >= 10 AND X.t = 'click'", "X")
+    p = _parse_predicate(_parse_define("X.v >= 10 AND X.t = 'click'", "X"))
     assert p({"v": 10, "t": "click"}) and not p({"v": 9, "t": "click"})
     with pytest.raises(NotImplementedError):
-        _parse_predicate("X.v > Y.v", "X")  # cross-variable condition
+        _parse_define("X.v > Y.v", "X")  # cross-variable condition
+    with pytest.raises(NotImplementedError):
+        _parse_define("Y.v > PREV(Y.v)", "X")  # nav on another variable
     # PREV/NEXT navigation over the __prev/__next chain
     a = {"v": 1, "__prev": None}
     b = {"v": 2, "__prev": a, "__next": None}
     a["__next"] = b
-    up = _parse_predicate("X.v > PREV(X.v)", "X")
+    up = _parse_predicate(_parse_define("X.v > PREV(X.v)", "X"))
     assert up(b) and not up(a)  # partition start → NULL → false
-    peak = _parse_predicate("X.v < NEXT(X.v)", "X")
+    peak = _parse_predicate(_parse_define("X.v < NEXT(X.v)", "X"))
     assert peak(a) and not peak(b)
+
+
+def test_match_recognize_define_emitters_agree(spark):
+    """One DEFINE parse, two emitters: the batch JVM Column
+    (_parse_flag_expr, PREV/NEXT as LAG/LEAD) and the stream's Python
+    predicate (_parse_predicate over the __prev/__next chain) give
+    the same flag on every row, for every condition form."""
+    from flink_1_11_2_with_comments_spark.plans.match_recognize import (
+        _lag_window, _parse_define, _parse_flag_expr, _parse_predicate)
+    rows = [(k, i, typ, v) for k, seq in
+            ((1, [("view", 3), ("click", 5), ("click", 4), ("buy", 7),
+                  ("click", 7), ("view", 1)]),
+             (2, [("click", 2), ("buy", 2), ("view", 9)]))
+            for i, (typ, v) in enumerate(seq)]
+    df = spark.createDataFrame(rows, "k bigint, id bigint, t string, "
+                                     "v bigint")
+    conds = [
+        "X.t = 'click'",
+        "X.t <> 'click'",
+        "X.v >= 5",
+        "X.v < 4.5",
+        "X.t = 'click' AND X.v > 4",
+        "X.t = 'buy' OR X.v = 1 OR X.t = 'view' AND X.v > 2",
+        "X.t IN ('click', 'buy')",
+        "X.t NOT IN ('click') AND X.v IN (1, 2, 7)",
+        "X.v > PREV(X.v)",
+        "X.v >= PREV(X.v, 2)",
+        "X.v < NEXT(X.v)",
+        "X.t = 'click' AND X.v = PREV(X.v) OR X.v < NEXT(X.v, 2)",
+        "TRUE",
+    ]
+    w = _lag_window(["k"], "id", "id")
+    got = df.select("k", "id", *[
+        _parse_flag_expr(_parse_define(c, "X"), lag_window=w).alias(f"f{i}")
+        for i, c in enumerate(conds)]).collect()
+    assert len(got) == len(rows)
+    jvm = {(r.k, r.id): [r[f"f{i}"] for i in range(len(conds))]
+           for r in got}
+    preds = [_parse_predicate(_parse_define(c, "X")) for c in conds]
+    for key in (1, 2):
+        evs = [{"k": k, "id": i, "t": t, "v": v}
+               for k, i, t, v in rows if k == key]
+        for j, ev in enumerate(evs):
+            ev["__prev"] = evs[j - 1] if j else None
+            ev["__next"] = evs[j + 1] if j + 1 < len(evs) else None
+        for ev in evs:
+            assert [p(ev) for p in preds] == jvm[(key, ev["id"])], (
+                key, ev["id"])
 
 
 def test_window_rowtime_auxiliary(spark):

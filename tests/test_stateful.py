@@ -1447,6 +1447,48 @@ def test_match_recognize_star_streaming(spark, events):
     assert any(n == 0 for _u, _v, n, _p in got)  # zero-B matches too
 
 
+def test_match_recognize_measures_boundary():
+    """MEASURES is parsed once for both modes. ONE ROW PER MATCH reads
+    only per-variable measures (RUNNING/FINAL prefixes accepted and
+    both final there) and rejects MATCH_NUMBER(), CLASSIFIER() and
+    COUNT(*); ALL ROWS PER MATCH takes all six kinds; an unsupported
+    measure raises in both modes before any Spark work."""
+    from flink_1_11_2_with_comments_spark.plans.match_recognize import (
+        _parse_measures, match_recognize)
+    sql = """SELECT * FROM events MATCH_RECOGNIZE (
+          PARTITION BY user_id
+          ORDER BY ts, event_id
+          MEASURES {m}
+          {mode}
+          PATTERN (A B+)
+          DEFINE A AS A.event_type = 'view',
+                 B AS B.event_type = 'click'
+        )"""
+    one, all_ = "ONE ROW PER MATCH", "ALL ROWS PER MATCH"
+    for m in ("MATCH_NUMBER() AS x", "CLASSIFIER() AS x", "COUNT(*) AS x",
+              "FINAL COUNT(*) AS x"):
+        with pytest.raises(NotImplementedError, match="MEASURES subset"):
+            match_recognize(None, sql.format(m=m, mode=one))
+    for mode in (one, all_):
+        with pytest.raises(NotImplementedError, match="SUM"):
+            match_recognize(None, sql.format(m="SUM(A.value) AS s",
+                                             mode=mode))
+    text = ("RUNNING COUNT(B.*) AS n, FINAL FIRST(B.event_id) AS f, "
+            "LAST(B.event_id) AS l, A.event_id AS a")
+    assert [(d["kind"], d["var"]) for d in
+            _parse_measures(text, "event_id", all_rows=False)] == [
+        ("count_var", "B"), ("first_id", "B"), ("last_id", "B"),
+        ("last_id", "A")]
+    got = _parse_measures("MATCH_NUMBER() AS m, CLASSIFIER() AS c, "
+                          "FINAL COUNT(*) AS n, " + text, "event_id",
+                          all_rows=True)
+    assert [(d["alias"], d["kind"], d["final"]) for d in got] == [
+        ("m", "match_number", False), ("c", "classifier", False),
+        ("n", "count_all", True), ("n", "count_var", False),
+        ("f", "first_id", True), ("l", "last_id", False),
+        ("a", "last_id", False)]
+
+
 def test_group_reluctant_and_streaming_boundaries():
     """Reluctant group quantifiers unroll ascending (fewer reps
     preferred) and the stray `?` never leaks onto the last unrolled
