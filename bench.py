@@ -148,11 +148,13 @@ def build_scaled(spark, base_dir: str, out_dir: str,
 def _release_persisted(spark) -> None:
     """Cold-cache discipline between measured queries: clearCache()
     drops catalog-cached relations but NOT localCheckpoint storage
-    (checkpointed RDDs are persisted outside the catalog). Iterative
-    queries (graph loops, classifier fits, pipeline stages) leave one
-    checkpointed RDD per superstep pinned to memory; across 70+
-    queries x 2 scales x 3 runs that accumulation becomes GC
-    pressure that inflates later queries at 10x data. Unpersisting
+    (checkpointed RDDs are persisted outside the catalog). The driver
+    loops (operators/graph._Loop: graph loops, PCA, the classifier
+    fit) release their own rounds and caches and leave only their
+    checkpointed result pinned; other checkpointing stages (BPE
+    merges, streaming-batch faces) still leave theirs. Across 70+
+    queries x 2 scales x 3 runs those results would accumulate into
+    GC pressure that inflates later queries at 10x data. Unpersisting
     is safe here because the previous query's DataFrames are dead —
     a localCheckpointed frame must never be unpersisted while still
     referenced (its lineage is truncated, so recompute is

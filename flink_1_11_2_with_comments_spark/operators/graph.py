@@ -9,10 +9,18 @@ DataFrames — each iteration is one join+aggregate stage, and
 checkpoint/persist truncates the lineage so the plan doesn't grow
 unboundedly (the scale concern for iteration on Spark).
 
-Frontier-delta loops (connected components, SSSP) are calls into ONE
-driver, ``pregel`` (Gelly's VertexCentricIteration). ``_loop_edges``
-is the single owner of a loop's edge cache: width from input stats,
-persisted and released by the helper, never the caller's frame.
+Every driver loop — PageRank, label propagation, HITS, ``pregel``,
+``k_core_pairs``, and outside this module ``pca.power_top1`` and
+``quality_clf.logreg_fit`` — runs through ONE superstep driver,
+``_Loop`` (the role DataSet.iterate/iterateDelta play for Gelly): an
+algorithm supplies its initial state, a step function and, for a
+fixpoint loop, a pending-work count; the driver owns the round loop,
+the ``_superstep`` barrier, the fixpoint check with its
+not-converged warning, and the loop's storage. Frontier-delta loops
+(connected components, SSSP) are calls into ``pregel`` (Gelly's
+VertexCentricIteration). ``_loop_edges`` is the single owner of a
+loop's edge cache: width from input stats, persisted and released by
+the helper, never the caller's frame.
 
 Determinism: rank sums accumulate in DECIMAL and round to 9 digits
 per iteration so results replay exactly in the SQL oracle.
@@ -23,7 +31,7 @@ from __future__ import annotations
 import warnings
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._sizing import loop_width
@@ -32,14 +40,16 @@ DEC = "decimal(38,10)"
 
 
 def _warn_not_converged(algo: str, max_iter: int) -> None:
-    """Label propagation stopped at the iteration cap with changes still
-    pending: the returned labels are NOT a fixed point (a component of
-    diameter > max_iter keeps distinct labels). Silent truncation here
-    diverged from full-closure oracles; make it loud."""
+    """A fixpoint loop (``pregel``, ``k_core_pairs``) stopped at its
+    round cap with work still pending: the result is NOT a fixed point
+    (a component of diameter > max_iter keeps distinct labels, a peel
+    cascade stops half-way). Silent truncation here diverged from
+    full-closure oracles; make it loud. ``stacklevel`` points at the
+    algorithm's caller (warn <- _Loop.run <- algorithm <- caller)."""
     warnings.warn(
         f"{algo}: hit max_iter={max_iter} before convergence — "
         f"results are not a fixed point; raise max_iter",
-        RuntimeWarning, stacklevel=3)
+        RuntimeWarning, stacklevel=4)
 
 
 def _superstep(df: DataFrame) -> DataFrame:
@@ -60,8 +70,94 @@ def _superstep(df: DataFrame) -> DataFrame:
     instead of two. Loops without a per-round action (pagerank's
     fixed iterations) collapse further: the whole chain executes in
     the final action, each level persisting as it computes.
+
+    This is the one barrier: ``_Loop.run`` calls it once per round
+    (and ``_Loop`` owners call it for their loop-invariant frames),
+    always through this module global, so a wrapper installed on the
+    attribute sees every superstep.
     """
     return df.localCheckpoint(eager=False)
+
+
+def _rdd(df: DataFrame):
+    """The RDD under a checkpointed frame (its plan is one LogicalRDD),
+    None for any other frame."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
+
+
+class _Loop:
+    """The one superstep driver: a driver loop's rounds, its fixpoint
+    check and its storage (DataSet.iterate/iterateDelta,
+    DataSet.java:1131,1179, own the same three for Gelly).
+
+    Use as a context manager. ``own(df)`` registers a loop-invariant
+    frame the algorithm persisted or checkpointed; ``run`` registers
+    every round's checkpoint. On exit, on error too, every registered
+    frame is released except ``run``'s result — so a loop leaves at
+    most its result behind, and never touches a caller's frame, which
+    is never registered.
+
+    Releasing earlier rounds is safe because ``run`` materializes its
+    result first: materializing a local checkpoint truncates its
+    lineage, so nothing reads the earlier rounds again (State
+    Management in Apache Flink, VLDB'17: state is scoped to the
+    operator that made it, and the runtime clears it).
+    """
+
+    def __enter__(self) -> _Loop:
+        self._owned: list[DataFrame] = []
+        self._result = None
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self._owned:
+            if df is self._result:
+                continue
+            if df.is_cached:  # persisted by the algorithm
+                df.unpersist()
+            else:  # a checkpoint: drop its RDD
+                _rdd(df).unpersist(False)
+
+    def own(self, df: DataFrame) -> DataFrame:
+        self._owned.append(df)
+        return df
+
+    def run(self, state: DataFrame, step, rounds: int, pending=None,
+            batch=None, algo: str = "loop") -> DataFrame:
+        """Up to ``rounds`` supersteps ``state = _superstep(step(state,
+        n))``; returns the last state, materialized.
+
+        pending: ``fn(state) -> int``, the fixpoint check — one action
+            counting the work left; 0 stops the loop. Without it the
+            loop runs exactly ``rounds`` rounds. A loop that ends with
+            work pending warns (_warn_not_converged).
+        batch: ``fn(n) -> int``, rounds to chain before the next check
+            when the last one counted ``n``; the first check then runs
+            before round 1. Without it every round is checked after it
+            runs — no check before round 1, so an every-round loop
+            runs one action per round and no more.
+        n: the last check's count (None before the first check) — the
+            exact size of the work a round starts from right after a
+            check, an upper bound past it.
+        """
+        n = pending(state) if batch else None
+        done = due = 0
+        while done < rounds and n != 0:
+            if due == 0:
+                due = batch(n) if batch else 1
+            state = self.own(_superstep(step(state, n)))
+            done, due = done + 1, due - 1
+            if pending and (due == 0 or done == rounds):
+                n = pending(state)
+        if n:
+            _warn_not_converged(algo, rounds)
+        if _rdd(state) is None:  # no round ran: pin the initial state
+            state = self.own(_superstep(state))
+        if not _rdd(state).isCheckpointed():
+            _rdd(state).count()
+        self._result = state
+        return state
 
 
 @contextmanager
@@ -73,17 +169,15 @@ def _loop_edges(edges: DataFrame):
     stats (the Long.MaxValue sentinel of RDD-backed input, or a joined
     input, whose estimate is a product: est_input_bytes) fall back to
     by-column repartition, which AQE can coalesce, instead of a
-    200k-task loop. Only the frame made here is persisted
-    and it is released in ``finally``; the caller's frame is never
-    persisted or unpersisted, so a caller's cache survives the loop.
+    200k-task loop. Only the frame made here is persisted, and a
+    ``_Loop`` releases it when the block exits, on error too; the
+    caller's frame is never persisted or unpersisted, so a caller's
+    cache survives the loop.
     """
     n_part = loop_width(edges)
-    owned = (edges.repartition(n_part, "src") if n_part
-             else edges.repartition("src")).persist()
-    try:
-        yield owned
-    finally:
-        owned.unpersist()
+    with _Loop() as loop:
+        yield loop.own((edges.repartition(n_part, "src") if n_part
+                        else edges.repartition("src")).persist())
 
 
 def cooccurrence_pairs(df: DataFrame, group_col: str,
@@ -137,41 +231,31 @@ def pagerank(edges: DataFrame, iterations: int = 3,
     dropped), rank rounded to 9 digits per iteration for
     engine-exact replay. Each iteration: one join + one aggregate.
     """
-    out_deg = (edges.groupBy(F.col("src").alias("n"))
-               .agg(F.count("*").alias("deg")).persist())
-    nodes = (edges.select(F.col("src").alias("node"))
-             .union(edges.select(F.col("dst").alias("node"))).distinct()
-             .persist())
-    ranks = nodes.withColumn("rank", F.lit(1.0))
+    with _Loop() as loop:
+        out_deg = loop.own(edges.groupBy(F.col("src").alias("n"))
+                           .agg(F.count("*").alias("deg")).persist())
+        nodes = loop.own(edges.select(F.col("src").alias("node"))
+                         .union(edges.select(F.col("dst").alias("node")))
+                         .distinct().persist())
 
-    for _ in range(iterations):
-        contribs = (edges
-                    .join(ranks, edges.src == ranks.node)
-                    .join(out_deg, edges.src == out_deg.n)
-                    .select(F.col("dst"),
-                            (F.col("rank") / F.col("deg")).alias("contrib")))
-        summed = (contribs.groupBy(F.col("dst").alias("node2"))
-                  .agg(F.sum(F.col("contrib").cast(DEC)).cast("double")
-                       .alias("inflow")))
-        # materialize + truncate each round so round i+1 scans the
-        # round-i RDD, not an i-deep join lineage (plan depth stays
-        # constant; the unpersisted form replans the whole history
-        # every round)
-        ranks = _superstep(
-            nodes.join(summed, nodes.node == F.col("node2"), "left")
-            .select("node",
-                    F.round(F.lit(1.0) - damping
-                            + damping * F.coalesce("inflow", F.lit(0.0)),
-                            9).alias("rank")))
-    # pagerank has no per-round action (fixed iterations), so with
-    # lazy supersteps nothing has materialized yet — force the chain
-    # ONCE while the out_deg/nodes caches are still live, otherwise
-    # unpersisting here would make the final action re-aggregate
-    # degrees and re-distinct nodes once per iteration level
-    ranks = ranks.localCheckpoint(eager=True)
-    out_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+        def step(ranks: DataFrame, _) -> DataFrame:
+            contribs = (edges.join(ranks, edges.src == ranks.node)
+                        .join(out_deg, edges.src == out_deg.n)
+                        .select("dst", (F.col("rank") / F.col("deg"))
+                                .alias("contrib")))
+            summed = (contribs.groupBy(F.col("dst").alias("node2"))
+                      .agg(F.sum(F.col("contrib").cast(DEC)).cast("double")
+                           .alias("inflow")))
+            return (nodes.join(summed, nodes.node == F.col("node2"), "left")
+                    .select("node", F.round(F.lit(1.0) - damping + damping
+                                            * F.coalesce("inflow", F.lit(0.0)),
+                                            9).alias("rank")))
+
+        # no per-round action: the driver's closing materialization
+        # runs the whole chain ONCE, while out_deg/nodes are still
+        # cached
+        return loop.run(nodes.withColumn("rank", F.lit(1.0)), step,
+                        iterations)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -216,19 +300,19 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     und = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"),
                      F.col("src").alias("dst"))).distinct()
-    labels = und.select(F.col("src").alias("node")) \
-        .distinct().withColumn("lbl", F.col("node"))
-    from pyspark.sql import Window as W
-    for _ in range(iterations):
+
+    def step(labels: DataFrame, _) -> DataFrame:
         freq = (und.join(labels, und.dst == labels.node)
                 .groupBy(F.col("src").alias("n2"), "lbl")
                 .agg(F.count("*").alias("c")))
         rn = F.row_number().over(
-            W.partitionBy("n2").orderBy(F.desc("c"), "lbl"))
-        labels = _superstep(
-            freq.withColumn("rn", rn).where(F.col("rn") == 1)
-            .select(F.col("n2").alias("node"), "lbl"))
-    return labels
+            Window.partitionBy("n2").orderBy(F.desc("c"), "lbl"))
+        return (freq.withColumn("rn", rn).where(F.col("rn") == 1)
+                .select(F.col("n2").alias("node"), "lbl"))
+
+    with _Loop() as loop:
+        return loop.run(und.select(F.col("src").alias("node")).distinct()
+                        .withColumn("lbl", F.col("node")), step, iterations)
 
 
 def salted_wedge_pairs(df: DataFrame, center: str, endpoint: str,
@@ -307,44 +391,46 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     subtree, six scans of the fact tables per call. At 100 TB the
     stats-derived width keeps the loop thousands of partitions wide
     and the persist holds one |E|-row table that six consumers reuse.
-    Both caches are released on exit, on error too; the caller's
+    The edge cache, the checkpointed start state and every phase but
+    the last are released on exit, on error too; the caller's
     ``edges`` frame is never unpersisted.
-    """
-    with _loop_edges(edges) as edges:
-        nodes = (edges.select(F.col("src").alias("node"))
-                 .union(edges.select(F.col("dst").alias("node")))
-                 .distinct().persist())
-        try:
-            hub = nodes.withColumn("hub", F.lit(1.0))
-            auth = nodes.withColumn("auth", F.lit(1.0))
 
-            def _phase(scores: DataFrame, score_col: str, edge_from: str,
-                       edge_to: str, out_col: str) -> DataFrame:
-                raw = (edges.join(scores, edges[edge_from] == scores.node)
-                       .groupBy(F.col(edge_to).alias("n2"))
-                       .agg(F.round(F.sum(F.col(score_col).cast(DEC)), 12)
-                            .cast("double").alias("raw")))
-                filled = (nodes.join(raw, nodes.node == F.col("n2"), "left")
-                          .select("node", F.coalesce("raw", F.lit(0.0))
-                                  .alias("raw")))
-                nrm = filled.agg(
-                    F.round(F.sqrt(F.round(F.sum(
-                        (F.col("raw") * F.col("raw")).cast(DEC)), 12)
-                        .cast("double")), 12).alias("nrm"))
-                return _superstep(
-                    filled.crossJoin(F.broadcast(nrm))
-                    .select("node", F.round(F.col("raw") / F.col("nrm"), 9)
+    One superstep is one phase, so the loop runs 2 x ``iterations``
+    rounds over ONE state frame (node, hub, auth): a phase recomputes
+    the score the previous phase did not (the state's last column
+    names the one it did) and carries the other along, so the last
+    state already holds the final hub and authority side by side —
+    no closing join.
+    """
+    with _loop_edges(edges) as edges, _Loop() as loop:
+        def phase(scores: DataFrame, _) -> DataFrame:
+            score_col = scores.columns[-1]
+            out_col, edge_from, edge_to = (
+                ("auth", "src", "dst") if score_col == "hub"
+                else ("hub", "dst", "src"))
+            raw = (edges.join(scores, edges[edge_from] == scores.node)
+                   .groupBy(F.col(edge_to).alias("n2"))
+                   .agg(F.round(F.sum(F.col(score_col).cast(DEC)), 12)
+                        .cast("double").alias("raw")))
+            filled = (scores.join(raw, scores.node == F.col("n2"), "left")
+                      .select("node", score_col,
+                              F.coalesce("raw", F.lit(0.0)).alias("raw")))
+            nrm = filled.agg(
+                F.round(F.sqrt(F.round(F.sum(
+                    (F.col("raw") * F.col("raw")).cast(DEC)), 12)
+                    .cast("double")), 12).alias("nrm"))
+            return (filled.crossJoin(F.broadcast(nrm))
+                    .select("node", score_col,
+                            F.round(F.col("raw") / F.col("nrm"), 9)
                             .alias(out_col)))
 
-            for _ in range(iterations):
-                auth = _phase(hub, "hub", "src", "dst", "auth")
-                hub = _phase(auth, "auth", "dst", "src", "hub")
-            return (hub.join(auth.select(F.col("node").alias("n3"), "auth"),
-                             hub.node == F.col("n3"))
-                    .select("node", "hub", F.col("auth").alias("authority"))
-                    .localCheckpoint(eager=True))
-        finally:
-            nodes.unpersist()
+        start = loop.own(_superstep(
+            edges.select(F.col("src").alias("node"))
+            .union(edges.select(F.col("dst").alias("node"))).distinct()
+            .select("node", F.lit(1.0).alias("auth"),
+                    F.lit(1.0).alias("hub"))))
+        out = loop.run(start, phase, 2 * iterations)
+    return out.select("node", "hub", F.col("auth").alias("authority"))
 
 
 def summarize(edges: DataFrame, groups: DataFrame) -> dict:
@@ -400,35 +486,36 @@ def pregel(edges: DataFrame, initial: DataFrame, send_msg,
     combiner-aggregated shuffle + one state merge; lineage truncated
     per round. Terminates when the frontier empties (or max_iter,
     loudly).
+
+    The loop state is the round's merge, (node, __old, value): the
+    frontier is its changed rows, so the driver's fixpoint check — one
+    ``limit(1)`` count per round — is the frontier-empty test. The
+    start state has a NULL ``__old``, so every initial vertex scatters.
     """
-    state = initial
-    frontier = initial
-    for _ in range(max_iter):
-        msgs = (edges.join(frontier.select(F.col("node").alias("__s"),
-                                           "value"),
-                           edges.src == F.col("__s"))
+    def changed(merged: DataFrame) -> DataFrame:
+        return (merged.where(F.col("__old").isNull()
+                             | (F.col("value") != F.col("__old")))
+                .select(F.col("node").alias("__s"), "value"))
+
+    def step(merged: DataFrame, _) -> DataFrame:
+        msgs = (edges.join(changed(merged), edges.src == F.col("__s"))
                 .select(F.col("dst").alias("node"),
                         send_msg.alias("msg")))
         inbox = msgs.groupBy("node").agg(merge_msg(F.col("msg"))
                                          .alias("msg"))
-        merged = (state.join(inbox, "node", "full")
-                  .select("node",
-                          F.col("value").alias("__old"),
-                          F.when(F.col("msg").isNull(), F.col("value"))
-                          .otherwise(update(F.col("value"),
-                                            F.col("msg")))
-                          .alias("value")))
-        merged = _superstep(merged)
-        frontier = (merged.where(F.col("__old").isNull()
-                                 | (F.col("value") != F.col("__old")))
-                    .select("node", "value"))
-        state = merged.select("node", "value")
-        if frontier.limit(1).count() == 0:
-            break
-    else:
-        if frontier.limit(1).count() > 0:
-            _warn_not_converged(algo, max_iter)
-    return state
+        return (merged.select("node", "value")
+                .join(inbox, "node", "full")
+                .select("node",
+                        F.col("value").alias("__old"),
+                        F.when(F.col("msg").isNull(), F.col("value"))
+                        .otherwise(update(F.col("value"), F.col("msg")))
+                        .alias("value")))
+
+    start = initial.select("node", F.lit(None).alias("__old"), "value")
+    with _Loop() as loop:
+        out = loop.run(start, step, max_iter, algo=algo,
+                       pending=lambda m: changed(m).limit(1).count())
+    return out.select("node", "value")
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -452,8 +539,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     return out.select("node", F.col("value").alias("component"))
 
 
-def k_core_pairs(pairs: DataFrame, k: int, max_iter: int = 30,
-                 peels_per_job: int = 4) -> DataFrame:
+def k_core_pairs(pairs: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     """k-core for a fixed k: peel vertices of in-subgraph degree < k
     to a fixpoint — Gelly's vertex-removal pattern (filterOnVertices
     under DataSet.iterateDelta, DataSet.java:1179). Degrees aggregate
@@ -475,69 +561,59 @@ def k_core_pairs(pairs: DataFrame, k: int, max_iter: int = 30,
       round, so this halves it.
     - The per-round driver action is FOLDED into the peel: a peel is
       idempotent past its fixpoint (removing nothing decrements
-      nothing), so rounds are chained LAZILY (_superstep eager=False
-      keeps each round's plan flat) and ONE count at the end of a
-      batch both materializes the whole chain and answers the
-      convergence question. Speculative rounds inside a batch never
-      see an exact delta size, so they only run while the PROVABLE
-      bound fits the broadcast budget: a peeled vertex has
-      in-subgraph degree < k, so the next delta — a subset of the
-      peeled set's alive neighbors — has at most |delta| * (k-1)
-      rows. Batch entry sizes are exact (counted at the previous
-      batch boundary); a first round that peels half the graph
-      shuffle-joins instead of broadcasting.
+      nothing), so the driver chains up to ``peels_per_check`` = 4
+      rounds LAZILY (_superstep eager=False keeps each round's plan
+      flat) and ONE count after the batch both materializes the whole
+      chain and answers the convergence question (``_Loop.run``'s
+      ``batch``). Speculative rounds inside a batch never see an
+      exact delta size, so they only run while the PROVABLE bound
+      fits the broadcast budget: a peeled vertex has in-subgraph
+      degree < k, so the next delta — a subset of the peeled set's
+      alive neighbors — has at most |delta| * (k-1) rows. Batch
+      entry sizes are exact (counted at the previous check, the
+      first one before round 1); a first round that peels half the
+      graph shuffle-joins instead of broadcasting, alone in its batch.
 
     Trailing speculative rounds past the fixpoint are no-ops (empty
     build side; AQE's empty-relation propagation skips the edge
     scan), costing only the |V_alive| degree-table rewrite — which is
     exactly what lets the SQL oracle unroll a fixed round count.
     """
-    pairs = _superstep(pairs.select("a", "b"))
-    deg = (pairs.select(F.explode(F.array("a", "b")).alias("node"))
-           .groupBy("node").agg(F.count("*").alias("d")))
-    deg = _superstep(deg)
-    broadcast_rows = 5_000_000
+    broadcast_rows, peels_per_check, grow = 5_000_000, 4, max(k - 1, 1)
 
-    def peel(deg: DataFrame, rem: DataFrame) -> DataFrame:
-        # single scan of the half cache: explode both orientations,
-        # probe the broadcast delta, count decrements per survivor
-        exp = (pairs.select(F.explode(F.array(
-            F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-            F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-        )).alias("e")).select("e.u", "e.v"))
-        dec = (exp.join(rem, exp.u == rem.node)
-               .groupBy(F.col("v").alias("node"))
-               .agg(F.count("*").alias("__dec")))
-        return _superstep(
-            deg.where(F.col("d") >= k)
-            .join(dec, "node", "left")
-            .select("node",
-                    (F.col("d") - F.coalesce(F.col("__dec"),
-                                             F.lit(0))).alias("d")))
+    def below(deg: DataFrame) -> DataFrame:
+        return deg.where(F.col("d") < k).select("node")
 
-    rounds = 0
-    # this count is the ONLY driver action per batch: it materializes
-    # the lazily-checkpointed chain AND measures the next delta
-    n_below = deg.where(F.col("d") < k).count()
-    while n_below > 0 and rounds < max_iter:
-        removed = deg.where(F.col("d") < k).select("node")
-        rem = (F.broadcast(removed) if n_below <= broadcast_rows
-               else removed)
-        deg = peel(deg, rem)
-        rounds += 1
-        # speculative rounds: no action between peels; broadcast is
-        # safe while the worst-case delta bound fits the budget
-        bound = n_below * max(k - 1, 1)
-        batched = 1
-        while (batched < peels_per_job and rounds < max_iter
-               and bound <= broadcast_rows):
-            removed = deg.where(F.col("d") < k).select("node")
-            deg = peel(deg, F.broadcast(removed))
-            rounds += 1
-            batched += 1
-            bound *= max(k - 1, 1)
-        n_below = deg.where(F.col("d") < k).count()
-    if n_below > 0:
-        _warn_not_converged("k_core", max_iter)
-    return deg.select("node",
+    def batch(n: int) -> int:
+        # the exact count n, then n * (k-1)^j bounds the j-th
+        # speculative delta: chain rounds while it fits the broadcast
+        return 1 + sum(n * grow ** j <= broadcast_rows
+                       for j in range(1, peels_per_check))
+
+    with _Loop() as loop:
+        pairs = loop.own(_superstep(pairs.select("a", "b")))
+
+        def peel(deg: DataFrame, n: int) -> DataFrame:
+            # single scan of the half cache: explode both orientations,
+            # probe the peel delta, count decrements per survivor
+            rem = (F.broadcast(below(deg)) if n <= broadcast_rows
+                   else below(deg))
+            exp = (pairs.select(F.explode(F.array(
+                F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
+                F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
+            )).alias("e")).select("e.u", "e.v"))
+            dec = (exp.join(rem, exp.u == rem.node)
+                   .groupBy(F.col("v").alias("node"))
+                   .agg(F.count("*").alias("__dec")))
+            return (deg.where(F.col("d") >= k)
+                    .join(dec, "node", "left")
+                    .select("node", (F.col("d") - F.coalesce(
+                        F.col("__dec"), F.lit(0))).alias("d")))
+
+        deg = loop.own(_superstep(
+            pairs.select(F.explode(F.array("a", "b")).alias("node"))
+            .groupBy("node").agg(F.count("*").alias("d"))))
+        out = loop.run(deg, peel, max_iter, algo="k_core",
+                       pending=lambda deg: below(deg).count(), batch=batch)
+    return out.select("node",
                       F.col("d").cast("bigint").alias("core_degree"))

@@ -7,7 +7,7 @@ assume roughly isotropic residuals), and projecting onto the top
 principal component for fast 1-D pre-filters. The reference's
 equivalent surface is iterative DataSet algebra (DataSet.iterate,
 flink-java/.../DataSet.java:1139 — the same superstep contract the
-Gelly ops here already mirror via operators/graph._superstep).
+Gelly ops here run through: operators/graph._Loop).
 
 Scale design (100 TB embeddings, dimension D):
 - The DATA-heavy step is the Gram/covariance pass: each row computes
@@ -15,8 +15,9 @@ Scale design (100 TB embeddings, dimension D):
   join), and one hash aggregate reduces the cells — the shuffle
   carries only map-side partials (<= partitions * D^2 rows,
   corpus-size-independent). The output is D^2 rows (4096 for D=64)
-  — tiny — and is materialized ONCE (localCheckpoint) before
-  iteration.
+  — tiny — and is checkpointed ONCE before iteration; the superstep
+  driver (operators/graph._Loop) owns that checkpoint and the
+  per-round ones, and releases all but the final vector.
 - Power iteration then touches ONLY the D^2-row matrix and a D-row
   vector per round: matrix-vector product as a join+groupBy, L2
   normalization as a 1-row aggregate broadcast back. Corpus data is
@@ -103,12 +104,14 @@ def power_top1(cov_full: DataFrame, rounds: int = 8) -> DataFrame:
     unit start 1/sqrt(D). Returns (i, v).
 
     Per round: one D^2 x D join + D-row aggregate (the mat-vec), one
-    1-row L2 norm broadcast back. The matrix is materialized once and
-    each iterate's lineage is truncated (the DataSet.iterate
-    superstep contract — see operators/graph._superstep), so round R
-    never replays rounds 1..R-1. Each iterate rounds to 12 dp: the
-    iteration is exactly reproducible on any cluster and in any SQL
-    engine that unrolls the same rounds.
+    1-row L2 norm broadcast back. The rounds run through the one
+    superstep driver (operators/graph._Loop, the DataSet.iterate
+    contract): the matrix is checkpointed once as a loop-invariant
+    frame the driver owns, each iterate's lineage is truncated, so
+    round R never replays rounds 1..R-1, and on return only the final
+    vector stays pinned. Each iterate rounds to 12 dp: the iteration
+    is exactly reproducible on any cluster and in any SQL engine that
+    unrolls the same rounds.
 
     Loop parallelism derives from the MATRIX's size, not the session
     shuffle width (the CC/HITS loop-width discipline, guide §2.2):
@@ -118,29 +121,32 @@ def power_top1(cov_full: DataFrame, rounds: int = 8) -> DataFrame:
     checkpoint (the checkpointed RDD reports the unknown sentinel).
     """
     from .._sizing import loop_width
-    from ..operators.graph import _superstep
+    from ..operators.graph import _Loop, _superstep
 
     n_part = loop_width(cov_full)
     if n_part:
         cov_full = cov_full.repartition(n_part, "j")
-    covf = _superstep(cov_full)
-    dims = covf.select("i").distinct()
-    d1 = dims.agg(F.count("*").alias("d"))
-    v = (dims.crossJoin(F.broadcast(d1))
-         .select("i", (F.lit(1.0) / F.sqrt(F.col("d"))).alias("v")))
-    for _ in range(rounds):
-        vr = v.select(F.col("i").alias("j2"), F.col("v").alias("vj"))
-        w = (covf.join(vr, covf.j == vr.j2)
-             .groupBy("i")
-             .agg(_dsum12(F.col("cov") * F.col("vj")).alias("w")))
-        nrm = w.agg(
-            F.round(F.sqrt(_dsum12(F.col("w") * F.col("w"))), 12)
-            .alias("nrm"))
-        v = _superstep(
-            w.crossJoin(F.broadcast(nrm))
-            .select("i", F.round(F.col("w") / F.col("nrm"), 12)
-                    .alias("v")))
-    return v
+    with _Loop() as loop:
+        covf = loop.own(_superstep(cov_full))
+        dims = covf.select("i").distinct()
+        d1 = dims.agg(F.count("*").alias("d"))
+
+        def step(v: DataFrame, _) -> DataFrame:
+            vr = v.select(F.col("i").alias("j2"), F.col("v").alias("vj"))
+            w = (covf.join(vr, covf.j == vr.j2)
+                 .groupBy("i")
+                 .agg(_dsum12(F.col("cov") * F.col("vj")).alias("w")))
+            nrm = w.agg(
+                F.round(F.sqrt(_dsum12(F.col("w") * F.col("w"))), 12)
+                .alias("nrm"))
+            return (w.crossJoin(F.broadcast(nrm))
+                    .select("i", F.round(F.col("w") / F.col("nrm"), 12)
+                            .alias("v")))
+
+        return loop.run(
+            dims.crossJoin(F.broadcast(d1))
+            .select("i", (F.lit(1.0) / F.sqrt(F.col("d"))).alias("v")),
+            step, rounds)
 
 
 def project_top1(z: DataFrame, v: DataFrame, scale: int = 6) -> DataFrame:

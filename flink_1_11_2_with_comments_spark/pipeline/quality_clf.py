@@ -32,8 +32,10 @@ evaluate it on identical doubles (the F.log precedent from DSIR).
 Scale (100 TB corpus):
 - The corpus pays ONE token-level shuffle total: explode collapses
   map-side to per-(doc, bucket) counts; the feature table (docs x
-  <=33 rows) is materialized ONCE (localCheckpoint) and every
-  iteration touches only it.
+  <=33 rows) is cached ONCE and every iteration touches only it; the
+  superstep driver (operators/graph._Loop) owns that cache and the
+  per-round weight checkpoints, and releases all but the final
+  weights.
 - Per iteration: one broadcast join of the 33-row weight vector +
   one per-doc aggregate (the margins) + one per-bucket aggregate
   (the gradient, 33 output rows). Nothing is ever collected; the
@@ -59,7 +61,6 @@ LR = 2.0                # power of two: lr * g is an exact scaling
 DEC14 = "decimal(30,14)"
 
 _Q14 = decimal.Decimal("1e-14")
-_Q12 = decimal.Decimal("1e-12")
 _Q9 = decimal.Decimal("1e-9")
 
 
@@ -92,49 +93,47 @@ def logreg_fit(docs: DataFrame, rounds: int = 3,
     """Train the classifier; returns the (feature, weight) table —
     N_BUCKETS + 1 rows. Deterministic: any cluster, any partitioning,
     and the unrolled SQL oracle all produce identical weights."""
-    from ..operators.graph import _superstep
+    from ..operators.graph import _Loop
 
     # persist, not localCheckpoint: xt is CONSTANT across rounds (only
-    # w iterates, and w gets its own per-round checkpoint below), so
-    # the plan cannot grow — and persist keeps the repartition's
-    # HashPartitioning(doc_id) visible to the optimizer, which a
-    # checkpoint's LogicalRDD drops. With xt pre-partitioned by
+    # w iterates, and w gets its own per-round checkpoint from the
+    # driver), so the plan cannot grow — and persist keeps the
+    # repartition's HashPartitioning(doc_id) visible to the optimizer,
+    # which a checkpoint's LogicalRDD drops. With xt pre-partitioned by
     # doc_id, each round's margin groupBy(doc_id) AND the gradient's
     # xt-join-p on doc_id are exchange-free; the only per-round
-    # shuffles left are the 4097-row weight/gradient tables.
+    # shuffles left are the 4097-row weight/gradient tables. The
+    # driver owns the cache and releases it once the weights are
+    # materialized.
     par = docs.sparkSession.sparkContext.defaultParallelism
-    xt = (doc_features(docs, target_lang)
-          .repartition(par, "doc_id").persist())
-    n_docs = xt.select("doc_id").distinct().count()
-    w = (docs.sparkSession.range(N_BUCKETS + 1)
-         .select(F.col("id").cast("int").alias("b"),
-                 F.lit(0.0).alias("w")))
-    for _ in range(rounds):
-        wb = F.broadcast(w.select(F.col("b").alias("wb"),
-                                  F.col("w").alias("wv")))
-        m = (xt.join(wb, xt.b == F.col("wb"))
-             .groupBy("doc_id")
-             .agg(F.round(F.sum((F.col("x") * F.col("wv"))
-                                .cast(DEC14)), 9)
-                  .cast("double").alias("m"),
-                  F.first("y").alias("y")))
-        p = m.select("doc_id",
-                     F.round(F.lit(1.0)
-                             / (F.lit(1.0) + F.exp(-F.col("m"))), 9)
-                     .alias("p"), "y")
-        g = (xt.join(p.select("doc_id", "p", F.col("y").alias("yy")),
-                     "doc_id")
-             .groupBy("b")
-             .agg(F.round(F.sum(((F.col("yy") - F.col("p"))
-                                 * F.col("x")).cast(DEC14)), 9)
-                  .cast("double").alias("g")))
-        w = _superstep(
-            w.join(g, "b", "left")
-            .select("b", F.round(F.col("w")
-                                 + F.lit(LR)
-                                 * F.coalesce(F.col("g"), F.lit(0.0))
-                                 / F.lit(float(n_docs)), 12)
-                    .alias("w")))
+    with _Loop() as loop:
+        xt = loop.own(doc_features(docs, target_lang)
+                      .repartition(par, "doc_id").persist())
+        n_docs = xt.select("doc_id").distinct().count()
+
+        def step(w: DataFrame, _) -> DataFrame:
+            wb = F.broadcast(w.select(F.col("b").alias("wb"),
+                                      F.col("w").alias("wv")))
+            m = (xt.join(wb, xt.b == F.col("wb")).groupBy("doc_id")
+                 .agg(F.round(F.sum((F.col("x") * F.col("wv")).cast(DEC14)),
+                              9).cast("double").alias("m"),
+                      F.first("y").alias("y")))
+            p = m.select("doc_id", F.round(
+                F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("m"))), 9).alias("p"),
+                "y")
+            g = (xt.join(p.select("doc_id", "p", F.col("y").alias("yy")),
+                         "doc_id")
+                 .groupBy("b")
+                 .agg(F.round(F.sum(((F.col("yy") - F.col("p"))
+                                     * F.col("x")).cast(DEC14)), 9)
+                      .cast("double").alias("g")))
+            return w.join(g, "b", "left").select("b", F.round(
+                F.col("w") + F.lit(LR) * F.coalesce(F.col("g"), F.lit(0.0))
+                / F.lit(float(n_docs)), 12).alias("w"))
+
+        w = loop.run(docs.sparkSession.range(N_BUCKETS + 1).select(
+            F.col("id").cast("int").alias("b"), F.lit(0.0).alias("w")),
+            step, rounds)
     return w.select(F.col("b").cast("bigint").alias("feature"),
                     F.col("w").alias("weight"))
 

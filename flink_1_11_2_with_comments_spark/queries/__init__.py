@@ -63,7 +63,9 @@ _PRIORITY: tuple[str, ...] = (
     # after-match scan) re-hashed the 19 faces that reach
     # streaming/cep.py: 15 sit in this block already, the other four
     # (cep_funnel, now on match_pattern_batch, and the three Pattern
-    # faces) follow the benchmark queries.
+    # faces) follow the benchmark queries. Building each batch CEP
+    # bucket's output as one frame (cep._bucketed_apply) re-hashed the
+    # batch faces among them again, all in this block.
     "tpch_q1",
     "agg_grouping_sets",
     "window_session_agg",
@@ -91,10 +93,11 @@ _PRIORITY: tuple[str, ...] = (
     "match_recognize_min0_leading",
     "match_recognize_min0_trailing",
     "temporal_join_event_sql",
-    # (m) the 20 media faces, re-hashed when their 25 hand-written
-    # mapInPandas loops became map_rows calls and the synthesizers'
-    # unconditional repartition became widen_if_underparallel (plans
-    # and rows unchanged at sf0.01).
+    # (m) 11 of the 20 media faces, re-hashed when their 25
+    # hand-written mapInPandas loops became map_rows calls and the
+    # synthesizers' unconditional repartition became
+    # widen_if_underparallel (plans and rows unchanged at sf0.01). The
+    # other nine, verified since and unchanged, made room for (l).
     "multimodal_features",
     "multimodal_decode",
     "multimodal_metadata",
@@ -106,26 +109,24 @@ _PRIORITY: tuple[str, ...] = (
     "multimodal_audio_resample",
     "multimodal_gif_decode",
     "multimodal_roundtrip_check",
-    "multimodal_transform_check",
-    "multimodal_pixel_check",
-    "multimodal_gif_check",
-    "multimodal_jpeg_check",
-    "multimodal_mjpeg_frames",
-    "multimodal_flac_check",
-    "dedup_image_phash",
-    "dedup_audio_fingerprint",
-    "dedup_video_fingerprint",
-    # (s) the two loop faces outside this block that the one
-    # loop-width rule (_sizing.loop_width, shared by _loop_edges and
-    # pca.power_top1) re-hashed; their plans are unchanged at sf0.01.
-    # They took the places of graph_sssp and graph_pregel_sssp, whose
-    # source has not changed since the frontier-loop consolidation.
+    # (l) every face that runs a driver loop, re-hashed when the loops
+    # became step functions of the one superstep driver
+    # (operators/graph._Loop): the graph loops, pregel's callers,
+    # k-core, dedup's clustering, the PCA faces and the classifier
+    # faces that reach quality_clf.logreg_fit. Rows are unchanged at
+    # sf0.01. graph_connected_components sits in (r0).
+    "graph_pagerank",
+    "graph_label_propagation",
     "graph_hits",
-    "embedding_pca_project_top1",
-    # (r1) the round-15 window's frontier-loop face that is still here:
-    # dedup's clustering runs through operators/graph.pregel, and
-    # _loop_edges re-hashed it again.
+    "graph_pregel_components",
+    "graph_sssp",
+    "graph_pregel_sssp",
+    "graph_k_core",
     "dedup_cluster_canonical",
+    "embedding_pca_project_top1",
+    "embedding_pca_covariance",
+    "corpus_quality_classifier_fit",
+    "corpus_quality_score_broadcast",
 )
 
 

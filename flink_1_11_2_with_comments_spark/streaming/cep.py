@@ -710,13 +710,13 @@ def match_pattern_batch(
             out = [r for seq, m in enumerate(matches, start=1)
                    for r in _match_rows(m, key_vals, id_col, ts_col, seq,
                                         row_measures)]
-        return pd.DataFrame(out, columns=cols)
+        return out
 
-    return _bucketed_apply(df, keys, per_key, out_schema)
+    return _bucketed_apply(df, keys, per_key, out_schema, cols)
 
 
 def _bucketed_apply(df: DataFrame, keys: list[str], per_key,
-                    out_schema: str) -> DataFrame:
+                    out_schema: str, cols: list[str]) -> DataFrame:
     """applyInPandas for MANY SMALL KEYS: hash the key to a bucket
     (16x parallelism) and sub-group in pandas inside the worker — ONE
     Arrow transfer + ONE Python invocation per bucket instead of per
@@ -731,7 +731,14 @@ def _bucketed_apply(df: DataFrame, keys: list[str], per_key,
     no driver-side tuning needed. Skew: buckets hold ~|keys|/buckets
     keys each; a single monster KEY still lands in one bucket, which
     is exactly the grouped-map contract (key-level skew needs the
-    operator-level prefilters, not the dispatcher)."""
+    operator-level prefilters, not the dispatcher).
+
+    ``per_key(pdf)`` returns one key's output rows as dicts; each
+    bucket's rows become ONE frame with columns ``cols``, so a column's
+    dtype comes from all of the bucket's values — not from how
+    ``pd.concat`` of per-key frames treats a key whose column is all
+    NULL (a variable none of its matches bound), which pandas is
+    changing."""
     if "__cep_bucket" in df.columns:
         # the flag projection already computed the bucket AND
         # hash-partitioned on it (its AQE-exempt repartition is the
@@ -751,15 +758,12 @@ def _bucketed_apply(df: DataFrame, keys: list[str], per_key,
         bucketed = bucketed.repartition(par, "__cep_bucket")
 
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=["__cep_bucket"])
         # dropna=False: Spark's groupBy keeps null keys as a group;
         # pandas would silently drop them
-        outs = [per_key(g)
-                for _, g in pdf.groupby(keys, sort=False, dropna=False)]
-        outs = [o for o in outs if not o.empty]
-        if not outs:
-            return per_key(pdf.iloc[0:0])
-        return pd.concat(outs, ignore_index=True)
+        groups = pdf.drop(columns=["__cep_bucket"]).groupby(
+            keys, sort=False, dropna=False)
+        return pd.DataFrame([r for _, g in groups for r in per_key(g)],
+                            columns=cols)
 
     return bucketed.groupBy("__cep_bucket").applyInPandas(
         per_bucket, out_schema)

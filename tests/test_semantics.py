@@ -280,36 +280,103 @@ def test_connected_components_known_answer(spark):
         assert got == want
 
 
-def test_graph_loops_release_own_edge_cache_keep_callers(spark):
-    """Cache ownership of the frontier loops: hits and
-    connected_components persist their own repartitioned edge frame
-    and release it on return, but never touch a cache the CALLER
-    holds. The input is an RDD-backed checkpoint the caller persisted
-    but has not materialized, so its stats are unknown — the case
-    where a loop that persisted its input in place used to unpersist
-    the caller's frame on its way out."""
-    from flink_1_11_2_with_comments_spark._sizing import (
-        _UNKNOWN_STATS, est_bytes)
-    from flink_1_11_2_with_comments_spark.operators.graph import (
-        connected_components, hits)
-    cache = spark._jsparkSession.sharedState().cacheManager()
+def _loop_case(spark, name):
+    """(the caller's input frame, fn(frame) -> result) for one driver
+    loop on a tiny input. Graph inputs are RDD-backed checkpoints,
+    whose stats are unknown — the case where a loop that persisted
+    its input in place used to unpersist the caller's frame."""
+    from flink_1_11_2_with_comments_spark.operators import graph
+    from flink_1_11_2_with_comments_spark.pipeline import pca, quality_clf
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5)],
+        [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6)],
         "src bigint, dst bigint").localCheckpoint()
-    edges.persist()
-    assert est_bytes(edges) >= _UNKNOWN_STATS
-    entries = cache.numCachedEntries()
+    start = spark.createDataFrame([(1, 0)], "node bigint, value bigint")
+    cases = {
+        "pagerank": (edges, lambda e: graph.pagerank(e, iterations=3)),
+        "label_propagation": (
+            edges, lambda e: graph.label_propagation(e, iterations=3)),
+        "hits": (edges, lambda e: graph.hits(e, iterations=2)),
+        "connected_components": (edges, graph.connected_components),
+        "pregel": (edges, lambda e: graph.pregel(
+            e, start, send_msg=F.col("value") + 1, merge_msg=F.min,
+            update=F.least, algo="bfs")),
+        "k_core_pairs": (
+            spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
+                                  "a bigint, b bigint").localCheckpoint(),
+            lambda p: graph.k_core_pairs(p, k=2)),
+        "power_top1": (
+            spark.createDataFrame(
+                [(i, j, 2.0 if i == j else 1.0 if abs(i - j) == 1 else 0.0)
+                 for i in range(1, 4) for j in range(1, 4)],
+                "i int, j int, cov double"),
+            lambda c: pca.power_top1(c, rounds=3)),
+        "logreg_fit": (
+            spark.createDataFrame(
+                [(1, "en", "a b c a"), (2, "de", "x y z"), (3, "en", "a c"),
+                 (4, "de", "y y x")], "doc_id bigint, lang string, text string"),
+            lambda d: quality_clf.logreg_fit(d, rounds=2)),
+    }
+    return cases[name]
+
+
+@pytest.mark.parametrize("name", [
+    "pagerank", "label_propagation", "hits", "connected_components",
+    "pregel", "k_core_pairs", "power_top1", "logreg_fit"])
+def test_loops_release_own_storage_keep_callers(spark, monkeypatch, name):
+    """Storage ownership of every driver loop (operators/graph._Loop):
+    after the result is collected the loop has left at most ONE
+    persisted RDD behind — its result — having released its round
+    checkpoints and the frames it persisted or checkpointed itself;
+    and a loop whose round raises leaves none. A cache the CALLER
+    holds on the input survives both."""
+    from flink_1_11_2_with_comments_spark.operators import graph
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persisted() -> set[int]:
+        # ids, not a count: the ContextCleaner may unpersist RDDs of
+        # unrelated garbage-collected frames at any time
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next()._1())
+        return ids
+
+    frame, run = _loop_case(spark, name)
+    frame.persist()
+    entries, before = cache.numCachedEntries(), persisted()
+    calls = []
+    barrier = graph._superstep
+    monkeypatch.setattr(graph, "_superstep",
+                        lambda df: calls.append(1) or barrier(df))
     try:
-        for name, run in (("hits", lambda: hits(edges, iterations=2)),
-                          ("connected_components",
-                           lambda: connected_components(edges))):
-            out = run()
-            assert out.count() == 5, name
-            assert edges.storageLevel.useMemory, name
-            assert cache.numCachedEntries() == entries, name
+        out = run(frame)
+        out.collect()
+        assert frame.storageLevel.useMemory
+        assert cache.numCachedEntries() == entries
     finally:
-        edges.unpersist()
-    assert cache.numCachedEntries() == entries - 1
+        frame.unpersist()
+    # the caller's own cache is gone now; only the result may remain
+    assert len(persisted() - before) <= 1
+
+    def failing(df):
+        # the loop's LAST superstep raises: every earlier round and
+        # loop-invariant frame already exists
+        calls.append(1)
+        if len(calls) == n_calls:
+            raise RuntimeError("round failed")
+        return barrier(df)
+
+    n_calls, calls[:] = len(calls), []
+    frame.persist()
+    mid = persisted()
+    monkeypatch.setattr(graph, "_superstep", failing)
+    try:
+        with pytest.raises(RuntimeError, match="round failed"):
+            run(frame)
+        assert frame.storageLevel.useMemory
+    finally:
+        frame.unpersist()
+    assert persisted() - mid == set()
 
 
 def test_pagerank_plan_depth_constant(spark):
@@ -441,22 +508,20 @@ def test_k_core_known_graph(spark):
 
 def test_k_core_pairs_cascade_across_batches(spark):
     """k_core_pairs on a graph whose peel CASCADES one layer per
-    round: an 8-vertex path (each peel drops one more endpoint below
-    k=2) attached to nothing, plus a 4-cycle that survives as the
-    2-core. The cascade runs more rounds than peels_per_job, so the
-    batched speculative peeling crosses at least one batch boundary
-    (the folded-count path); trailing speculative no-op rounds must
-    not change the result."""
+    round: a 20-vertex path (each peel drops both endpoints below
+    k=2, so it takes 10 rounds) attached to nothing, plus a 4-cycle
+    that survives as the 2-core. The driver chains 4 peels per count,
+    so the cascade crosses at least two batch boundaries (the
+    folded-count path); trailing speculative no-op rounds must not
+    change the result."""
     from flink_1_11_2_with_comments_spark.operators.graph import (
         k_core_pairs)
-    chain = [(i, i + 1) for i in range(1, 8)]          # path 1..8
-    cycle = [(20, 21), (21, 22), (22, 23), (20, 23)]   # C4 survives
+    chain = [(i, i + 1) for i in range(1, 20)]         # path 1..20
+    cycle = [(30, 31), (31, 32), (32, 33), (30, 33)]   # C4 survives
     pairs = spark.createDataFrame(chain + cycle, "a bigint, b bigint")
-    for ppj in (1, 2, 4):
-        got = {(r.node, r.core_degree)
-               for r in k_core_pairs(pairs, k=2,
-                                     peels_per_job=ppj).collect()}
-        assert got == {(20, 2), (21, 2), (22, 2), (23, 2)}, ppj
+    got = {(r.node, r.core_degree)
+           for r in k_core_pairs(pairs, k=2).collect()}
+    assert got == {(30, 2), (31, 2), (32, 2), (33, 2)}
 
 
 def test_cooccurrence_pairs_equals_self_join(spark):

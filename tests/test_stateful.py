@@ -708,6 +708,45 @@ def test_cep_quantifier_regex_equivalence_fuzz():
     assert checked > 300
 
 
+def test_cep_bucket_rows_unbound_variable_no_warning():
+    """No Spark: the per-bucket function that match_pattern_batch hands
+    to applyInPandas, run on one bucket of two keys. Pattern A B? —
+    key 1 matches twice, binding B once (its B ids are a number and a
+    NULL), key 2 never binds B (its B ids are all NULL). The bucket's
+    output is one frame built from both keys' rows, so pandas raises
+    no warning about all-NA entries (the per-key pd.concat did) and
+    B's ids keep key 1's value next to the NULLs."""
+    import warnings
+
+    import pandas as pd
+
+    class Capture:
+        """Stands in for the flag-projected Spark frame: already
+        bucketed, and groupBy().applyInPandas returns the function."""
+        columns = ["__cep_bucket"]
+
+        def groupBy(self, *_):
+            return self
+
+        def applyInPandas(self, fn, schema):
+            return fn
+
+    steps = [QStep("A", lambda e: e["kind"] == "a"),
+             QStep("B", lambda e: e["kind"] == "b", min_times=0)]
+    per_bucket = match_pattern_batch(Capture(), ["k"], "ts", steps,
+                                     after_match="skip_past_last")
+    pdf = pd.DataFrame({"__cep_bucket": [0] * 4, "k": [1, 1, 1, 2],
+                        "ts": [1, 2, 3, 1], "event_id": [10, 11, 12, 20],
+                        "kind": ["a", "b", "a", "a"]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = per_bucket(pdf)
+    got = sorted((r["k"], r["A_first_id"],
+                  None if pd.isna(r["B_first_id"]) else r["B_first_id"],
+                  r["B_n"]) for r in out.to_dict("records"))
+    assert got == [(1, 10, 11, 1), (1, 12, None, 0), (2, 20, None, 0)]
+
+
 def test_cep_pattern_boundaries():
     """Pattern subset boundaries raise loudly at validation: patterns
     that can match zero rows, notFollowedBy before a min-0 step or
